@@ -80,7 +80,8 @@ object SparkEntry {
     GraphPatterns.triangleCounter(edges(spark, "/root/testdata/sf0.001"), Some(PathMax))
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // S1+P3+A5: countedges.CountEdgesAfterMax
     "edge_count" -> ((s, dir) =>
       GraphPatterns.edgeCount(edges(s, dir), Some(CensusMax))),
@@ -890,98 +891,16 @@ object SparkEntry {
       graft.multimodal.Media.audioFrames(graft.Tables.documents(s, dir))),
     "media_resize_bmp" -> ((s, dir) =>
       graft.multimodal.Media.imageRows(graft.Tables.documents(s, dir))),
-    // Image CONTENT fingerprint + near-dup pairs: exact-integer aHash
-    // over real BMP scanlines, paired through the simhash_pairs
-    // banded-Hamming machinery — the dedup family exact payload
-    // fingerprints can't see (byte-identical-except-metadata images).
     // Container duration + sample-count face: mvhd timescale/duration
     // (v0 AND v1 planted) on the nested box walk; WAV frames/rate with
     // the honest truncation clamp. All-integer microseconds.
     "media_duration" -> ((s, dir) =>
       graft.multimodal.Media.mediaDuration(graft.Tables.documents(s, dir))),
-    "image_ahash" -> ((s, dir) =>
-      graft.multimodal.ImageHash.imageAhash(graft.Tables.documents(s, dir))),
-    "image_dup_pairs" -> ((s, dir) =>
-      graft.multimodal.ImageHash.imageDupPairs(graft.Tables.documents(s, dir))),
-    // Audio content fingerprint + near-dup pairs: amplitude-stride
-    // hash over the WALKED WAV sample stream (the ImageHash discipline
-    // on the time axis) — re-encoded-except-metadata clips pair where
-    // the exact payload fingerprint cannot.
-    "audio_ahash" -> ((s, dir) =>
-      graft.multimodal.AudioHash.audioAhash(graft.Tables.documents(s, dir))),
-    "audio_dup_pairs" -> ((s, dir) =>
-      graft.multimodal.AudioHash.audioDupPairs(graft.Tables.documents(s, dir))),
-    "audio_occupancy" -> ((s, dir) =>
-      graft.multimodal.AudioHash.audioOccupancy(graft.Tables.documents(s, dir))),
-    "audio_dup_clusters" -> ((s, dir) =>
-      graft.multimodal.AudioHash.audioDupClusters(graft.Tables.documents(s, dir))),
-    "incremental_audio_dup" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(s, dir)
-      graft.multimodal.AudioHash.incrementalAudioPairs(
-        docs.filter(col("doc_id") % 10 === 9),
-        graft.multimodal.AudioHash.audioAhash(
-            docs.filter(col("doc_id") % 10 =!= 9))
-          .select("media_id", "ahash").localCheckpoint())
-    }),
-    // Occupancy report for the aHash band space (the 4th member of the
-    // bucket-family cost-report symmetry) and the nightly-ingest twin
-    // (shard re-hashes, corpus replays its persisted 8-byte sketch).
-    // Detect -> pair -> CLUSTER: connected components of the image
-    // Hamming-pair graph (star contraction), every hashed image in the
-    // domain, cluster id = min member, is_canonical = the kept copy.
-    "image_dup_clusters" -> ((s, dir) =>
-      graft.multimodal.ImageHash.imageDupClusters(graft.Tables.documents(s, dir))),
-    "image_occupancy" -> ((s, dir) =>
-      graft.multimodal.ImageHash.imageOccupancy(graft.Tables.documents(s, dir))),
-    "incremental_image_dup" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(s, dir)
-      graft.multimodal.ImageHash.incrementalImagePairs(
-        docs.filter(col("doc_id") % 10 === 9),
-        graft.multimodal.ImageHash.imageAhash(
-            docs.filter(col("doc_id") % 10 =!= 9))
-          .select("media_id", "ahash").localCheckpoint())
-    }),
-    // Video content fingerprint: 64 integer-stride byte probes over the
-    // WALKED mdat payload (the third tracked find of the nested box
-    // fold) — a metadata-edited re-upload (moov churn) pairs at
-    // Hamming 0 because only the coded stream is hashed. Same shared
-    // Hamming64 pairing body, occupancy report, cluster face, and
-    // nightly shard-vs-persisted-sketch twin as the image/audio
-    // families.
-    "video_ahash" -> ((s, dir) =>
-      graft.multimodal.VideoHash.videoAhash(graft.Tables.documents(s, dir))),
-    "video_dup_pairs" -> ((s, dir) =>
-      graft.multimodal.VideoHash.videoDupPairs(graft.Tables.documents(s, dir))),
-    "video_dup_clusters" -> ((s, dir) =>
-      graft.multimodal.VideoHash.videoDupClusters(graft.Tables.documents(s, dir))),
-    "video_occupancy" -> ((s, dir) =>
-      graft.multimodal.VideoHash.videoOccupancy(graft.Tables.documents(s, dir))),
-    // Compressed-image (PNG/JPEG) content identity: 64 stride probes
-    // over the walked first-IDAT payload / post-SOS entropy stream, so
-    // ancillary-chunk (PNG) and EXIF/COM (JPEG) churn no longer evades
-    // dedup; pairing stays per format through the shared Hamming64
-    // body, with occupancy/cluster/incremental faces.
-    "cimage_ahash" -> ((s, dir) =>
-      graft.multimodal.CompressedImageHash.cimageAhash(graft.Tables.documents(s, dir))),
-    "cimage_dup_pairs" -> ((s, dir) =>
-      graft.multimodal.CompressedImageHash.cimageDupPairs(graft.Tables.documents(s, dir))),
-    "cimage_dup_clusters" -> ((s, dir) =>
-      graft.multimodal.CompressedImageHash.cimageDupClusters(graft.Tables.documents(s, dir))),
-    "cimage_dup_clusters_best" -> ((s, dir) =>
-      graft.multimodal.CompressedImageHash.cimageDupClustersBest(graft.Tables.documents(s, dir))),
-    "cimage_occupancy" -> ((s, dir) =>
-      graft.multimodal.CompressedImageHash.cimageOccupancy(graft.Tables.documents(s, dir))),
-    "incremental_cimage_dup" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(s, dir)
-      graft.multimodal.CompressedImageHash.incrementalCimagePairs(
-        docs.filter(col("doc_id") % 10 === 9),
-        graft.multimodal.CompressedImageHash.cimageAhash(
-            docs.filter(col("doc_id") % 10 =!= 9))
-          .select("media_id", "kind", "ahash").localCheckpoint())
-    }),
+    // The four content sketch families (image aHash over real BMP
+    // scanlines, audio amplitude hash over the walked WAV samples, video
+    // stride hash over the walked mdat, PNG/JPEG stride hash over the
+    // first IDAT / post-SOS entropy stream) register their six faces
+    // each from MediaFamily.all — see mediaFamilyFaces below.
     // The composed media-lake curation verdict (the corpus_keep
     // discipline for binary payloads): kind sniff, decode eligibility,
     // exact payload fingerprint dup, per-modality content clusters
@@ -1050,25 +969,6 @@ object SparkEntry {
         docs.filter(col("doc_id") % 10 === 9),
         docs.filter(col("doc_id") % 10 =!= 9),
         scratch("media_state", dir))
-    }),
-    // BEST-COPY survivor policy for the media cluster families (the
-    // dedup_clusters_best axis): components/cluster ids unchanged,
-    // is_canonical moves to the highest-resolution image / longest
-    // clip / most-content video instead of the smallest id.
-    "image_dup_clusters_best" -> ((s, dir) =>
-      graft.multimodal.ImageHash.imageDupClustersBest(graft.Tables.documents(s, dir))),
-    "audio_dup_clusters_best" -> ((s, dir) =>
-      graft.multimodal.AudioHash.audioDupClustersBest(graft.Tables.documents(s, dir))),
-    "video_dup_clusters_best" -> ((s, dir) =>
-      graft.multimodal.VideoHash.videoDupClustersBest(graft.Tables.documents(s, dir))),
-    "incremental_video_dup" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val docs = graft.Tables.documents(s, dir)
-      graft.multimodal.VideoHash.incrementalVideoPairs(
-        docs.filter(col("doc_id") % 10 === 9),
-        graft.multimodal.VideoHash.videoAhash(
-            docs.filter(col("doc_id") % 10 =!= 9))
-          .select("media_id", "ahash").localCheckpoint())
     }),
     // ---- LLM-data-pipeline extensions: event streams ----
     "events_sessions" -> ((s, dir) =>
@@ -1324,7 +1224,42 @@ object SparkEntry {
         docs.filter(col("doc_id") % 10 =!= 9),
         docs.filter(col("doc_id") % 10 === 9))
     }),
-  )
+  ) ++ mediaFamilyFaces.map { case (n, q, _) => n -> q }
+
+  /** The six faces of every content sketch family ([[graft.multimodal
+    * .MediaFamily]]), as `(query name, query, oracle SQL)` — one loop
+    * registers all of them in [[queries]] and [[oracleSql]] (the SQL is
+    * built only when [[oracleSql]] asks). Faces: the 8-byte sketch,
+    * banded-Hamming near-dup pairs, star-contraction clusters (cluster
+    * id = min member), the best-copy cluster face (highest resolution /
+    * longest clip / most content survives), the band occupancy cost
+    * report, and the nightly shard-vs-persisted-sketch pairing (shard =
+    * doc_id % 10 = 9). */
+  private def mediaFamilyFaces
+      : Seq[(String, (SparkSession, String) => DataFrame, () => String)] = {
+    import org.apache.spark.sql.functions.col
+    def docs(s: SparkSession, dir: String) = graft.Tables.documents(s, dir)
+    graft.multimodal.MediaFamily.all.flatMap { f =>
+      val n = f.name
+      Seq[(String, (SparkSession, String) => DataFrame, () => String)](
+        (s"${n}_ahash", (s, dir) => f.ahash(docs(s, dir)), () => f.ahashSql),
+        (s"${n}_dup_pairs", (s, dir) => f.dupPairs(docs(s, dir)),
+          () => f.dupPairsSql()),
+        (s"${n}_dup_clusters", (s, dir) => f.dupClusters(docs(s, dir)),
+          () => f.dupClustersSql()),
+        (s"${n}_dup_clusters_best",
+          (s, dir) => f.dupClustersBest(docs(s, dir)),
+          () => f.dupClustersBestSql()),
+        (s"${n}_occupancy", (s, dir) => f.occupancy(docs(s, dir)),
+          () => f.occupancySql),
+        (s"incremental_${n}_dup", (s, dir) => {
+          val d = docs(s, dir)
+          f.incrementalPairs(d.filter(col("doc_id") % 10 === 9),
+            f.keyed(f.ahash(d.filter(col("doc_id") % 10 =!= 9)))
+              .localCheckpoint())
+        }, () => f.incrementalPairsSql()))
+    }
+  }
 
   /** The reference five as SPARK SQL text (round-8 directive #8) — the
     * spellings a SQL-first user runs over the registered `edges` view,
@@ -1479,20 +1414,16 @@ object SparkEntry {
       "bpe_encode", "bpe_coverage_ext", "unigram_encode",
       "embed_ivf_knn", "incremental_ivf",
       "embed_pq_knn", "incremental_pq",
-      // the four persisted media sketch relations (full + incremental
-      // corpus keys each)
-      "image_ahash", "audio_ahash", "video_ahash", "cimage_ahash",
-      "incremental_image_dup", "incremental_audio_dup",
-      "incremental_video_dup", "incremental_cimage_dup",
-      // the whole-lake Hamming cluster contractions: keyed on (sketch
-      // plan, maxHamming, pairing tag) since r17 — the ahash warms
-      // above build only the sketch, not the contraction, so without
-      // these the first pass pays the ~2 s contraction build and the
-      // by-design asymmetry reads as spread ~35 (r17 round-start bench)
-      "image_dup_clusters", "audio_dup_clusters",
-      "video_dup_clusters", "cimage_dup_clusters",
       // the shared cluster contractions (text: plain/folded/star keys)
-      "dedup_clusters", "dedup_clusters_norm", "dedup_clusters_star")
+      "dedup_clusters", "dedup_clusters_norm", "dedup_clusters_star") ++
+    // the persisted media sketch relations (full + incremental corpus
+    // keys each), then the whole-lake Hamming cluster contractions:
+    // keyed on (sketch plan, maxHamming, pairing tag) since r17 — the
+    // ahash warms build only the sketch, not the contraction, so without
+    // these the first pass pays the ~2 s contraction build and the
+    // by-design asymmetry reads as spread ~35 (r17 round-start bench)
+    Seq("%s_ahash", "incremental_%s_dup", "%s_dup_clusters").flatMap(face =>
+      graft.multimodal.MediaFamily.all.map(f => face.format(f.name)))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
@@ -1707,32 +1638,6 @@ object SparkEntry {
     "media_frames_wav" -> graft.multimodal.Media.audioFramesSql(),
     "media_resize_bmp" -> graft.multimodal.Media.imageRowsSql(),
     "media_duration" -> graft.multimodal.Media.mediaDurationSql,
-    "image_ahash" -> graft.multimodal.ImageHash.imageAhashSql,
-    "image_dup_pairs" -> graft.multimodal.ImageHash.imageDupPairsSql(),
-    "audio_ahash" -> graft.multimodal.AudioHash.audioAhashSql,
-    "audio_dup_pairs" -> graft.multimodal.AudioHash.audioDupPairsSql(),
-    "audio_occupancy" -> graft.multimodal.AudioHash.audioOccupancySql,
-    "audio_dup_clusters" -> graft.multimodal.AudioHash.audioDupClustersSql(),
-    "incremental_audio_dup" ->
-      graft.multimodal.AudioHash.incrementalAudioPairsSql(),
-    "image_dup_clusters" ->
-      graft.multimodal.ImageHash.imageDupClustersSql(),
-    "image_occupancy" -> graft.multimodal.ImageHash.imageOccupancySql,
-    "video_ahash" -> graft.multimodal.VideoHash.videoAhashSql,
-    "video_dup_pairs" -> graft.multimodal.VideoHash.videoDupPairsSql(),
-    "video_dup_clusters" -> graft.multimodal.VideoHash.videoDupClustersSql(),
-    "video_occupancy" -> graft.multimodal.VideoHash.videoOccupancySql,
-    "cimage_ahash" -> graft.multimodal.CompressedImageHash.cimageAhashSql,
-    "cimage_dup_pairs" ->
-      graft.multimodal.CompressedImageHash.cimageDupPairsSql(),
-    "cimage_dup_clusters" ->
-      graft.multimodal.CompressedImageHash.cimageDupClustersSql(),
-    "cimage_dup_clusters_best" ->
-      graft.multimodal.CompressedImageHash.cimageDupClustersBestSql(),
-    "cimage_occupancy" ->
-      graft.multimodal.CompressedImageHash.cimageOccupancySql,
-    "incremental_cimage_dup" ->
-      graft.multimodal.CompressedImageHash.incrementalCimagePairsSql(),
     "media_keep" -> graft.multimodal.MediaKeep.mediaKeepSql(),
     "media_keep_best" -> graft.multimodal.MediaKeep.mediaKeepBestSql(),
     "media_keep_stats" -> graft.multimodal.MediaKeep.mediaKeepStatsSql(),
@@ -1749,16 +1654,6 @@ object SparkEntry {
     // the in-session incremental verdict, so the oracle IS that face's
     "incremental_media_keep_persisted" ->
       graft.multimodal.MediaKeep.incrementalMediaKeepSql(),
-    "image_dup_clusters_best" ->
-      graft.multimodal.ImageHash.imageDupClustersBestSql(),
-    "audio_dup_clusters_best" ->
-      graft.multimodal.AudioHash.audioDupClustersBestSql(),
-    "video_dup_clusters_best" ->
-      graft.multimodal.VideoHash.videoDupClustersBestSql(),
-    "incremental_video_dup" ->
-      graft.multimodal.VideoHash.incrementalVideoPairsSql(),
-    "incremental_image_dup" ->
-      graft.multimodal.ImageHash.incrementalImagePairsSql(),
     "events_sessions" -> Events.sessionizeSql(),
     "events_hourly" -> Events.hourlyRollupSql,
     "top_events_per_user" -> Events.topEventsPerUserSql(),
@@ -1820,7 +1715,7 @@ object SparkEntry {
     // cell-wise-sum merge theorem is what the hash match proves
     "incremental_cms" -> TextAnalysis.cmsTokenCountsSql,
     "incremental_kmv" -> graft.events.Audience.incrementalKmvSql(),
-  )
+  ) ++ mediaFamilyFaces.map { case (n, _, sql) => n -> sql() }
 
   private def triangleOracle: String =
     s"""$EdgeCte,

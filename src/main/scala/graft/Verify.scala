@@ -40,7 +40,10 @@ object Verify {
         df.orderBy(df.columns.map(c =>
             org.apache.spark.sql.functions.col(c).asc_nulls_last).toSeq: _*)
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case scala.util.control.NonFatal(e) =>
+        // NonFatal only (the Bench discipline): an OutOfMemoryError must
+        // stop the dump, not be logged while later queries run in a
+        // damaged JVM
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

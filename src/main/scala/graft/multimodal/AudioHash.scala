@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Audio CONTENT fingerprinting — [[ImageHash]]'s sibling, closing the
@@ -39,7 +39,8 @@ import org.apache.spark.sql.functions._
   * band-explode → equi-self-join pairing (AQE-splittable, never
   * all-pairs).
   */
-object AudioHash {
+object AudioHash extends MediaFamily("audio", "clip", "aud_",
+    Seq("sample_rate", "frame_bytes", "n_frames"), pairKeys = Nil) {
 
   /** 64 probe points → 64-bit hash; banding via [[Hamming64]]. */
   val Probes = 64
@@ -65,7 +66,7 @@ object AudioHash {
 
   /** Fixture synthesis: every document as a REAL canonical 44-byte
     * WAV (mono, 8-bit, rate 8000·(1 + doc_id % 4)) — the
-    * [[ImageHash.imagesHexSql]] two-population discipline on the audio
+    * [[ImageHash.hexSql]] two-population discipline on the audio
     * axis: doc_id % 3 ≠ 2 carries the doc's own text bytes as samples;
     * doc_id % 3 = 2 is the PLANTED near-dup population — each 30-id
     * group g shares one base clip (a 16-byte multiplicative-hash
@@ -73,7 +74,7 @@ object AudioHash {
     * within the d/d+15 pair) with ONE sample edited at a
     * doc-dependent position, so ids d and d+15 pair at small Hamming
     * distance while groups and text clips don't. */
-  private[multimodal] def wavHexSql(textHex: String, textBytes: String,
+  private[multimodal] def hexSql(textHex: String, textBytes: String,
       idiv: String): String = {
     def leHex(v: String, nBytes: Int): String =
       Media.leHexSql(v, nBytes, idiv)
@@ -91,15 +92,7 @@ object AudioHash {
 
   /** The hash over `(media_id, h, n_bytes)` — eligibility and layout
     * from the REAL walk, probes and vote as one bounded HOF pair (the
-    * [[ImageHash.ahashOfHex]] codegen rationale). */
-  private def ahashOfHex(sized: DataFrame): DataFrame =
-    ahashOfHexMaybeCk(sized, checkpoint = true)
-
-  /** `checkpoint = false` is the STREAM spelling — the
-    * [[ImageHash.ahashOfHexMaybeCk]] rationale: the walk struct is a
-    * non-cheap multi-use alias, so CollapseProject never duplicates
-    * the fold and the barrier is only a batch amortization. `keep`
-    * threads passthrough columns (event_time for the stream gate). */
+    * [[ImageHash.ahashOfHexMaybeCk]] codegen rationale). */
   private[graft] def ahashOfHexMaybeCk(sized: DataFrame,
       checkpoint: Boolean, keep: Seq[String] = Nil): DataFrame = {
     val walked0 = sized
@@ -107,7 +100,7 @@ object AudioHash {
       // most payloads are not RIFF/WAVE, and the gate is the fold's own
       // entry condition (gated-off rows carry NULL wk and would drop at
       // the next filter anyway) — so the 2x-payload hex materialization
-      // is bounded to candidate WAVs (the ImageHash.ahashOfHex shape)
+      // is bounded to candidate WAVs (the ImageHash shape)
       .filter(Media.riffMagic)
       .withColumn("wk", Media.gatedWalk(Media.riffMagic, Media.walkAggSql))
     val walked = if (checkpoint) walked0.localCheckpoint() else walked0
@@ -127,198 +120,12 @@ object AudioHash {
       .filter(col("n_frames") >= Probes.toLong)
     // probe + vote ride the shared Hamming64 body
     Hamming64.probeVote(wav, Probes, k => probeSql(k, "div"),
-      keep.map(col) ++ Seq(col("media_id"), col("sample_rate"),
-        col("frame_bytes"), col("n_frames")))
+      ((keep :+ "media_id") ++ sketchCols).map(col))
   }
 
-  /** Payload-level seam for the spec's hand-built WAVs. */
-  private[graft] def ahashOfPayloads(payloads: DataFrame): DataFrame =
-    ahashOfHex(payloads.select(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")))
-
-  /** Checkpoint-free payload hash for STREAMS. */
-  private[graft] def ahashOfPayloadsStream(payloads: DataFrame,
-      keep: Seq[String] = Nil): DataFrame =
-    ahashOfHexMaybeCk(payloads.select(Seq(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")) ++
-      keep.map(col): _*), checkpoint = false, keep = keep)
-
-  /** Session-scoped reuse of the decoded clip sketch (the
-    * [[ImageHash]] sketchCache discipline): the persisted
-    * 8-byte-sketch relation every face and the incremental corpus side
-    * replay — decoded once per (session, corpus plan). */
-  private val sketchCache = new graft.SessionCache[Int, DataFrame](2)
-  private[graft] def sketchBuilds = sketchCache.builds
-
-  /** `(media_id, sample_rate, frame_bytes, n_frames, ahash)` per
-    * eligible clip of the synthesized corpus. */
-  def audioAhash(docs: DataFrame): DataFrame =
-    sketchCache.getOrBuild(docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash()) {
-      audioAhashBuild(docs).localCheckpoint()
-    }
-
-  private def audioAhashBuild(docs: DataFrame): DataFrame = {
-    val h = expr("element_at(transform(sequence(0, 0), fixture_once -> " +
-      wavHexSql("hex(encode(text, 'utf-8'))", "octet_length(text)", "div") +
-      "), 1)")
-    ahashOfHex(graft.Tables.widen(docs)
-      .select(col("doc_id").as("media_id"), h.as("h"))
-      .filter(col("h").isNotNull)
-      .withColumn("n_bytes", (length(col("h")) / 2).cast("long"))
-      .localCheckpoint())
-  }
-
-  /** Near-duplicate AUDIO pairs — the shared [[Hamming64]] body on the
-    * clip sketch. */
-  def audioDupPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsOfSketch(audioAhash(docs).select("media_id", "ahash"),
-      "clip_a", "clip_b", maxHamming)
-
-  /** Payload-level pairing twin for planted-fixture specs. */
-  private[graft] def dupPairsOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsOfSketch(
-      ahashOfPayloads(payloads).select("media_id", "ahash"),
-      "clip_a", "clip_b", maxHamming)
-
-  /** Occupancy report for the audio band space — the cost-prediction
-    * symmetry every sketch family here ships (shared
-    * [[graft.text.Dedup.occupancyRollup]] body). */
-  def audioOccupancy(docs: DataFrame): DataFrame =
-    graft.text.Dedup.occupancyRollup(
-      Hamming64.bands(
-          audioAhash(docs).select("media_id", "ahash").localCheckpoint())
-        .groupBy("band", "nibble").agg(count(lit(1)).as("sz")),
-      "band")
-
-  def audioOccupancySql: String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |occ AS (
-       |  SELECT band, nibble, CAST(count(*) AS BIGINT) AS sz
-       |  FROM bands GROUP BY band, nibble
-       |)
-       |${graft.text.Dedup.occupancySelectSql("band")}""".stripMargin
-
-  /** Nightly-ingest twin — shard clips hashed fresh, corpus replays
-    * its persisted 8-byte sketch ([[Hamming64.pairsIncremental]]). The
-    * shard sketch bypasses sketchCache (the [[ImageHash
-    * .incrementalImagePairs]] rationale): new bytes every night, and a
-    * third live key would thrash the capacity-2 corpus-plan LRU. */
-  def incrementalAudioPairs(newDocs: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsIncremental(
-      audioAhashBuild(newDocs).select("media_id", "ahash"), corpusSketch,
-      "clip_a", "clip_b", maxHamming)
-
-  /** Oracle twin for the driver's fixture split (shard = media_id %
-    * 10 = 9): the hash is a pure per-clip function, one chain feeds
-    * both sides. */
-  def incrementalAudioPairsSql(maxHamming: Int = 3,
-      shardPred: String = "media_id % 10 = 9"): String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |newb AS (
-       |  SELECT * FROM bands WHERE $shardPred
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT least(a.media_id, b.media_id) AS clip_a,
-       |    greatest(a.media_id, b.media_id) AS clip_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM newb a JOIN bands b
-       |    ON a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id <> b.media_id
-       |)
-       |SELECT clip_a, clip_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY clip_a, clip_b, hamming""".stripMargin
-
-  /** Duplicate-clip CLUSTERS — the [[ImageHash.imageDupClusters]]
-    * detect → pair → cluster loop on the audio sketch (star
-    * contraction, singletons self-canonical, cluster id = min). */
-  def audioDupClusters(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sk = audioAhash(docs) // session-cached, checkpoint-backed
-    Hamming64.clustersOfPairs(sk, maxHamming,
-      Hamming64.pairsOfSketch(sk.select("media_id", "ahash"),
-        "doc_a", "doc_b", maxHamming))
-  }
-
-  /** [[audioDupClusters]] with the BEST-COPY survivor policy:
-    * `is_canonical` marks the LONGEST clip —
-    * `duration_us = n_frames · 10⁶ div sample_rate` over the CLAMPED
-    * frame count, so a truncated re-upload loses to its intact
-    * original even at a different sample rate — media_id asc on ties;
-    * components and `cluster_id` are [[audioDupClusters]]' exactly.
-    * A malformed header declaring `sample_rate ≤ 0` gets metric 0
-    * (r14 advice: the old `div greatest(rate, 1)` spelling made a
-    * zero-rate clone's duration read as n_frames·10⁶ and CROWNED the
-    * corrupt copy), so a corrupt member can never outrank a healthy
-    * one. The shared [[Hamming64.bestCanonical]] body. */
-  def audioDupClustersBest(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    bestOfSketch(audioAhash(docs), maxHamming)
-
-  private def bestOfSketch(sk: DataFrame, maxHamming: Int): DataFrame =
-    Hamming64.bestOfPairs(sk, maxHamming,
-      Hamming64.pairsOfSketch(sk.select("media_id", "ahash"),
-        "doc_a", "doc_b", maxHamming),
-      expr("CASE WHEN sample_rate >= 1L THEN " +
-        "(n_frames * 1000000L) div sample_rate ELSE 0L END"))
-
-  /** Payload-level twin for planted-fixture specs. */
-  private[graft] def dupClustersBestOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    bestOfSketch(ahashOfPayloads(payloads).localCheckpoint(), maxHamming)
-
-  /** Oracle twin of [[audioDupClustersBest]] — the cluster closure
-    * with the canonical flag re-ranked by clip duration. */
-  def audioDupClustersBestSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |${Hamming64.closureCtesSql(maxHamming)},
-       |${Hamming64.bestFinalSql(
-            "(CASE WHEN h.sample_rate >= 1\n" +
-            "          THEN (h.n_frames * 1000000) // h.sample_rate\n" +
-            "          ELSE 0 END)")}""".stripMargin
-
-  /** Oracle twin of [[audioDupClusters]] — recursive-CTE closure. */
-  def audioDupClustersSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |${Hamming64.closureCtesSql(maxHamming)}
-       |${Hamming64.clustersFinalSql}""".stripMargin
-
-  // ---- DuckDB oracle twins ---------------------------------------------------
-
-  /** synthesis → walk → eligibility → 64 probes → hash, as CTEs ending
-    * in `hashed`. Probes unrolled per column (the [[ImageHash]] DuckDB
-    * spelling); the walk is [[Media.walkCteSql]] verbatim. */
-  private def ahashCtesSql: String =
-    s"""media AS (
-       |  SELECT doc_id AS media_id,
-       |    ${wavHexSql("hex(encode(text))", "octet_length(encode(text))", "//")} AS h
-       |  FROM documents
-       |), sized AS (
-       |  SELECT media_id, h, len(h) // 2 AS n_bytes FROM media
-       |  WHERE h IS NOT NULL
-       |), ${ahashBodyCtesSql("sized", "")}""".stripMargin
-
-  /** The walk → eligibility → 64-probe → hash chain over an ARBITRARY
-    * `(media_id, h, n_bytes)` source CTE, stage names prefixed — the
-    * reuse seam for composed oracles ([[MediaKeep]]). The RIFF walk
-    * CTEs ([[Media.walkCteSql]]) keep their fixed names: only the
-    * audio chain walks RIFF in any composed query. `pfx = ""`
-    * reproduces the standalone spelling byte-for-byte. */
+  /** The walk → eligibility → 64-probe → hash chain, DuckDB side. The
+    * RIFF walk CTEs ([[Media.walkCteSql]]) keep their fixed names: only
+    * the audio chain walks RIFF in any composed query. */
   private[multimodal] def ahashBodyCtesSql(src: String, pfx: String): String =
     s"""${Media.walkCteSql(src)},
        |${pfx}wav AS (
@@ -339,29 +146,19 @@ object AudioHash {
        |  WHERE frame_bytes >= 1
        |    AND least(declared_len, avail_len) // frame_bytes >= $Probes
        |), ${Hamming64.voteCtesSql(s"${pfx}elig", pfx, Probes,
-            k => probeSql(k.toString, "//"),
-            Seq("sample_rate", "frame_bytes", "n_frames"))}""".stripMargin
+            k => probeSql(k.toString, "//"), sketchCols)}""".stripMargin
 
-  def audioAhashSql: String =
-    s"""WITH ${ahashCtesSql}
-       |SELECT media_id, sample_rate, frame_bytes, n_frames, ahash FROM hashed
-       |ORDER BY media_id, sample_rate, frame_bytes, n_frames, ahash""".stripMargin
-
-  def audioDupPairsSql(maxHamming: Int = 3): String = {
-    val nibbleSelects = Hamming64.nibbleSelectsSql
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  $nibbleSelects
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT a.media_id AS clip_a, b.media_id AS clip_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id < b.media_id
-       |)
-       |SELECT clip_a, clip_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY clip_a, clip_b, hamming""".stripMargin
-  }
+  /** Best copy = the LONGEST clip — `duration_us = n_frames · 10⁶ div
+    * sample_rate` over the CLAMPED frame count, so a truncated
+    * re-upload loses to its intact original even at a different sample
+    * rate. A malformed header declaring `sample_rate ≤ 0` gets metric 0
+    * (r14 advice: the old `div greatest(rate, 1)` spelling made a
+    * zero-rate clone's duration read as n_frames·10⁶ and CROWNED the
+    * corrupt copy), so a corrupt member never outranks a healthy one. */
+  private[graft] val metric: Column = expr("CASE WHEN sample_rate >= 1L " +
+    "THEN (n_frames * 1000000L) div sample_rate ELSE 0L END")
+  private[multimodal] def metricSql(q: String): String =
+    s"(CASE WHEN ${q}sample_rate >= 1\n" +
+      s"          THEN (${q}n_frames * 1000000) // ${q}sample_rate\n" +
+      "          ELSE 0 END)"
 }

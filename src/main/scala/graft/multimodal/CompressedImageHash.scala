@@ -52,7 +52,8 @@ import org.apache.spark.sql.functions._
   * the shared [[Hamming64]] banding with pairing PER FORMAT (a PNG
   * sketch never band-joins a JPEG sketch).
   */
-object CompressedImageHash {
+object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
+    Seq("kind", "n_units"), pairKeys = Seq("kind")) {
 
   val Probes = 64
 
@@ -198,7 +199,7 @@ object CompressedImageHash {
     * the tEXt ancillary chunk (PNG) / the COM segment (JPEG), and the
     * IHDR/SOF dimensions differ too — the green pairing oracle IS the
     * metadata-churn-invariance proof. */
-  private def cimagesHexSql(textHex: String, textBytes: String,
+  private[multimodal] def hexSql(textHex: String, textBytes: String,
       idiv: String): String =
     s"CASE WHEN (doc_id $idiv 30) % 2 = 0 " +
       s"THEN ${pngHexSql(textHex, textBytes, idiv)} " +
@@ -206,11 +207,8 @@ object CompressedImageHash {
 
   // ---- the hash over an arbitrary payload relation ---------------------------
 
-  private def ahashOfHex(sized: DataFrame): DataFrame =
-    ahashOfHexMaybeCk(sized, checkpoint = true)
-
-  /** `checkpoint = false` is the STREAM spelling (the family-wide
-    * [[ImageHash.ahashOfHexMaybeCk]] rationale). */
+  /** The hash over `(media_id, h, n_bytes)`: PNG walk + SOS walk →
+    * per-kind span → 64 probes → vote. */
   private[graft] def ahashOfHexMaybeCk(sized: DataFrame,
       checkpoint: Boolean, keep: Seq[String] = Nil): DataFrame = {
     val walked0 = sized
@@ -234,7 +232,7 @@ object CompressedImageHash {
       .filter(col("span_off").isNotNull && col("n_units") >= Probes.toLong)
     // probe + vote ride the shared Hamming64 body
     Hamming64.probeVote(span, Probes, k => probeSql(k, "div"),
-      keep.map(col) ++ Seq(col("media_id"), col("kind"), col("n_units")))
+      ((keep :+ "media_id") ++ sketchCols).map(col))
   }
 
   /** Test seam: the declarative SOS walk over an arbitrary payload
@@ -245,139 +243,10 @@ object CompressedImageHash {
         length(col("payload")).cast("long").as("n_bytes"))
       .withColumn("sos_data", expr(jpgSosAggSql))
 
-  /** Payload-level seam for the spec's hand-built PNGs/JPEGs. */
-  private[graft] def ahashOfPayloads(payloads: DataFrame): DataFrame =
-    ahashOfHex(payloads.select(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")))
-
-  /** `(media_id, kind, n_units, ahash)` per eligible compressed image
-    * of the synthesized corpus. */
-  /** Session-scoped reuse of the decoded compressed-image sketch (the
-    * [[ImageHash]] sketchCache discipline): the persisted
-    * 8-byte-sketch relation every face and the incremental corpus side
-    * replay — decoded once per (session, corpus plan). */
-  private val sketchCache = new graft.SessionCache[Int, DataFrame](2)
-  private[graft] def sketchBuilds = sketchCache.builds
-
-  def cimageAhash(docs: DataFrame): DataFrame =
-    sketchCache.getOrBuild(docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash()) {
-      cimageAhashBuild(docs).localCheckpoint()
-    }
-
-  private def cimageAhashBuild(docs: DataFrame): DataFrame = {
-    val h = expr("element_at(transform(sequence(0, 0), fixture_once -> " +
-      cimagesHexSql("hex(encode(text, 'utf-8'))", "octet_length(text)",
-        "div") + "), 1)")
-    ahashOfHex(graft.Tables.widen(docs)
-      .select(col("doc_id").as("media_id"), h.as("h"))
-      .filter(col("h").isNotNull)
-      .withColumn("n_bytes", (length(col("h")) / 2).cast("long"))
-      .localCheckpoint())
-  }
-
-  /** Near-duplicate pairs, PER FORMAT — a PNG sketch never band-joins
-    * a JPEG sketch (the [[MediaKeep]] per-modality discipline). */
-  def cimageDupPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    pairsOfKinds(cimageAhash(docs).localCheckpoint(), maxHamming)
-
-  private[multimodal] def pairsOfKinds(sk: DataFrame, maxHamming: Int): DataFrame =
-    Seq("png", "jpeg").map(k =>
-      Hamming64.pairsOfSketch(
-        sk.filter(col("kind") === k).select("media_id", "ahash"),
-        "pic_a", "pic_b", maxHamming))
-      .reduce(_ unionByName _)
-
-  /** Payload-level pairing twin for planted-fixture specs. */
-  private[graft] def dupPairsOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    pairsOfKinds(ahashOfPayloads(payloads).localCheckpoint(), maxHamming)
-
-  /** Duplicate clusters over both formats' pairing graphs — one star
-    * contraction; components never span formats because no cross-format
-    * edge exists. */
-  def cimageDupClusters(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sk = cimageAhash(docs) // session-cached, checkpoint-backed
-    Hamming64.clustersOfPairs(sk, maxHamming,
-      pairsOfKinds(sk, maxHamming)
-        .select(col("pic_a").as("doc_a"), col("pic_b").as("doc_b")),
-      pairsTag = "per-kind")
-  }
-
-  /** [[cimageDupClusters]] with the BEST-COPY survivor policy (closing
-    * the one sketch family that shipped r14 without it — r15 verdict
-    * directive #2): `is_canonical` marks the member with the MOST
-    * CONTENT (`n_units` — the clamped coded-stream length, so a
-    * truncated re-upload loses to its intact original), media_id asc
-    * on ties; components and `cluster_id` are [[cimageDupClusters]]'
-    * exactly (pairing stays per format). The shared
-    * [[Hamming64.bestCanonical]] body. */
-  def cimageDupClustersBest(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    bestOfSketch(cimageAhash(docs), maxHamming)
-
-  private def bestOfSketch(sk: DataFrame, maxHamming: Int): DataFrame =
-    Hamming64.bestOfPairs(sk, maxHamming,
-      pairsOfKinds(sk, maxHamming)
-        .select(col("pic_a").as("doc_a"), col("pic_b").as("doc_b")),
-      col("n_units"), pairsTag = "per-kind")
-
-  /** Payload-level twin for planted-fixture specs. */
-  private[graft] def dupClustersBestOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    bestOfSketch(ahashOfPayloads(payloads).localCheckpoint(), maxHamming)
-
-  /** Occupancy over the (kind, band, nibble) bucket space — kinds are
-    * separate bucket populations, the rollup reports per band (the
-    * shared [[graft.text.Dedup.occupancyRollup]] body). */
-  def cimageOccupancy(docs: DataFrame): DataFrame =
-    graft.text.Dedup.occupancyRollup(
-      Hamming64.bands(
-          cimageAhash(docs).select("media_id", "kind", "ahash")
-            .localCheckpoint(), keep = Seq("kind"))
-        .groupBy("kind", "band", "nibble").agg(count(lit(1)).as("sz")),
-      "band")
-
-  /** Nightly-ingest twin — shard images hashed fresh, corpus replays
-    * its persisted `(media_id, kind, ahash)` sketch; pairing stays per
-    * format. The shard sketch bypasses sketchCache (the [[ImageHash
-    * .incrementalImagePairs]] rationale): new bytes every night, and a
-    * third live key would thrash the capacity-2 corpus-plan LRU. One
-    * localCheckpoint because the two per-format pairings both consume
-    * it. */
-  def incrementalCimagePairs(newDocs: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3): DataFrame = {
-    val newSk = cimageAhashBuild(newDocs).localCheckpoint()
-    Seq("png", "jpeg").map(k =>
-      Hamming64.pairsIncremental(
-        newSk.filter(col("kind") === k).select("media_id", "ahash"),
-        corpusSketch.filter(col("kind") === k).select("media_id", "ahash"),
-        "pic_a", "pic_b", maxHamming))
-      .reduce(_ unionByName _)
-  }
-
-  // ---- DuckDB oracle twins ---------------------------------------------------
-
-  /** synthesis → PNG walk + SOS walk → per-kind span → 64 probes →
-    * hash, as CTEs ending in `hashed(media_id, kind, n_units, ahash)`.
-    */
-  private def ahashCtesSql: String =
-    s"""media AS (
-       |  SELECT doc_id AS media_id,
-       |    ${cimagesHexSql("hex(encode(text))", "octet_length(encode(text))", "//")} AS h
-       |  FROM documents
-       |), sized AS (
-       |  SELECT media_id, h, len(h) // 2 AS n_bytes FROM media
-       |  WHERE h IS NOT NULL
-       |), ${ahashBodyCtesSql("sized", "")}""".stripMargin
-
-  /** The PNG-walk + SOS-walk → per-kind span → 64-probe → hash chain
-    * over an ARBITRARY `(media_id, h, n_bytes)` source CTE, stage names
-    * prefixed — the reuse seam for composed oracles ([[MediaKeep]]).
-    * The walk CTEs ([[Media.pngCteSql]], [[jpgSosCteSql]]) keep their
-    * fixed names: only this chain walks PNG chunks / JPEG markers in
-    * any composed query. `pfx = ""` reproduces the standalone spelling
-    * byte-for-byte. */
+  /** The PNG-walk + SOS-walk → per-kind span → 64-probe → hash chain,
+    * DuckDB side. The walk CTEs ([[Media.pngCteSql]], [[jpgSosCteSql]])
+    * keep their fixed names: only this chain walks PNG chunks / JPEG
+    * markers in any composed query. */
   private[multimodal] def ahashBodyCtesSql(src: String, pfx: String): String =
     s"""${Media.pngCteSql(src)},
        |${jpgSosCteSql("pfin")},
@@ -397,87 +266,10 @@ object CompressedImageHash {
        |  SELECT * FROM ${pfx}spans
        |  WHERE span_off IS NOT NULL AND n_units >= $Probes
        |), ${Hamming64.voteCtesSql(s"${pfx}elig", pfx, Probes,
-            k => probeSql(k.toString, "//"), Seq("kind", "n_units"))}""".stripMargin
+            k => probeSql(k.toString, "//"), sketchCols)}""".stripMargin
 
-  /** Kind-carrying band explosion over `hashed`. */
-  private def kindBandsSql: String = kindBandsSqlFrom("hashed")
-
-  /** [[kindBandsSql]] over an arbitrary `(media_id, kind, ahash)` CTE —
-    * for composed oracles ([[MediaKeep]]). */
-  private[multimodal] def kindBandsSqlFrom(table: String): String =
-    (0 until Hamming64.Bands).map(m =>
-      s"SELECT media_id, kind, ahash, CAST($m AS BIGINT) AS band, " +
-        s"(ahash >> ${m * 16}) & 65535 AS nibble FROM $table")
-      .mkString("\n  UNION ALL\n  ")
-
-  def cimageAhashSql: String =
-    s"""WITH ${ahashCtesSql}
-       |SELECT media_id, kind, n_units, ahash FROM hashed
-       |ORDER BY media_id, kind, n_units, ahash""".stripMargin
-
-  def cimageDupPairsSql(maxHamming: Int = 3): String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  $kindBandsSql
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT a.media_id AS pic_a, b.media_id AS pic_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM bands a JOIN bands b
-       |    ON a.kind = b.kind AND a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id < b.media_id
-       |)
-       |SELECT pic_a, pic_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY pic_a, pic_b, hamming""".stripMargin
-
-  def cimageDupClustersSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  $kindBandsSql
-       |),
-       |${Hamming64.closureCtesSql(maxHamming, "a.kind = b.kind AND ")}
-       |${Hamming64.clustersFinalSql}""".stripMargin
-
-  /** Oracle twin of [[cimageDupClustersBest]] — the per-format cluster
-    * closure with the canonical flag re-ranked by content length. */
-  def cimageDupClustersBestSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  $kindBandsSql
-       |),
-       |${Hamming64.closureCtesSql(maxHamming, "a.kind = b.kind AND ")},
-       |${Hamming64.bestFinalSql("h.n_units")}""".stripMargin
-
-  def cimageOccupancySql: String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  $kindBandsSql
-       |),
-       |occ AS (
-       |  SELECT kind, band, nibble, CAST(count(*) AS BIGINT) AS sz
-       |  FROM bands GROUP BY kind, band, nibble
-       |)
-       |${graft.text.Dedup.occupancySelectSql("band")}""".stripMargin
-
-  def incrementalCimagePairsSql(maxHamming: Int = 3,
-      shardPred: String = "media_id % 10 = 9"): String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  $kindBandsSql
-       |),
-       |newb AS (
-       |  SELECT * FROM bands WHERE $shardPred
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT least(a.media_id, b.media_id) AS pic_a,
-       |    greatest(a.media_id, b.media_id) AS pic_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM newb a JOIN bands b
-       |    ON a.kind = b.kind AND a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id <> b.media_id
-       |)
-       |SELECT pic_a, pic_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY pic_a, pic_b, hamming""".stripMargin
+  /** Best copy = the MOST CONTENT (`n_units` — the clamped coded-stream
+    * length, so a truncated re-upload loses to its intact original). */
+  private[graft] val metric: Column = col("n_units")
+  private[multimodal] def metricSql(q: String): String = s"${q}n_units"
 }

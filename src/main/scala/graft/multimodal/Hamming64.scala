@@ -41,13 +41,21 @@ private[graft] object Hamming64 {
         col("b.band").as("band"), col("b.nibble").as("nibble")): _*)
   }
 
-  /** Within-corpus pairs of a `(media_id, ahash)` sketch relation. */
+  /** The band equi-join condition between aliases `x` and `y`, plus
+    * one equality per pairing key (`kind` for the per-format families:
+    * a PNG sketch never band-joins a JPEG sketch). */
+  private def bandMatch(keys: Seq[String]): org.apache.spark.sql.Column =
+    keys.foldLeft(col("x.band") === col("y.band") &&
+        col("x.nibble") === col("y.nibble"))((c, k) =>
+      c && col(s"x.$k") === col(s"y.$k"))
+
+  /** Within-corpus pairs of a `(media_id, keys..., ahash)` sketch
+    * relation. */
   def pairsOfSketch(sk: DataFrame, aCol: String, bCol: String,
-      maxHamming: Int): DataFrame = {
-    val b = bands(sk.localCheckpoint())
+      maxHamming: Int, keys: Seq[String] = Nil): DataFrame = {
+    val b = bands(sk.localCheckpoint(), keys)
     b.as("x").join(b.as("y"),
-        col("x.band") === col("y.band") && col("x.nibble") === col("y.nibble") &&
-        col("x.media_id") < col("y.media_id"))
+        bandMatch(keys) && col("x.media_id") < col("y.media_id"))
       .select(col("x.media_id").as(aCol), col("y.media_id").as(bCol),
         bit_count(col("x.ahash").bitwiseXOR(col("y.ahash")))
           .cast("long").as("hamming"))
@@ -60,12 +68,13 @@ private[graft] object Hamming64 {
     * Disjoint-id precondition, pair direction normalized by
     * least/greatest (the incremental sketch-family shape). */
   def pairsIncremental(newSk: DataFrame, corpusSk: DataFrame,
-      aCol: String, bCol: String, maxHamming: Int): DataFrame = {
-    val newB = bands(newSk.localCheckpoint())
-    val allB = bands(corpusSk.select("media_id", "ahash")).union(newB)
+      aCol: String, bCol: String, maxHamming: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val newB = bands(newSk.localCheckpoint(), keys)
+    val allB = bands(corpusSk.select(("media_id" +: keys :+ "ahash")
+      .map(col): _*), keys).union(newB)
     newB.as("x").join(allB.as("y"),
-        col("x.band") === col("y.band") && col("x.nibble") === col("y.nibble") &&
-        col("x.media_id") =!= col("y.media_id"))
+        bandMatch(keys) && col("x.media_id") =!= col("y.media_id"))
       .select(least(col("x.media_id"), col("y.media_id")).as(aCol),
         greatest(col("x.media_id"), col("y.media_id")).as(bCol),
         bit_count(col("x.ahash").bitwiseXOR(col("y.ahash")))
@@ -202,8 +211,8 @@ private[graft] object Hamming64 {
   /** DuckDB side of the cluster closure — the recursive
     * prs → und → reach → comp chain every `*_dup_clusters*` oracle
     * shares (requires CTEs `bands` and `hashed` in scope; `pairExtra`
-    * prepends extra equi-conditions to the band join — the cimage
-    * per-format `a.kind = b.kind AND `). `cluster_id` is the component
+    * prepends extra equi-conditions to the band join — the per-format
+    * `a.kind = b.kind AND `). `cluster_id` is the component
     * minimum, singletons self-labeled by the LEFT JOIN coalesce. */
   private[graft] def closureCtesSql(maxHamming: Int,
       pairExtra: String = ""): String =
@@ -250,16 +259,14 @@ private[graft] object Hamming64 {
        |SELECT media_id, cluster_id, rn = 1 AS is_canonical FROM rb
        |ORDER BY media_id, cluster_id, is_canonical""".stripMargin
 
-  /** The 4-way band explosion of a `hashed(media_id, ahash)` CTE — the
-    * DuckDB side every pairing/occupancy oracle shares. */
-  def nibbleSelectsSql: String = nibbleSelectsSqlFrom("hashed")
-
-  /** [[nibbleSelectsSql]] over an arbitrary `(media_id, ahash)` CTE —
-    * for composed oracles banding several modality sketches in one
-    * query ([[MediaKeep]]). */
-  def nibbleSelectsSqlFrom(table: String): String =
+  /** The 4-way band explosion of a `(media_id, keys..., ahash)` CTE —
+    * the DuckDB side every pairing/occupancy oracle shares, standalone
+    * (`hashed`) or composed ([[MediaKeep]] bands several modality
+    * sketches in one query). */
+  def nibbleSelectsSqlFrom(table: String, keys: Seq[String] = Nil): String =
     (0 until Bands).map(m =>
-      s"SELECT media_id, ahash, CAST($m AS BIGINT) AS band, " +
+      s"SELECT media_id, ${keys.map(_ + ", ").mkString}ahash, " +
+        s"CAST($m AS BIGINT) AS band, " +
         s"(ahash >> ${m * BandBits}) & $BandMask AS nibble FROM $table")
       .mkString("\n  UNION ALL\n  ")
 }

@@ -43,12 +43,11 @@ import org.apache.spark.sql.functions._
   * pairing is the proven checkpoint-sketch → band-explode →
   * equi-self-join shape (AQE-splittable, never all-pairs).
   */
-object ImageHash {
+object ImageHash extends MediaFamily("image", "img", "img_",
+    Seq("width", "height", "n_rows_avail"), pairKeys = Nil) {
 
   /** 8×8 grid → 64-bit hash. */
   val Grid = 8
-  /** 4 bands × 16 bits (complete for Hamming ≤ 3) — via [[Hamming64]]. */
-  val Bands: Int = Hamming64.Bands
 
   // ---- shared SQL fragments (one spelling, both engines) -------------------
 
@@ -105,7 +104,7 @@ object ImageHash {
     *    content, so they pair at small Hamming distance while
     *    different groups (different base) and the text images don't.
     */
-  private[multimodal] def imagesHexSql(textHex: String, textBytes: String,
+  private[multimodal] def hexSql(textHex: String, textBytes: String,
       idiv: String): String = {
     val w = "(8 + doc_id % 3)"
     val hgt = "(8 + doc_id % 5)"
@@ -124,29 +123,7 @@ object ImageHash {
       s"repeat('00', 24) || $pixHex"
   }
 
-  // ---- the hash over an arbitrary payload relation --------------------------
-
-  /** Checkpoint-free payload hash for STREAMS — the
-    * [[ahashOfPayloads]] chain with the barrier elided (see
-    * [[ahashOfHexMaybeCk]]). */
-  private[graft] def ahashOfPayloadsStream(payloads: DataFrame,
-      keep: Seq[String] = Nil): DataFrame =
-    ahashOfHexMaybeCk(payloads.select(Seq(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")) ++
-      keep.map(col): _*), checkpoint = false, keep = keep)
-
-  /** aHash over `(media_id, payload BINARY)` — the payload-level seam
-    * ([[Media.walkColumns]] discipline): production calls it on the
-    * media lake, the spec calls it on hand-built BMPs (one-pixel edits,
-    * truncations). Output: `(media_id, width, height, n_rows_avail,
-    * ahash)`, one row per ELIGIBLE image. */
-  private[graft] def ahashOfPayloads(payloads: DataFrame): DataFrame =
-    ahashOfHex(payloads.select(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")))
-
-  /** The shared back half over `(media_id, h, n_bytes)`.
+  /** The hash over `(media_id, h, n_bytes)`.
     *
     * The Spark side computes the 64 grid cells as ONE bounded
     * `transform` over `sequence(0, 63)` plus two bounded `aggregate`
@@ -159,15 +136,6 @@ object ImageHash {
     * the surrounding stages stay codegen-clean. The DuckDB twin keeps
     * the unrolled 64-column CTE spelling — same arithmetic, pinned by
     * the oracle compare. */
-  private def ahashOfHex(sized: DataFrame): DataFrame =
-    ahashOfHexMaybeCk(sized, checkpoint = true)
-
-  /** `checkpoint = false` is the STREAM spelling
-    * ([[graft.streaming.MediaStream]] — localCheckpoint is illegal on a
-    * stream): safe without the barrier because every multi-use alias
-    * here (header fields, the gs array, gtot) is non-cheap, which is
-    * exactly what stops CollapseProject from inlining it per consumer —
-    * the fold still evaluates once per row. */
   private[graft] def ahashOfHexMaybeCk(sized: DataFrame,
       checkpoint: Boolean, keep: Seq[String] = Nil): DataFrame = {
     val bmp1 = sized
@@ -192,226 +160,10 @@ object ImageHash {
       k => graySql(
         s"54 + ((($k div 8) * n_rows_avail) div 8) * row_bytes" +
           s" + ((($k % 8) * width) div 8) * 3"),
-      keep.map(col) ++ Seq(col("media_id"), col("width"),
-        col("height"), col("n_rows_avail")))
+      ((keep :+ "media_id") ++ sketchCols).map(col))
   }
 
-  // ---- production faces ------------------------------------------------------
-
-  /** Session-scoped reuse of the decoded sketch relation (the
-    * [[graft.SessionCache]] discipline): the scaladoc below says it —
-    * this IS "the 8-byte/image sketch relation a pipeline persists" —
-    * so one session decodes + probe-votes the corpus once per corpus
-    * plan, and every face (ahash/pairs/clusters/best/occupancy, the
-    * incremental corpus side) replays the persisted sketch exactly as
-    * production does. Capacity 2 for the full / `% 10 <> 9`
-    * alternation. */
-  private val sketchCache = new graft.SessionCache[Int, DataFrame](2)
-  private[graft] def sketchBuilds = sketchCache.builds
-
-  /** `(media_id, width, height, n_rows_avail, ahash)` per eligible
-    * image of the synthesized corpus — the 8-byte/image sketch relation
-    * a pipeline persists next to the text SimHash sketch. */
-  def imageAhash(docs: DataFrame): DataFrame =
-    sketchCache.getOrBuild(docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash()) {
-      imageAhashBuild(docs).localCheckpoint()
-    }
-
-  private def imageAhashBuild(docs: DataFrame): DataFrame = {
-    // the one-element transform is the [[Media.asContainerTable]]
-    // codegen EXCLUSION (r13 ADVICE symmetry with AudioHash): the
-    // synthesis CASE is near janino's method limit, and the HOF wrapper
-    // guarantees no consumer ever pays a doomed whole-stage compile
-    // attempt before the interpreted fallback — value-identical, the
-    // lambda ignores its index
-    val h = expr("element_at(transform(sequence(0, 0), fixture_once -> " +
-      imagesHexSql("hex(encode(text, 'utf-8'))",
-        "octet_length(text)", "div") + "), 1)")
-    // synthesis checkpoint: the [[Media.asContainerTable]] rationale —
-    // the concat CASE is fixture-only cost; materializing it once keeps
-    // the consuming stages codegen-clean (real deployments read
-    // payloads from storage)
-    ahashOfHex(graft.Tables.widen(docs)
-      .select(col("doc_id").as("media_id"), h.as("h"))
-      .withColumn("n_bytes", (length(col("h")) / 2).cast("long"))
-      .localCheckpoint())
-  }
-
-  /** Near-duplicate IMAGE pairs — the shared [[Hamming64]] body on the
-    * image sketch (candidates share ≥ 1 of the 4 16-bit bands, exact
-    * `bit_count(xor)` rescore, checkpoint-then-self-equi-join). */
-  def imageDupPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsOfSketch(imageAhash(docs).select("media_id", "ahash"),
-      "img_a", "img_b", maxHamming)
-
-  /** Duplicate-image CLUSTERS over the pairing graph — detect → pair →
-    * CLUSTER, the same loop the text side closes with `dedup_clusters`:
-    * connected components of the Hamming-pair graph via the Kiveris
-    * star-contraction machinery ([[graft.text.Dedup
-    * .dedupClustersFromPairsStar]] — O(log² n) rounds on any
-    * topology), domain = EVERY hashed image (a pair-less image is its
-    * own canonical singleton), `cluster_id` = the component's minimum
-    * media_id, `is_canonical` marking the kept copy. This is what a
-    * dedup pipeline actually consumes: N near-identical images
-    * collapse to one keeper even when the pairwise radius only chains
-    * them (A~B~C with A,C apart). */
-  def imageDupClusters(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sk = imageAhash(docs) // session-cached, checkpoint-backed
-    Hamming64.clustersOfPairs(sk, maxHamming,
-      Hamming64.pairsOfSketch(sk.select("media_id", "ahash"),
-        "doc_a", "doc_b", maxHamming))
-  }
-
-  /** [[imageDupClusters]] with the BEST-COPY survivor policy (r13
-    * verdict directive #4 — clusters kept the component-MIN id;
-    * production keeps the best copy): `is_canonical` marks the member
-    * with the highest RESOLUTION `width · n_rows_avail` (the real
-    * pixels the decoder exposed — a truncated upload competes with its
-    * actual rows), media_id asc on ties; components and `cluster_id`
-    * are [[imageDupClusters]]' exactly. The shared
-    * [[Hamming64.bestCanonical]] body. */
-  def imageDupClustersBest(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    bestOfSketch(imageAhash(docs), maxHamming)
-
-  private def bestOfSketch(sk: DataFrame, maxHamming: Int): DataFrame =
-    Hamming64.bestOfPairs(sk, maxHamming,
-      Hamming64.pairsOfSketch(sk.select("media_id", "ahash"),
-        "doc_a", "doc_b", maxHamming),
-      col("width") * col("n_rows_avail"))
-
-  /** Payload-level twin for planted-fixture specs. */
-  private[graft] def dupClustersBestOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    bestOfSketch(ahashOfPayloads(payloads).localCheckpoint(), maxHamming)
-
-  /** Oracle twin of [[imageDupClustersBest]] — the cluster closure
-    * with the canonical flag re-ranked by resolution. */
-  def imageDupClustersBestSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  ${nibbleSelectsSql}
-       |),
-       |${Hamming64.closureCtesSql(maxHamming)},
-       |${Hamming64.bestFinalSql("h.width * h.n_rows_avail")}""".stripMargin
-
-  /** Oracle twin of [[imageDupClusters]] — transitive closure of the
-    * pair relation by recursive CTE, singletons self-labeled. */
-  def imageDupClustersSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  ${nibbleSelectsSql}
-       |),
-       |${Hamming64.closureCtesSql(maxHamming)}
-       |${Hamming64.clustersFinalSql}""".stripMargin
-
-  /** Bucket-occupancy report for the aHash Hamming-band space — the
-    * fourth member of the occupancy family (MinHash / SimHash / ANN
-    * all ship one, [[graft.text.Dedup.occupancyRollup]]): every bucket
-    * family pays Θ(Σ bucket²) to pair, so each gets the cost report
-    * that PREDICTS the pairing join's expansion before anyone pays it.
-    * Same population the pairing buckets, same one partial-agg
-    * shuffle, ≤ |bands|·|size bands| output rows. */
-  def imageOccupancy(docs: DataFrame): DataFrame =
-    graft.text.Dedup.occupancyRollup(
-      Hamming64.bands(
-          imageAhash(docs).select("media_id", "ahash").localCheckpoint())
-        .groupBy("band", "nibble").agg(count(lit(1)).as("sz")),
-      "band")
-
-  /** Oracle twin of [[imageOccupancy]] — the shared occupancy SELECT
-    * over the aHash band explosion. */
-  def imageOccupancySql: String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  ${nibbleSelectsSql}
-       |),
-       |occ AS (
-       |  SELECT band, nibble, CAST(count(*) AS BIGINT) AS sz
-       |  FROM bands GROUP BY band, nibble
-       |)
-       |${graft.text.Dedup.occupancySelectSql("band")}""".stripMargin
-
-  /** Nightly-ingest twin of [[imageDupPairs]] — the image member of
-    * the incremental sketch-pairing family
-    * ([[graft.text.Dedup.incrementalSimhashPairs]] shape verbatim):
-    * Hamming-band pairs of a NEW SHARD against the persisted corpus
-    * `(media_id, ahash)` sketch relation, without re-hashing anything
-    * corpus-side. Only the shard pays the decode + hash pass; the
-    * corpus re-expands its 4 band rows from the 8-byte persisted
-    * sketch (map work). Disjoint-id precondition and the
-    * AQE-splittable equi-join shape match the SimHash twin. */
-  def incrementalImagePairs(newDocs: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    // the SHARD sketch deliberately bypasses sketchCache (r16 verdict
-    // wrong #1): a nightly shard is new bytes every night — caching it
-    // has no production read-path story, and routing it through the
-    // cache made a THIRD live key thrash the capacity-2 LRU that holds
-    // the full / `% 10 <> 9` corpus plans. pairsIncremental checkpoints
-    // the fresh shard sketch once itself.
-    Hamming64.pairsIncremental(
-      imageAhashBuild(newDocs).select("media_id", "ahash"), corpusSketch,
-      "img_a", "img_b", maxHamming)
-
-  /** Oracle twin for the driver's fixture split (shard = doc_id % 10 =
-    * 9): the hash is a pure per-image function, so one chain over the
-    * whole population feeds both sides and the pairing restricts to
-    * shard-touching pairs. */
-  def incrementalImagePairsSql(maxHamming: Int = 3,
-      shardPred: String = "media_id % 10 = 9"): String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  ${nibbleSelectsSql}
-       |),
-       |newb AS (
-       |  SELECT * FROM bands WHERE $shardPred
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT least(a.media_id, b.media_id) AS img_a,
-       |    greatest(a.media_id, b.media_id) AS img_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM newb a JOIN bands b
-       |    ON a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id <> b.media_id
-       |)
-       |SELECT img_a, img_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY img_a, img_b, hamming""".stripMargin
-
-  /** The 4-way Hamming-band (nibble) selects over `hashed`. */
-  private def nibbleSelectsSql: String = Hamming64.nibbleSelectsSql
-
-  /** Pair the SPEC's hand-built payloads — the payload-level twin of
-    * [[imageDupPairs]] for planted one-pixel-edit fixtures. */
-  private[graft] def dupPairsOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsOfSketch(
-      ahashOfPayloads(payloads).select("media_id", "ahash"),
-      "img_a", "img_b", maxHamming)
-
-  // ---- DuckDB oracle twins ---------------------------------------------------
-
-  /** The synthesis → eligibility → 64-cell → hash chain as CTEs over
-    * `documents`; final stage `hashed` carries `(media_id, width,
-    * height, n_rows_avail, ahash)`. The probe/total stages are
-    * MATERIALIZED inside [[Hamming64.voteCtesSql]] — every probe is
-    * consumed twice (the total and its own bit), and DuckDB inlines
-    * CTEs by default (the [[Media.walkCteSql]] lesson). */
-  private def ahashCtesSql: String =
-    s"""imgs AS (
-       |  SELECT doc_id AS media_id,
-       |    ${imagesHexSql("hex(encode(text))", "octet_length(encode(text))", "//")} AS h
-       |  FROM documents
-       |), sized AS (
-       |  SELECT media_id, h, len(h) // 2 AS n_bytes FROM imgs
-       |  WHERE h IS NOT NULL
-       |), ${ahashBodyCtesSql("sized", "")}""".stripMargin
-
-  /** The eligibility → 64-cell → hash chain over an ARBITRARY
-    * `(media_id, h, n_bytes)` source CTE, every stage name prefixed —
-    * the reuse seam for composed oracles ([[MediaKeep]]) that run all
-    * three modality chains in one query. `pfx = ""` reproduces the
-    * standalone spelling byte-for-byte. */
+  /** The eligibility → 64-cell → hash chain, DuckDB side. */
   private[multimodal] def ahashBodyCtesSql(src: String, pfx: String): String =
     s"""${pfx}bmp AS (
        |  SELECT media_id, h,
@@ -429,28 +181,14 @@ object ImageHash {
        |  SELECT * FROM ${pfx}rowed
        |  WHERE bpp = 24 AND width >= $Grid AND n_rows_avail >= $Grid
        |), ${Hamming64.voteCtesSql(s"${pfx}elig", pfx, Grid * Grid,
-            k => cellSql(k / Grid, k % Grid, "//"),
-            Seq("width", "height", "n_rows_avail"))}""".stripMargin
+            k => cellSql(k / Grid, k % Grid, "//"), sketchCols)}""".stripMargin
 
-  def imageAhashSql: String =
-    s"""WITH ${ahashCtesSql}
-       |SELECT media_id, width, height, n_rows_avail, ahash FROM hashed
-       |ORDER BY media_id, width, height, n_rows_avail, ahash""".stripMargin
+  /** Best copy = highest RESOLUTION `width · n_rows_avail` (the real
+    * pixels the decoder exposed — a truncated upload competes with its
+    * actual rows). */
+  private[graft] val metric: Column = col("width") * col("n_rows_avail")
+  private[multimodal] def metricSql(q: String): String =
+    s"${q}width * ${q}n_rows_avail"
 
-  def imageDupPairsSql(maxHamming: Int = 3): String = {
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  $nibbleSelectsSql
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT a.media_id AS img_a, b.media_id AS img_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id < b.media_id
-       |)
-       |SELECT img_a, img_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY img_a, img_b, hamming""".stripMargin
-  }
+  override protected def synthCte: String = "imgs"
 }

@@ -148,9 +148,9 @@ object MediaKeep {
        |     WHEN doc_id % 30 IN (4, 19) AND $m = 2 THEN '$ExactMp4Hdr' || $pat
        |     WHEN doc_id % 30 IN (4, 19) AND $m = 3 THEN '$ExactPngHdr' || $pat
        |     WHEN doc_id % 30 IN (4, 19) AND $m = 4 THEN '$ExactJpgHdr' || $pat || 'FFD9'
-       |     WHEN $m = 0 THEN ${ImageHash.imagesHexSql(textHex, textBytes, idiv)}
-       |     WHEN $m = 1 THEN ${AudioHash.wavHexSql(textHex, textBytes, idiv)}
-       |     WHEN $m = 2 THEN ${VideoHash.videoHexSql(textHex, textBytes, idiv)}
+       |     WHEN $m = 0 THEN ${ImageHash.hexSql(textHex, textBytes, idiv)}
+       |     WHEN $m = 1 THEN ${AudioHash.hexSql(textHex, textBytes, idiv)}
+       |     WHEN $m = 2 THEN ${VideoHash.hexSql(textHex, textBytes, idiv)}
        |     WHEN $m = 3 THEN ${CompressedImageHash.pngHexSql(textHex, textBytes, idiv)}
        |     ELSE ${CompressedImageHash.jpgHexSql(textHex, textBytes, idiv)}
        |END""".stripMargin
@@ -234,26 +234,24 @@ object MediaKeep {
     verdictOfSized(sizedOfPayloads(payloads), maxHamming)
       .select(BestPolicyCols: _*)
 
+  /** The content sketch families, in the order their keeper sketches
+    * ride every relation below. */
+  private val Families = MediaFamily.all
+
   /** The batch machinery's intermediate relations — shared by the
     * batch verdict assembly and the corpus-state derivation
     * ([[corpusStateOfSized]]): the per-payload fingerprint/keeper
-    * relation, the four keeper sketch relations, the set of hashed
-    * keepers, and the content clusters over pairs + exact edges. */
-  private case class LakeParts(fps: DataFrame, imgSk: DataFrame,
-      audSk: DataFrame, vidSk: DataFrame, cimSk: DataFrame,
+    * relation, the keeper sketch relation of each of [[Families]], the
+    * set of hashed keepers, and the content clusters over pairs + exact
+    * edges. */
+  private case class LakeParts(fps: DataFrame, sketches: Seq[DataFrame],
       hashedKeepers: DataFrame, clusters: DataFrame,
       memberMetrics: DataFrame)
 
-  /** Each family's quality metric over its own hashed relation — the
-    * EXACT ranking expression of that family's `_best` face
-    * ([[ImageHash.imageDupClustersBest]] & siblings), so the composed
-    * best verdict and the per-family faces can never crown different
-    * copies. Audio guards `sample_rate <= 0` as duration 0 (r14
-    * advice). */
-  private[graft] val ImgMetric = col("width") * col("n_rows_avail")
-  private[graft] val AudMetric = expr("CASE WHEN sample_rate >= 1L THEN " +
-    "(n_frames * 1000000L) div sample_rate ELSE 0L END")
-  private[graft] val UnitsMetric = col("n_units")
+  /** The keepers' union over the family sketches of `cols`. */
+  private def unionOf(sketches: Seq[DataFrame],
+      cols: org.apache.spark.sql.Column*): DataFrame =
+    sketches.map(_.select(cols: _*)).reduce(_ unionByName _)
 
   private def partsOfSized(sized: DataFrame, maxHamming: Int): LakeParts = {
     // exact payload fingerprint: md5 over the payload bytes (spelled
@@ -282,41 +280,21 @@ object MediaKeep {
     // production pipeline persists verbatim.
     // each sketch relation carries the family's `_best` quality metric
     // next to the 8-byte hash (r16 directive #2: the best-copy policy
-    // ranks by it; 8 more bytes/keeper in the persisted relation)
-    // the four family decode+hash chains are INDEPENDENT of each other
+    // ranks by it; 8 more bytes/keeper in the persisted relation) and
+    // its pairing keys (`kind`: PNG/JPEG pair per format).
+    // The family decode+hash chains are INDEPENDENT of each other
     // (each reads only the checkpointed keeperSized relation), so their
     // materializations run CONCURRENTLY (graft.Par — the guide's
     // overlap-independent-jobs rule): wall-clock per build drops from
-    // the sum of the four chains to roughly the slowest one.
-    val Seq(imgSk, audSk, vidSk, cimSk) = graft.Par.all(Seq(
-      () => ImageHash.ahashOfHexMaybeCk(keeperSized, checkpoint = true)
-        .select(col("media_id"), col("ahash"), ImgMetric.as("metric"))
-        .localCheckpoint(),
-      () => AudioHash.ahashOfHexMaybeCk(keeperSized, checkpoint = true)
-        .select(col("media_id"), col("ahash"), AudMetric.as("metric"))
-        .localCheckpoint(),
-      () => VideoHash.ahashOfHexMaybeCk(keeperSized, checkpoint = true)
-        .select(col("media_id"), col("ahash"), UnitsMetric.as("metric"))
-        .localCheckpoint(),
-      // the compressed-image sketch keeps `kind` — its pairing is PER
-      // FORMAT (a PNG sketch never band-joins a JPEG sketch)
-      () => CompressedImageHash
-        .ahashOfHexMaybeCk(keeperSized, checkpoint = true)
-        .select(col("media_id"), col("kind"), col("ahash"),
-          UnitsMetric.as("metric"))
-        .localCheckpoint()))
-    val hashedKeepers = imgSk.select("media_id")
-      .unionByName(audSk.select("media_id"))
-      .unionByName(vidSk.select("media_id"))
-      .unionByName(cimSk.select("media_id"))
+    // the sum of the chains to roughly the slowest one.
+    val sketches = graft.Par.all(Families.map(f => () =>
+      f.metricSketch(keeperSized).localCheckpoint()))
+    val hashedKeepers = unionOf(sketches, col("media_id"))
       .distinct().localCheckpoint()
     // per-MODALITY pairing (an image sketch must never band-join an
     // audio sketch), then one cluster pass over the combined edges
-    val contentPairs = (Seq(imgSk, audSk, vidSk)
-      .map(sk => Hamming64.pairsOfSketch(sk, "doc_a", "doc_b", maxHamming)
-        .select("doc_a", "doc_b")) :+
-      CompressedImageHash.pairsOfKinds(cimSk, maxHamming)
-        .select(col("pic_a").as("doc_a"), col("pic_b").as("doc_b")))
+    val contentPairs = Families.zip(sketches).map { case (f, sk) =>
+        f.pairsOf(sk, "doc_a", "doc_b", maxHamming).select("doc_a", "doc_b") }
       .reduce(_ unionByName _)
     val exactEdges = withKeeper.filter(col("media_id") =!= col("keeper_id"))
       .select(col("media_id").as("doc_a"), col("keeper_id").as("doc_b"))
@@ -327,16 +305,14 @@ object MediaKeep {
     // (byte-identical payloads decode identically, and only keepers
     // were decoded); unhashed members (raw, GIF, null, ineligible)
     // rank at 0, so metric-less clusters fall back to the min-id tie
-    val keeperMetrics = Seq(imgSk, audSk, vidSk, cimSk)
-      .map(_.select(col("media_id").as("keeper_id"), col("metric")))
-      .reduce(_ unionByName _)
+    val keeperMetrics = unionOf(sketches, col("media_id").as("keeper_id"),
+      col("metric"))
     val memberMetrics = sized.select("media_id")
       .join(withKeeper.select("media_id", "keeper_id"), Seq("media_id"),
         "left")
       .join(keeperMetrics, Seq("keeper_id"), "left")
       .select(col("media_id"), coalesce(col("metric"), lit(0L)).as("metric"))
-    LakeParts(withKeeper, imgSk, audSk, vidSk, cimSk, hashedKeepers,
-      clusters, memberMetrics)
+    LakeParts(withKeeper, sketches, hashedKeepers, clusters, memberMetrics)
   }
 
   /** The 8-column verdict over an arbitrary CHECKPOINTED `(media_id,
@@ -390,8 +366,8 @@ object MediaKeep {
     *    that keeper content-hashed (`eligible`), and the keeper's
     *    quality metric (what a shard copy of the fingerprint inherits
     *    under the best-copy policy);
-    *  - the four keeper sketch relations (8 bytes + kind + metric per
-    *    keeper);
+    *  - `sketches` — one keeper sketch relation per family of
+    *    [[Families]] (8 bytes + pairing keys + metric per keeper);
     *  - `comp` — the corpus content-cluster labels (media_id →
     *    component-minimum rep);
     *  - `clusterBest` — per corpus cluster: the best member's (metric,
@@ -402,10 +378,9 @@ object MediaKeep {
     *    members ∪ pulled cluster bests) equals the batch argmax.
     *
     * Derived here from the corpus docs (production reads them from
-    * tables — the [[VideoHash.incrementalVideoPairs]] stance). */
+    * tables — the [[MediaFamily.incrementalPairs]] stance). */
   private[graft] case class MediaCorpusState(fps: DataFrame,
-      imgSk: DataFrame, audSk: DataFrame, vidSk: DataFrame,
-      cimSk: DataFrame, comp: DataFrame, clusterBest: DataFrame)
+      sketches: Seq[DataFrame], comp: DataFrame, clusterBest: DataFrame)
 
   /** Session-scoped reuse of the corpus state (the [[verdictCache]]
     * discipline, same shared [[graft.SessionCache]] body): the state
@@ -427,9 +402,7 @@ object MediaKeep {
   private[graft] def corpusStateOfSized(sized: DataFrame,
       maxHamming: Int): MediaCorpusState = {
     val p = partsOfSized(sized, maxHamming)
-    val keeperMetrics = Seq(p.imgSk, p.audSk, p.vidSk, p.cimSk)
-      .map(_.select(col("media_id"), col("metric")))
-      .reduce(_ unionByName _)
+    val keeperMetrics = unionOf(p.sketches, col("media_id"), col("metric"))
     // three INDEPENDENT slim relations over the already-materialized
     // parts — checkpointed concurrently (graft.Par, guide §2.6; the
     // sequential spelling paid three roundtrips back to back)
@@ -452,27 +425,26 @@ object MediaKeep {
         .localCheckpoint(),
       () => p.clusters.select(col("doc_id").as("media_id"), col("rep_id"))
         .localCheckpoint()))
-    MediaCorpusState(fps, p.imgSk, p.audSk, p.vidSk, p.cimSk, comp,
-      clusterBest)
+    MediaCorpusState(fps, p.sketches, comp, clusterBest)
   }
 
-  /** The seven state relations as named parquet tables under `path` —
+  /** The state relations as named parquet tables under `path` —
     * the write a nightly pipeline runs after each corpus refresh (the
     * [[graft.text.Curation.trainingShardsUnigram]] persist-and-reload
     * discipline: the artifact on disk, not the session checkpoint, is
-    * what the next ingest reads). All seven are slim: the fp table is
-    * one row per distinct fingerprint, the sketches 8 bytes + metric
-    * per keeper, the labels and per-cluster bests one row per
+    * what the next ingest reads). All are slim: the fp table is one
+    * row per distinct fingerprint, the sketches 8 bytes + metric per
+    * keeper, the labels and per-cluster bests one row per
     * member/cluster. */
-  private val StateTables = Seq("fps", "img_sk", "aud_sk", "vid_sk",
-    "cim_sk", "comp", "cluster_best")
+  private val StateTables = ("fps" +: Families.map(_.pfx + "sk")) ++
+    Seq("comp", "cluster_best")
   def writeCorpusState(st: MediaCorpusState, path: String): Unit =
-    // seven independent writes of already-checkpointed slim relations
-    // to seven distinct directories — run concurrently (graft.Par): the
-    // sequential spelling paid seven job-submit + commit-protocol
-    // roundtrips back to back
-    graft.Par.all(StateTables.zip(Seq(st.fps, st.imgSk, st.audSk,
-        st.vidSk, st.cimSk, st.comp, st.clusterBest))
+    // independent writes of already-checkpointed slim relations to
+    // distinct directories — run concurrently (graft.Par): the
+    // sequential spelling paid one job-submit + commit-protocol
+    // roundtrip per table back to back
+    graft.Par.all(StateTables.zip((st.fps +: st.sketches) ++
+        Seq(st.comp, st.clusterBest))
       .map { case (name, df) => () =>
         df.write.mode("overwrite")
           .parquet(new java.io.File(path, name).getPath) })
@@ -483,12 +455,12 @@ object MediaKeep {
     * production shape). */
   def readCorpusState(spark: org.apache.spark.sql.SparkSession,
       path: String): MediaCorpusState = {
-    // seven independent schema-inference footer reads — concurrent
+    // independent schema-inference footer reads — concurrent
     // (graft.Par), like the writes on the other side
-    val Seq(fps, img, aud, vid, cim, comp, best) =
-      graft.Par.all(StateTables.map(name => () =>
-        spark.read.parquet(new java.io.File(path, name).getPath)))
-    MediaCorpusState(fps, img, aud, vid, cim, comp, best)
+    val fps +: rest = graft.Par.all(StateTables.map(name => () =>
+      spark.read.parquet(new java.io.File(path, name).getPath)))
+    val (sketches, Seq(comp, best)) = rest.splitAt(Families.size)
+    MediaCorpusState(fps, sketches, comp, best)
   }
 
   /** The full persisted lifecycle as ONE operator (the
@@ -604,49 +576,28 @@ object MediaKeep {
     val wk = fp.join(groups, "fp_md5").localCheckpoint()
     // ONLY never-seen-fingerprint shard keepers pay decode + hash.
     // Lazy (r17): the semi-join over the two checkpointed inputs is
-    // re-planned inside each of the four concurrent hash-chain
-    // checkpoints below instead of paying its own sequential roundtrip.
+    // re-planned inside each concurrent hash-chain checkpoint below
+    // instead of paying its own sequential roundtrip.
     val toHash = sized.join(
         wk.filter(col("corp_keeper").isNull &&
           col("media_id") === col("keeper_all")).select("media_id"),
         Seq("media_id"), "left_semi")
-    // four independent shard decode+hash chains over the checkpointed
-    // toHash relation — materialized concurrently (graft.Par, the
-    // partsOfSized discipline)
-    val Seq(imgN, audN, vidN, cimN) = graft.Par.all(Seq(
-      () => ImageHash.ahashOfHexMaybeCk(toHash, checkpoint = true)
-        .select(col("media_id"), col("ahash"), ImgMetric.as("metric")),
-      () => AudioHash.ahashOfHexMaybeCk(toHash, checkpoint = true)
-        .select(col("media_id"), col("ahash"), AudMetric.as("metric")),
-      () => VideoHash.ahashOfHexMaybeCk(toHash, checkpoint = true)
-        .select(col("media_id"), col("ahash"), UnitsMetric.as("metric")),
-      () => CompressedImageHash
-        .ahashOfHexMaybeCk(toHash, checkpoint = true)
-        .select(col("media_id"), col("kind"), col("ahash"),
-          UnitsMetric.as("metric"))))
+    // independent shard decode+hash chains over the checkpointed toHash
+    // relation — materialized concurrently (graft.Par, the partsOfSized
+    // discipline)
+    val fresh = graft.Par.all(Families.map(f => () => f.metricSketch(toHash)))
     // lazy (r17): consumed once (eligRel in the final assembly) — the
-    // union-distinct over the four checkpointed hash chains computes
-    // exactly once either way, without its own sequential roundtrip
-    val hashedNew = imgN.select("media_id")
-      .unionByName(audN.select("media_id"))
-      .unionByName(vidN.select("media_id"))
-      .unionByName(cimN.select("media_id"))
-      .distinct()
+    // union-distinct over the checkpointed hash chains computes exactly
+    // once either way, without its own sequential roundtrip
+    val hashedNew = unionOf(fresh, col("media_id")).distinct()
     // shard sketches vs the persisted corpus sketches, per modality
     // (per FORMAT for the compressed images); new-new pairs included.
     // Each pairsIncremental eagerly checkpoints its shard band side —
-    // five independent materializations, run concurrently (graft.Par)
+    // independent materializations, run concurrently (graft.Par)
     val pairs = graft.Par.all[DataFrame](
-      (Seq((imgN, st.imgSk), (audN, st.audSk), (vidN, st.vidSk))
-        .map { case (n, c) => () =>
-          Hamming64.pairsIncremental(n, c, "doc_a", "doc_b", maxHamming)
-            .select("doc_a", "doc_b") } ++
-      Seq("png", "jpeg").map(k => () =>
-        Hamming64.pairsIncremental(
-          cimN.filter(col("kind") === k).select("media_id", "ahash"),
-          st.cimSk.filter(col("kind") === k).select("media_id", "ahash"),
-          "doc_a", "doc_b", maxHamming)
-          .select("doc_a", "doc_b"))))
+        Families.zip(fresh).zip(st.sketches).map { case ((f, n), c) => () =>
+          f.incrementalPairsOf(n, c, "doc_a", "doc_b", maxHamming)
+            .select("doc_a", "doc_b") })
       .reduce(_ unionByName _)
     // exact edges: every fp-group member — shard copies AND the corpus
     // keeper when the group straddles the boundary — points at the
@@ -691,9 +642,8 @@ object MediaKeep {
     // persisted keeper metric; a new one inherits its shard keeper's
     // fresh metric (the batch member-metric rule, computed from the
     // persisted/fresh relations only)
-    val freshMetrics = Seq(imgN, audN, vidN, cimN)
-      .map(_.select(col("media_id").as("keeper_all"), col("metric")))
-      .reduce(_ unionByName _)
+    val freshMetrics = unionOf(fresh, col("media_id").as("keeper_all"),
+      col("metric"))
     val mmetric = wk.join(freshMetrics, Seq("keeper_all"), "left")
       .select(col("media_id"),
         when(col("corp_keeper").isNotNull, col("corp_metric"))
@@ -839,18 +789,31 @@ object MediaKeep {
 
   // ---- DuckDB oracle twins ---------------------------------------------------
 
-  /** lake → fp/keepers → four modality hash chains (prefixed bodies)
+  /** lake → fp/keepers → one hash chain per family (prefixed bodies)
     * → per-modality pairs (per FORMAT for the cimage chain) + exact
     * edges → recursive closure → verdict. Final CTE `verdict` carries
     * the six min-policy output columns plus the best-policy pair
     * (`is_content_dup_best`/`keep_best` — the faces project). */
   private def verdictCtesSql(maxHamming: Int): String = {
-    val pairSel = (pfx: String) =>
+    def each(f: MediaFamily => String, sep: String): String =
+      Families.map(f).mkString(sep)
+    val bodies = each(f => f.ahashBodyCtesSql("ksized", f.pfx), ",\n")
+    val bands = each(f =>
+      s"""${f.pfx}bands AS (
+         |  ${Hamming64.nibbleSelectsSqlFrom(s"${f.pfx}hashed", f.pairKeys)}
+         |)""".stripMargin, ",\n")
+    val pairSels = each(f =>
       s"""SELECT DISTINCT a.media_id AS doc_a, b.media_id AS doc_b
-         |  FROM ${pfx}bands a JOIN ${pfx}bands b
-         |    ON a.band = b.band AND a.nibble = b.nibble
+         |  FROM ${f.pfx}bands a JOIN ${f.pfx}bands b
+         |    ON ${f.keyEqSql}a.band = b.band AND a.nibble = b.nibble
          |    AND a.media_id < b.media_id
-         |  WHERE bit_count(xor(a.ahash, b.ahash)) <= $maxHamming""".stripMargin
+         |  WHERE bit_count(xor(a.ahash, b.ahash)) <= $maxHamming""".stripMargin,
+      "\n  UNION\n  ")
+    val hashedIds = each(f => s"SELECT media_id FROM ${f.pfx}hashed",
+      "\n    UNION ALL ")
+    val metrics = each(f =>
+      s"SELECT media_id, ${f.metricSql("")} AS metric FROM ${f.pfx}hashed",
+      "\n  UNION ALL\n  ")
     s"""lake AS (
        |  SELECT doc_id AS media_id,
        |    ${lakeHexSql("hex(encode(text))", "octet_length(encode(text))", "//")} AS h
@@ -867,34 +830,10 @@ object MediaKeep {
        |), ksized AS MATERIALIZED (
        |  SELECT s.* FROM sized s JOIN wk ON wk.media_id = s.media_id
        |    AND wk.media_id = wk.keeper_id
-       |), ${ImageHash.ahashBodyCtesSql("ksized", "img_")},
-       |${AudioHash.ahashBodyCtesSql("ksized", "aud_")},
-       |${VideoHash.ahashBodyCtesSql("ksized", "vid_")},
-       |${CompressedImageHash.ahashBodyCtesSql("ksized", "ci_")},
-       |img_bands AS (
-       |  ${Hamming64.nibbleSelectsSqlFrom("img_hashed")}
-       |),
-       |aud_bands AS (
-       |  ${Hamming64.nibbleSelectsSqlFrom("aud_hashed")}
-       |),
-       |vid_bands AS (
-       |  ${Hamming64.nibbleSelectsSqlFrom("vid_hashed")}
-       |),
-       |ci_bands AS (
-       |  ${CompressedImageHash.kindBandsSqlFrom("ci_hashed")}
-       |),
+       |), $bodies,
+       |$bands,
        |cpairs AS (
-       |  ${pairSel("img_")}
-       |  UNION
-       |  ${pairSel("aud_")}
-       |  UNION
-       |  ${pairSel("vid_")}
-       |  UNION
-       |  SELECT DISTINCT a.media_id AS doc_a, b.media_id AS doc_b
-       |  FROM ci_bands a JOIN ci_bands b
-       |    ON a.kind = b.kind AND a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id < b.media_id
-       |  WHERE bit_count(xor(a.ahash, b.ahash)) <= $maxHamming
+       |  $pairSels
        |),
        |exact_edges AS (
        |  SELECT media_id AS doc_a, keeper_id AS doc_b FROM wk
@@ -919,22 +858,11 @@ object MediaKeep {
        |),
        |allhashed AS (
        |  SELECT DISTINCT media_id FROM (
-       |    SELECT media_id FROM img_hashed
-       |    UNION ALL SELECT media_id FROM aud_hashed
-       |    UNION ALL SELECT media_id FROM vid_hashed
-       |    UNION ALL SELECT media_id FROM ci_hashed
+       |    $hashedIds
        |  )
        |),
        |kmetric AS (
-       |  SELECT media_id, width * n_rows_avail AS metric FROM img_hashed
-       |  UNION ALL
-       |  SELECT media_id,
-       |    CASE WHEN sample_rate >= 1
-       |         THEN (n_frames * 1000000) // sample_rate
-       |         ELSE 0 END
-       |  FROM aud_hashed
-       |  UNION ALL SELECT media_id, n_units FROM vid_hashed
-       |  UNION ALL SELECT media_id, n_units FROM ci_hashed
+       |  $metrics
        |),
        |mmetric AS (
        |  SELECT s.media_id AS media_id, coalesce(km.metric, 0) AS metric

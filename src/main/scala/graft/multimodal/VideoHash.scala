@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Video CONTENT fingerprinting — the third modality of the media
@@ -40,7 +40,8 @@ import org.apache.spark.sql.functions._
   * sketch, and the proven checkpoint-sketch → band-explode →
   * equi-self-join pairing (AQE-splittable, never all-pairs).
   */
-object VideoHash {
+object VideoHash extends MediaFamily("video", "vid", "vid_",
+    Seq("n_units"), pairKeys = Nil) {
 
   /** 64 probe points → 64-bit hash; banding via [[Hamming64]]. */
   val Probes = 64
@@ -55,7 +56,7 @@ object VideoHash {
   /** Fixture synthesis: every document as a REAL MP4 —
     * `ftyp · moov(mvhd v0 · trak(tkhd v0)) · mdat` at the exact box
     * sizes [[Media.containerHexSql]] plants (108-byte mvhd, 92-byte
-    * tkhd) — with the [[AudioHash.wavHexSql]] two-population
+    * tkhd) — with the [[AudioHash.hexSql]] two-population
     * discipline on the content axis: doc_id % 3 ≠ 2 carries the doc's
     * own text bytes as the coded stream; doc_id % 3 = 2 is the PLANTED
     * near-dup population — each 30-id group g shares one base stream
@@ -68,7 +69,7 @@ object VideoHash {
     * 16.16 dimensions `1 + doc_id % 1920/1080` differ between d and
     * d+15 — so the green pairing oracle IS the metadata-edit-invariance
     * proof: the clones pair because only `mdat` is hashed. */
-  private[multimodal] def videoHexSql(textHex: String, textBytes: String,
+  private[multimodal] def hexSql(textHex: String, textBytes: String,
       idiv: String): String = {
     def beHex(v: String, nBytes: Int): String =
       Media.beHexSql(v, nBytes, idiv)
@@ -100,14 +101,7 @@ object VideoHash {
 
   /** The hash over `(media_id, h, n_bytes)` — eligibility and layout
     * from the REAL box walk, probes and vote as one bounded HOF pair
-    * (the [[ImageHash.ahashOfHex]] codegen rationale). */
-  private def ahashOfHex(sized: DataFrame): DataFrame =
-    ahashOfHexMaybeCk(sized, checkpoint = true)
-
-  /** `checkpoint = false` is the STREAM spelling — the
-    * [[ImageHash.ahashOfHexMaybeCk]] rationale: the walk struct is a
-    * non-cheap multi-use alias, so CollapseProject never duplicates
-    * the fold and the barrier is only a batch amortization. */
+    * (the [[ImageHash.ahashOfHexMaybeCk]] codegen rationale). */
   private[graft] def ahashOfHexMaybeCk(sized: DataFrame,
       checkpoint: Boolean, keep: Seq[String] = Nil): DataFrame = {
     val walked0 = sized
@@ -127,189 +121,12 @@ object VideoHash {
       .filter(col("n_units") >= Probes.toLong)
     // probe + vote ride the shared Hamming64 body
     Hamming64.probeVote(vid, Probes, k => probeSql(k, "div"),
-      keep.map(col) ++ Seq(col("media_id"), col("n_units")))
+      ((keep :+ "media_id") ++ sketchCols).map(col))
   }
 
-  /** Payload-level seam for the spec's hand-built MP4s. */
-  private[graft] def ahashOfPayloads(payloads: DataFrame): DataFrame =
-    ahashOfHex(payloads.select(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")))
-
-  /** Checkpoint-free payload hash for STREAMS. */
-  private[graft] def ahashOfPayloadsStream(payloads: DataFrame,
-      keep: Seq[String] = Nil): DataFrame =
-    ahashOfHexMaybeCk(payloads.select(Seq(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")) ++
-      keep.map(col): _*), checkpoint = false, keep = keep)
-
-  /** `(media_id, n_units, ahash)` per eligible video of the
-    * synthesized corpus — the 8-byte/video sketch relation a pipeline
-    * persists next to the image/audio/SimHash sketches. */
-  /** Session-scoped reuse of the decoded video sketch (the
-    * [[ImageHash]] sketchCache discipline): the persisted
-    * 8-byte-sketch relation every face and the incremental corpus side
-    * replay — decoded once per (session, corpus plan). */
-  private val sketchCache = new graft.SessionCache[Int, DataFrame](2)
-  private[graft] def sketchBuilds = sketchCache.builds
-
-  def videoAhash(docs: DataFrame): DataFrame =
-    sketchCache.getOrBuild(docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash()) {
-      videoAhashBuild(docs).localCheckpoint()
-    }
-
-  private def videoAhashBuild(docs: DataFrame): DataFrame = {
-    val h = expr("element_at(transform(sequence(0, 0), fixture_once -> " +
-      videoHexSql("hex(encode(text, 'utf-8'))", "octet_length(text)", "div") +
-      "), 1)")
-    ahashOfHex(graft.Tables.widen(docs)
-      .select(col("doc_id").as("media_id"), h.as("h"))
-      .filter(col("h").isNotNull)
-      .withColumn("n_bytes", (length(col("h")) / 2).cast("long"))
-      .localCheckpoint())
-  }
-
-  /** Near-duplicate VIDEO pairs — the shared [[Hamming64]] body on the
-    * video sketch. */
-  def videoDupPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsOfSketch(videoAhash(docs).select("media_id", "ahash"),
-      "vid_a", "vid_b", maxHamming)
-
-  /** Payload-level pairing twin for planted-fixture specs. */
-  private[graft] def dupPairsOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsOfSketch(
-      ahashOfPayloads(payloads).select("media_id", "ahash"),
-      "vid_a", "vid_b", maxHamming)
-
-  /** Occupancy report for the video band space — the cost-prediction
-    * symmetry every sketch family ships (shared
-    * [[graft.text.Dedup.occupancyRollup]] body). */
-  def videoOccupancy(docs: DataFrame): DataFrame =
-    graft.text.Dedup.occupancyRollup(
-      Hamming64.bands(
-          videoAhash(docs).select("media_id", "ahash").localCheckpoint())
-        .groupBy("band", "nibble").agg(count(lit(1)).as("sz")),
-      "band")
-
-  def videoOccupancySql: String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |occ AS (
-       |  SELECT band, nibble, CAST(count(*) AS BIGINT) AS sz
-       |  FROM bands GROUP BY band, nibble
-       |)
-       |${graft.text.Dedup.occupancySelectSql("band")}""".stripMargin
-
-  /** Nightly-ingest twin — shard videos hashed fresh, corpus replays
-    * its persisted 8-byte sketch ([[Hamming64.pairsIncremental]]). The
-    * shard sketch bypasses sketchCache (the [[ImageHash
-    * .incrementalImagePairs]] rationale): new bytes every night, and a
-    * third live key would thrash the capacity-2 corpus-plan LRU. */
-  def incrementalVideoPairs(newDocs: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    Hamming64.pairsIncremental(
-      videoAhashBuild(newDocs).select("media_id", "ahash"), corpusSketch,
-      "vid_a", "vid_b", maxHamming)
-
-  /** Oracle twin for the driver's fixture split (shard = media_id %
-    * 10 = 9): the hash is a pure per-video function, one chain feeds
-    * both sides. */
-  def incrementalVideoPairsSql(maxHamming: Int = 3,
-      shardPred: String = "media_id % 10 = 9"): String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |newb AS (
-       |  SELECT * FROM bands WHERE $shardPred
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT least(a.media_id, b.media_id) AS vid_a,
-       |    greatest(a.media_id, b.media_id) AS vid_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM newb a JOIN bands b
-       |    ON a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id <> b.media_id
-       |)
-       |SELECT vid_a, vid_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY vid_a, vid_b, hamming""".stripMargin
-
-  /** Duplicate-video CLUSTERS — the detect → pair → cluster loop on
-    * the video sketch (star contraction, singletons self-canonical,
-    * cluster id = min). */
-  def videoDupClusters(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sk = videoAhash(docs) // session-cached, checkpoint-backed
-    Hamming64.clustersOfPairs(sk, maxHamming,
-      Hamming64.pairsOfSketch(sk.select("media_id", "ahash"),
-        "doc_a", "doc_b", maxHamming))
-  }
-
-  /** [[videoDupClusters]] with the BEST-COPY survivor policy:
-    * `is_canonical` marks the member with the MOST CONTENT (`n_units`
-    * — the clamped coded-stream length, so a truncated re-upload loses
-    * to its intact original), media_id asc on ties; components and
-    * `cluster_id` are [[videoDupClusters]]' exactly. The shared
-    * [[Hamming64.bestCanonical]] body. */
-  def videoDupClustersBest(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    bestOfSketch(videoAhash(docs), maxHamming)
-
-  private def bestOfSketch(sk: DataFrame, maxHamming: Int): DataFrame =
-    Hamming64.bestOfPairs(sk, maxHamming,
-      Hamming64.pairsOfSketch(sk.select("media_id", "ahash"),
-        "doc_a", "doc_b", maxHamming),
-      col("n_units"))
-
-  /** Payload-level twin for planted-fixture specs. */
-  private[graft] def dupClustersBestOfPayloads(payloads: DataFrame,
-      maxHamming: Int = 3): DataFrame =
-    bestOfSketch(ahashOfPayloads(payloads).localCheckpoint(), maxHamming)
-
-  /** Oracle twin of [[videoDupClustersBest]] — the cluster closure
-    * with the canonical flag re-ranked by content length. */
-  def videoDupClustersBestSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |${Hamming64.closureCtesSql(maxHamming)},
-       |${Hamming64.bestFinalSql("h.n_units")}""".stripMargin
-
-  /** Oracle twin of [[videoDupClusters]] — recursive-CTE closure. */
-  def videoDupClustersSql(maxHamming: Int = 3): String =
-    s"""WITH RECURSIVE ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |${Hamming64.closureCtesSql(maxHamming)}
-       |${Hamming64.clustersFinalSql}""".stripMargin
-
-  // ---- DuckDB oracle twins ---------------------------------------------------
-
-  /** synthesis → box walk → eligibility → 64 probes → hash, as CTEs
-    * ending in `hashed`. Probes unrolled per column (the [[AudioHash]]
-    * DuckDB spelling); the walk is [[Media.mp4CteSql]] verbatim. */
-  private def ahashCtesSql: String =
-    s"""media AS (
-       |  SELECT doc_id AS media_id,
-       |    ${videoHexSql("hex(encode(text))", "octet_length(encode(text))", "//")} AS h
-       |  FROM documents
-       |), sized AS (
-       |  SELECT media_id, h, len(h) // 2 AS n_bytes FROM media
-       |  WHERE h IS NOT NULL
-       |), ${ahashBodyCtesSql("sized", "")}""".stripMargin
-
-  /** The box-walk → eligibility → 64-probe → hash chain over an
-    * ARBITRARY `(media_id, h, n_bytes)` source CTE, stage names
-    * prefixed — the reuse seam for composed oracles ([[MediaKeep]]).
+  /** The box-walk → eligibility → 64-probe → hash chain, DuckDB side.
     * The MP4 walk CTEs ([[Media.mp4CteSql]]) keep their fixed names:
-    * only the video chain walks ISO-BMFF in any composed query.
-    * `pfx = ""` reproduces the standalone spelling byte-for-byte. */
+    * only the video chain walks ISO-BMFF in any composed query. */
   private[multimodal] def ahashBodyCtesSql(src: String, pfx: String): String =
     s"""${Media.mp4CteSql(src)},
        |${pfx}elig AS (
@@ -321,26 +138,10 @@ object VideoHash {
        |  )
        |  WHERE n_units >= $Probes
        |), ${Hamming64.voteCtesSql(s"${pfx}elig", pfx, Probes,
-            k => probeSql(k.toString, "//"), Seq("n_units"))}""".stripMargin
+            k => probeSql(k.toString, "//"), sketchCols)}""".stripMargin
 
-  def videoAhashSql: String =
-    s"""WITH ${ahashCtesSql}
-       |SELECT media_id, n_units, ahash FROM hashed
-       |ORDER BY media_id, n_units, ahash""".stripMargin
-
-  def videoDupPairsSql(maxHamming: Int = 3): String =
-    s"""WITH ${ahashCtesSql},
-       |bands AS (
-       |  ${Hamming64.nibbleSelectsSql}
-       |),
-       |pairs AS (
-       |  SELECT DISTINCT a.media_id AS vid_a, b.media_id AS vid_b,
-       |    CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.nibble = b.nibble
-       |    AND a.media_id < b.media_id
-       |)
-       |SELECT vid_a, vid_b, hamming FROM pairs
-       |WHERE hamming <= $maxHamming
-       |ORDER BY vid_a, vid_b, hamming""".stripMargin
+  /** Best copy = the MOST CONTENT (`n_units` — the clamped coded-stream
+    * length, so a truncated re-upload loses to its intact original). */
+  private[graft] val metric: Column = col("n_units")
+  private[multimodal] def metricSql(q: String): String = s"${q}n_units"
 }

@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.multimodal.{AudioHash, CompressedImageHash, Hamming64,
-  ImageHash, Media, MediaKeep, VideoHash}
+import graft.multimodal.{Hamming64, Media, MediaFamily, MediaKeep}
 
 /** Streaming MEDIA-dedup admission gates — the
-  * [[DocStream.dedupAgainstCorpus]] discipline for ALL THREE media
-  * content families (image / audio / video, one shape each): each
+  * [[DocStream.dedupAgainstCorpus]] discipline for every media content
+  * family ([[MediaFamily.all]], one gate for all of them): each
   * arriving payload is content-hashed at ingest (the family hash in
   * its checkpoint-free spelling — pure per-row expression work, no
   * barrier a stream cannot run) and its 4 Hamming bands probe
@@ -25,94 +24,47 @@ import graft.multimodal.{AudioHash, CompressedImageHash, Hamming64,
   *
   * Intra-stream pairs (two near-identical uploads in one horizon) are
   * deliberately NOT emitted — the nightly batch
-  * ([[graft.multimodal.ImageHash.incrementalImagePairs]]) catches
+  * ([[graft.multimodal.MediaFamily.incrementalPairs]]) catches
   * them, exactly as `dedupAgainstCorpus` defers its history to the
   * batch pass. */
 object MediaStream {
 
   /** `(media_id, corpus_id, hamming, event_time)` — arriving payloads
-    * (`media_id, payload, ts` epoch-ns) whose image content lands
-    * within `maxHamming` of a persisted corpus sketch row. */
-  def imageMatchStream(payloads: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3,
-      watermarkDelay: String = "1 hour"): DataFrame = {
-    val hashed = ImageHash.ahashOfPayloadsStream(
-        payloads.select(col("media_id"), col("payload"),
-          EventStream.eventTime.as("event_time")),
-        keep = Seq("event_time"))
-      .withWatermark("event_time", watermarkDelay)
-    val streamB = Hamming64.bands(
-      hashed.select(col("media_id"), col("ahash"), col("event_time")),
-      keep = Seq("event_time"))
-    val corpusB = Hamming64.bands(
-        corpusSketch.select(col("media_id"), col("ahash")))
-      .select(col("media_id").as("corpus_id"), col("ahash").as("cahash"),
-        col("band"), col("nibble"))
-    streamB.join(corpusB, Seq("band", "nibble"))
-      .select(col("media_id"), col("corpus_id"),
-        bit_count(col("ahash").bitwiseXOR(col("cahash")))
-          .cast("long").as("hamming"),
-        col("event_time"))
-      .filter(col("hamming") <= maxHamming)
+    * (`media_id, payload, ts` epoch-ns) whose `family` content lands
+    * within `maxHamming` of a persisted corpus sketch row. The payload
+    * is hashed at ingest by the family's checkpoint-free spelling; the
+    * band probe carries the family's pairing keys, so a PNG upload can
+    * only match PNG history. A metadata-edited re-upload (`moov`, tEXt,
+    * EXIF churn) matches its original at Hamming 0 because only the
+    * coded content is hashed. */
+  def matchStream(family: MediaFamily, payloads: DataFrame,
+      corpusSketch: DataFrame, maxHamming: Int = 3,
+      watermarkDelay: String = "1 hour"): DataFrame =
+    bandProbe(family.ahashOfPayloadsStream(
+          payloads.select(col("media_id"), col("payload"),
+            EventStream.eventTime.as("event_time")),
+          keep = Seq("event_time"))
+        .withWatermark("event_time", watermarkDelay),
+      corpusSketch, family, maxHamming)
       .dropDuplicatesWithinWatermark("media_id", "corpus_id")
-  }
 
-  /** The AUDIO twin — arriving clips amplitude-hashed at ingest
-    * ([[graft.multimodal.AudioHash]], checkpoint-free spelling) and
-    * probed against the persisted corpus clip sketch. Same stateless
-    * contract, same watermark collapse. */
-  def audioMatchStream(payloads: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3,
-      watermarkDelay: String = "1 hour"): DataFrame = {
-    val hashed = graft.multimodal.AudioHash.ahashOfPayloadsStream(
-        payloads.select(col("media_id"), col("payload"),
-          EventStream.eventTime.as("event_time")),
-        keep = Seq("event_time"))
-      .withWatermark("event_time", watermarkDelay)
-    val streamB = Hamming64.bands(
-      hashed.select(col("media_id"), col("ahash"), col("event_time")),
-      keep = Seq("event_time"))
-    val corpusB = Hamming64.bands(
-        corpusSketch.select(col("media_id"), col("ahash")))
-      .select(col("media_id").as("corpus_id"), col("ahash").as("cahash"),
-        col("band"), col("nibble"))
-    streamB.join(corpusB, Seq("band", "nibble"))
+  /** `(media_id, corpus_id, hamming, event_time)` — the stateless
+    * stream-static probe of `f`-hashed arrivals' 4 Hamming bands into
+    * a persisted `f` corpus sketch, exact `bit_count(xor)` rescored. */
+  private def bandProbe(hashed: DataFrame, corpusSk: DataFrame,
+      f: MediaFamily, maxHamming: Int): DataFrame = {
+    val keys = f.pairKeys
+    val joinCols = keys ++ Seq("band", "nibble")
+    val streamB = Hamming64.bands(hashed, keep = keys :+ "event_time")
+    val corpusB = Hamming64.bands(f.keyed(corpusSk), keep = keys)
+      .select(Seq(col("media_id").as("corpus_id"), col("ahash").as("cahash")) ++
+        joinCols.map(col): _*)
+    streamB.join(corpusB, joinCols)
       .select(col("media_id"), col("corpus_id"),
         bit_count(col("ahash").bitwiseXOR(col("cahash")))
           .cast("long").as("hamming"),
         col("event_time"))
       .filter(col("hamming") <= maxHamming)
-      .dropDuplicatesWithinWatermark("media_id", "corpus_id")
-  }
-
-  /** The VIDEO twin — arriving MP4s content-hashed over their walked
-    * `mdat` payload at ingest ([[graft.multimodal.VideoHash]],
-    * checkpoint-free spelling) and probed against the persisted corpus
-    * video sketch. Same stateless contract, same watermark collapse —
-    * a metadata-edited re-upload (`moov` churn) matches its original
-    * at Hamming 0 because only the coded stream is hashed. */
-  def videoMatchStream(payloads: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3,
-      watermarkDelay: String = "1 hour"): DataFrame = {
-    val hashed = graft.multimodal.VideoHash.ahashOfPayloadsStream(
-        payloads.select(col("media_id"), col("payload"),
-          EventStream.eventTime.as("event_time")),
-        keep = Seq("event_time"))
-      .withWatermark("event_time", watermarkDelay)
-    val streamB = Hamming64.bands(
-      hashed.select(col("media_id"), col("ahash"), col("event_time")),
-      keep = Seq("event_time"))
-    val corpusB = Hamming64.bands(
-        corpusSketch.select(col("media_id"), col("ahash")))
-      .select(col("media_id").as("corpus_id"), col("ahash").as("cahash"),
-        col("band"), col("nibble"))
-    streamB.join(corpusB, Seq("band", "nibble"))
-      .select(col("media_id"), col("corpus_id"),
-        bit_count(col("ahash").bitwiseXOR(col("cahash")))
-          .cast("long").as("hamming"),
-        col("event_time"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicatesWithinWatermark("media_id", "corpus_id")
   }
 
   /** The COMPOSED media admission gate — the streaming face of
@@ -121,7 +73,7 @@ object MediaStream {
     * (`kind`/`eligible`/`is_exact_dup`/`is_content_dup`/`keep`) at
     * ingest, against the SAME persisted [[MediaKeep.MediaCorpusState]]
     * relations a nightly shard ingest reads — so an ingest service no
-    * longer hand-composes the four family gates plus exact-fp logic.
+    * longer hand-composes the family gates plus exact-fp logic.
     *
     * Everything corpus-shaped is a STATELESS stream-static probe (the
     * [[DocStream.dedupAgainstCorpus]] discipline): the exact
@@ -245,27 +197,17 @@ object MediaStream {
     // rep and that cluster's persisted best. Candidate collisions that
     // fail the exact rescore emit nothing — exactly the batch pairing
     // rule.
-    def familyRows(hashed: DataFrame, corpusSk: DataFrame,
-        perKind: Boolean): DataFrame = {
+    def familyRows(f: MediaFamily, corpusSk: DataFrame): DataFrame = {
+      val hashed = f.ahashOfHexMaybeCk(sized, checkpoint = false,
+          keep = Seq("event_time"))
+        .withColumn("metric", f.metric)
       val marker = hashed.select(col("media_id"), col("event_time"),
         lit(null).cast("string").as("kind"), nullB.as("is_exact_dup"),
         nullB.as("inherit_eligible"), lit(true).as("hashed"),
         col("media_id").as("cand_rep"),
         col("metric").cast("long").as("pmetric"), nullCand.as("cand"))
-      val keyCols = (if (perKind) Seq("kind") else Nil) ++
-        Seq("band", "nibble")
-      val streamB = Hamming64.bands(hashed,
-        keep = (if (perKind) Seq("kind") else Nil) :+ "event_time")
-      val corpusB = Hamming64.bands(
-          corpusSk.select((Seq("media_id", "ahash") ++
-            (if (perKind) Seq("kind") else Nil)).map(col): _*),
-          keep = if (perKind) Seq("kind") else Nil)
-        .select((Seq(col("media_id").as("corpus_id"),
-          col("ahash").as("cahash")) ++ keyCols.map(col)): _*)
       marker.unionByName(
-        streamB.join(corpusB, keyCols)
-          .filter(bit_count(col("ahash").bitwiseXOR(col("cahash")))
-            .cast("long") <= maxHamming)
+        bandProbe(hashed, corpusSk, f, maxHamming)
           .join(st.comp.select(col("media_id").as("corpus_id"),
             col("rep_id")), Seq("corpus_id"))
           .join(st.clusterBest, Seq("rep_id"))
@@ -276,33 +218,9 @@ object MediaStream {
             nullL.as("pmetric"),
             candOf(col("best_metric"), col("best_id")).as("cand")))
     }
-    val sel = Seq("media_id", "ahash", "metric", "event_time")
-    val rows = base
-      .unionByName(familyRows(
-        ImageHash.ahashOfHexMaybeCk(sized, checkpoint = false,
-          keep = Seq("event_time"))
-          .withColumn("metric", MediaKeep.ImgMetric)
-          .selectExpr(sel: _*),
-        st.imgSk, perKind = false))
-      .unionByName(familyRows(
-        AudioHash.ahashOfHexMaybeCk(sized, checkpoint = false,
-          keep = Seq("event_time"))
-          .withColumn("metric", MediaKeep.AudMetric)
-          .selectExpr(sel: _*),
-        st.audSk, perKind = false))
-      .unionByName(familyRows(
-        VideoHash.ahashOfHexMaybeCk(sized, checkpoint = false,
-          keep = Seq("event_time"))
-          .withColumn("metric", MediaKeep.UnitsMetric)
-          .selectExpr(sel: _*),
-        st.vidSk, perKind = false))
-      .unionByName(familyRows(
-        CompressedImageHash.ahashOfHexMaybeCk(sized, checkpoint = false,
-          keep = Seq("event_time"))
-          .withColumn("metric", MediaKeep.UnitsMetric)
-          .selectExpr("media_id", "kind", "ahash", "metric",
-            "event_time"),
-        st.cimSk, perKind = true))
+    val rows = MediaFamily.all.zip(st.sketches)
+      .map { case (f, sk) => familyRows(f, sk) }
+      .foldLeft(base)(_ unionByName _)
     // the one stateful operator: collapse the per-payload rows (base +
     // markers + band/family collisions). Grouping on the watermarked
     // event_time column keeps the state watermark-bounded and the sink
@@ -330,40 +248,5 @@ object MediaStream {
         (!isBest).as("is_content_dup_best"),
         (eligible && !exact && isBest).as("keep_best"),
         col("event_time"))
-  }
-
-  /** The COMPRESSED-IMAGE twin — arriving PNGs/JPEGs span-hashed at
-    * ingest ([[graft.multimodal.CompressedImageHash]], checkpoint-free
-    * spelling) and probed against the persisted corpus `(media_id,
-    * kind, ahash)` sketch. The band probe carries `kind`, so a PNG
-    * upload can only match PNG history (the family's per-format
-    * discipline). Same stateless contract, same watermark collapse. */
-  def cimageMatchStream(payloads: DataFrame, corpusSketch: DataFrame,
-      maxHamming: Int = 3,
-      watermarkDelay: String = "1 hour"): DataFrame = {
-    val hashed = graft.multimodal.CompressedImageHash.ahashOfHexMaybeCk(
-        payloads.select(col("media_id"), col("payload"),
-            EventStream.eventTime.as("event_time"))
-          .select(col("media_id"), hex(col("payload")).as("h"),
-            length(col("payload")).cast("long").as("n_bytes"),
-            col("event_time")),
-        checkpoint = false, keep = Seq("event_time"))
-      .withWatermark("event_time", watermarkDelay)
-    val streamB = Hamming64.bands(
-      hashed.select(col("media_id"), col("ahash"), col("kind"),
-        col("event_time")),
-      keep = Seq("kind", "event_time"))
-    val corpusB = Hamming64.bands(
-        corpusSketch.select(col("media_id"), col("ahash"), col("kind")),
-        keep = Seq("kind"))
-      .select(col("media_id").as("corpus_id"), col("ahash").as("cahash"),
-        col("kind"), col("band"), col("nibble"))
-    streamB.join(corpusB, Seq("kind", "band", "nibble"))
-      .select(col("media_id"), col("corpus_id"),
-        bit_count(col("ahash").bitwiseXOR(col("cahash")))
-          .cast("long").as("hamming"),
-        col("event_time"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicatesWithinWatermark("media_id", "corpus_id")
   }
 }

@@ -117,12 +117,12 @@ class ImageHashSpec extends AnyFunSuite {
     val docs = (0L until 120L).map(i =>
         (i, s"doc body $i " + ("x" * (i % 7).toInt), "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val all = ImageHash.imageDupPairs(docs).collect()
+    val all = ImageHash.dupPairs(docs).collect()
       .map(r => (r.getAs[Long]("img_a"), r.getAs[Long]("img_b"),
         r.getAs[Long]("hamming"))).toSet
-    val inc = ImageHash.incrementalImagePairs(
+    val inc = ImageHash.incrementalPairs(
         docs.filter(col("doc_id") % 10 === 9),
-        ImageHash.imageAhash(docs.filter(col("doc_id") % 10 =!= 9))
+        ImageHash.ahash(docs.filter(col("doc_id") % 10 =!= 9))
           .select("media_id", "ahash").localCheckpoint())
       .collect()
       .map(r => (r.getAs[Long]("img_a"), r.getAs[Long]("img_b"),
@@ -136,10 +136,10 @@ class ImageHashSpec extends AnyFunSuite {
     val docs = (0L until 90L).map(i =>
         (i, s"unique text ${i * 31} for doc $i", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val occPairs = ImageHash.imageOccupancy(docs).collect()
+    val occPairs = ImageHash.occupancy(docs).collect()
       .map(r => r.getAs[Long]("n_pairs")).sum
     // brute candidate count: same (band, nibble) bucket, a < b
-    val sk = ImageHash.imageAhash(docs).collect()
+    val sk = ImageHash.ahash(docs).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getAs[Long]("ahash"))
     val cand = (for {
       (a, ha) <- sk; (b, hb) <- sk if a < b

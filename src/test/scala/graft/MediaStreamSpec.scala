@@ -52,7 +52,7 @@ class MediaStreamSpec extends AnyFunSuite {
       (101L, bmp(w, h, fill(rb * h, seed = 99L)), T),
       (102L, "not an image".getBytes("UTF-8"), T))
     val name = s"media_stream_${System.nanoTime()}"
-    val q = MediaStream.imageMatchStream(
+    val q = MediaStream.matchStream(ImageHash,
         src.toDF().toDF("media_id", "payload", "ts"), corpusSk)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -61,7 +61,7 @@ class MediaStreamSpec extends AnyFunSuite {
         r.getAs[Long]("hamming")).toMap
 
     // ground truth: the pairing arithmetic applied at payload level
-    // (incrementalImagePairs hashes documents via the fixture
+    // (ImageHash.incrementalPairs hashes documents via the fixture
     // synthesis, so the payload-level truth is spelled directly)
     val upSk = ImageHash.ahashOfPayloads(Seq(
         100L -> bmp(w, h, nearCopy),
@@ -104,7 +104,7 @@ class MediaStreamSpec extends AnyFunSuite {
       (101L, wav(8000, fill(400, 999L)), T),
       (102L, "not audio".getBytes("UTF-8"), T))
     val name = s"audio_stream_${System.nanoTime()}"
-    val q = MediaStream.audioMatchStream(
+    val q = MediaStream.matchStream(graft.multimodal.AudioHash,
         src.toDF().toDF("media_id", "payload", "ts"), corpusSk)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -163,7 +163,7 @@ class MediaStreamSpec extends AnyFunSuite {
       (101L, mp4(fill(500, 999L), 1000L), T),
       (102L, "not a video".getBytes("UTF-8"), T))
     val name = s"video_stream_${System.nanoTime()}"
-    val q = MediaStream.videoMatchStream(
+    val q = MediaStream.matchStream(graft.multimodal.VideoHash,
         src.toDF().toDF("media_id", "payload", "ts"), corpusSk)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -369,7 +369,7 @@ class MediaStreamSpec extends AnyFunSuite {
       (101L, jpg(c1), T),
       (102L, "not an image".getBytes("UTF-8"), T))
     val name = s"cimage_stream_${System.nanoTime()}"
-    val q = MediaStream.cimageMatchStream(
+    val q = MediaStream.matchStream(graft.multimodal.CompressedImageHash,
         src.toDF().toDF("media_id", "payload", "ts"), corpusSk)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
