@@ -61,16 +61,19 @@ object GraphPatterns {
 
   /** exact.Exact2HopCount (`exact/Exact2HopCount.java:83-105`): number of
     * 2-hop paths X→Y→Z (X=Z included) via the degree identity
-    * Σ_y indeg(y)·outdeg(y). Two partial-aggregated shuffles on the node
-    * id + one join on the (small) node domain — never materializes paths.
+    * Σ_y indeg(y)·outdeg(y). ONE scan and ONE partial-aggregated shuffle
+    * on the node id: each edge contributes an in-endpoint `(dst, 1, 0)`
+    * and an out-endpoint `(src, 0, 1)`, one groupBy sums both degrees,
+    * and a node with only in- or only out-edges adds 0 to the sum —
+    * never materializes paths, never joins.
     */
-  def twoHopCountDegrees(edges: DataFrame, max: Option[Long] = None): DataFrame = {
-    val f = maxFilter(edges, max)
-    val indeg = f.groupBy(col("dst").as("y")).agg(count(lit(1)).as("indeg"))
-    val outdeg = f.groupBy(col("src").as("y")).agg(count(lit(1)).as("outdeg"))
-    indeg.join(outdeg, "y")
+  def twoHopCountDegrees(edges: DataFrame, max: Option[Long] = None): DataFrame =
+    maxFilter(edges, max)
+      .select(inline(array(
+        struct(col("dst").as("y"), lit(1L).as("i"), lit(0L).as("o")),
+        struct(col("src").as("y"), lit(0L).as("i"), lit(1L).as("o")))))
+      .groupBy("y").agg(sum("i").as("indeg"), sum("o").as("outdeg"))
       .agg(coalesce(sum(col("indeg") * col("outdeg")), lit(0L)).as("two_hop_count"))
-  }
 
   /** Same count through the explicit self-join plan (reference J1,
     * `approx/Approx2HopCount.java:94-120`) on the weighted distinct-edge

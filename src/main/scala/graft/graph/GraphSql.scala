@@ -41,14 +41,21 @@ object GraphSql {
     s"SELECT count(1) AS edge_count FROM $view${pred(max)}"
 
   /** exact/approx 2-hop via the degree identity Σ indeg·outdeg — the
-    * same two partial-agg shuffles + node-domain join as
-    * [[GraphPatterns.twoHopCountDegrees]]. */
+    * same one scan + one node-keyed partial-agg shuffle as
+    * [[GraphPatterns.twoHopCountDegrees]]: each edge splits into an
+    * in-endpoint and an out-endpoint row, one GROUP BY sums both
+    * degrees, no join. */
   def twoHopCountSql(max: Option[Long] = None, view: String = "edges"): String =
     s"""WITH f AS (SELECT src, dst FROM $view${pred(max)}),
-       |ind AS (SELECT dst AS y, count(1) AS indeg FROM f GROUP BY dst),
-       |outd AS (SELECT src AS y, count(1) AS outdeg FROM f GROUP BY src)
+       |deg AS (
+       |  SELECT y, sum(i) AS indeg, sum(o) AS outdeg
+       |  FROM f LATERAL VIEW inline(array(
+       |    struct(dst AS y, 1L AS i, 0L AS o),
+       |    struct(src AS y, 0L AS i, 1L AS o))) t AS y, i, o
+       |  GROUP BY y
+       |)
        |SELECT coalesce(sum(indeg * outdeg), 0L) AS two_hop_count
-       |FROM ind JOIN outd USING (y)""".stripMargin
+       |FROM deg""".stripMargin
 
   /** Mutual-follow census — [[GraphPatterns.mutualFollows]]' exact plan
     * as SQL: distinct collapse, LEFT SEMI self-join against the

@@ -17,7 +17,10 @@ import org.apache.spark.sql.types._
   * scans as TEXT and parses with `from_csv` — one scan, one parse, the
   * clean and quarantine streams both first-class (the csv SOURCE's own
   * `_corrupt_record` has the same query-only-corrupt-column seam
-  * `spark.read.json` has; text+from_csv does not).
+  * `spark.read.json` has; text+from_csv does not). The parse result is
+  * a generator output ([[ParseOnce]]), so the [[good]]/[[quarantine]]
+  * split and a MAX filter above it cannot re-inline `from_csv`: the
+  * optimized plan holds exactly one per scan (CsvEdgesSpec pins it).
   *
   * Quarantine semantics — two distinct failure shapes, both captured:
   *  - UNPARSABLE lines (non-numeric token, wrong token count) populate
@@ -49,9 +52,7 @@ object CsvEdges {
     * store — the mixGate/orphanGate discipline; spec-pinned batch ≡
     * stream). Blank lines skipped, corrupt lines captured. */
   def parseLines(lines: DataFrame): DataFrame =
-    lines
-      .filter(length(trim(col("value"))) > 0)
-      .select(parsed(col("value")).as("c"), col("value"))
+    ParseOnce(lines, parsed, "c")
       .select(col("c.src"), col("c.dst"),
         // silent-null lines carry no corrupt record; surface THEIR raw
         // line too, so the quarantine stream is re-ingestable as one

@@ -30,8 +30,11 @@ import org.apache.spark.sql.types._
   * CORRUPT_RECORD_COLUMN] — which a plain `good(df).count()` triggers),
   * so the quarantine contract would be un-queryable exactly when it
   * matters. The text+from_json plan has no such seam: one scan, one
-  * parse, both streams first-class. Blank lines are skipped (the JSONL
-  * convention — `read.json` does the same).
+  * parse, both streams first-class. The parse result is a generator
+  * output ([[ParseOnce]]), so no filter above it — the [[good]] split,
+  * a caller's predicate — re-inlines `from_json`: the optimized plan
+  * holds exactly one per scan (JsonLinesSpec pins it). Blank lines are
+  * skipped (the JSONL convention — `read.json` does the same).
   */
 object JsonLines {
 
@@ -56,10 +59,7 @@ object JsonLines {
     * captured. The result carries parsed columns + [[CorruptCol]] (NULL
     * for clean rows); split with [[good]] / [[quarantine]]. */
   def readDocuments(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0)
-      .select(parsed(col("value")).as("j"))
-      .select(col("j.*"))
+    ParseOnce(spark.read.text(path), parsed, "j").select(col("j.*"))
 
   /** Parsed rows only, corrupt column dropped — the relation operators
     * consume. */

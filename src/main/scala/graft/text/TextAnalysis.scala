@@ -795,11 +795,13 @@ object TextAnalysis {
     * merge table is a pure function of the corpus.
     *
     * Per round: adjacency pairs from the symbol arrays (weighted by word
-    * count, partial-agg shuffle on the pair key), TakeOrdered top-1,
-    * then the 1-row winner BROADCASTS back via a constant equi-key (a
-    * broadcast hash join — never a nested-loop) to rewrite every word.
-    * Both the word relation and each round's winner are checkpointed —
-    * rounds × (agg + top-1 + map) driver-scheduled jobs, the same
+    * count, partial-agg shuffle on the pair key), the top-1 pair as a
+    * 1-row ungrouped `min(struct)` aggregate, then that winner attaches
+    * to every word by an explicit `crossJoin(broadcast(top))` — a
+    * broadcast nested-loop join whose broadcast side is exactly one
+    * row — to rewrite it. The rewritten word relation, which
+    * carries the winner's columns, is checkpointed once per round — one
+    * driver action per round over the ≤|distinct words| relation, the same
     * iterative discipline as the IVF Lloyd rounds and the
     * star-contraction, with the oracle unrolling the SAME rounds as
     * CTEs. Output: one row per learned merge.

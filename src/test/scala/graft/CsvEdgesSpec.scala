@@ -72,6 +72,23 @@ class CsvEdgesSpec extends AnyFunSuite {
     assert(good === Set((1L, 2L), (10L, 11L)) && bad === Set("abc,9", "5,", "7,8,9"))
   }
 
+  test("every edge-list plan parses each line once: one from_csv under the split and MAX filters") {
+    // a filter on the parsed columns must not be pushed below the parse
+    // with the parse re-inlined into it: each predicate would re-run it
+    withLines(Seq("1,2", "abc,9", "5,", "3,4")) { path =>
+      val df = CsvEdges.readEdges(spark, path)
+      val clean = graft.graph.GraphPatterns.maxFilter(CsvEdges.good(df), Some(4L))
+      val bad = CsvEdges.quarantine(df)
+      for ((what, q) <- Seq("maxFilter(good)" -> clean, "quarantine" -> bad)) {
+        val p = q.queryExecution.optimizedPlan.toString
+        assert("from_csv\\(".r.findAllIn(p).size === 1,
+          s"$what: the parse is not evaluated exactly once:\n$p")
+      }
+      assert(clean.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
+      assert(bad.collect().map(_.getString(0)).toSet === Set("abc,9", "5,"))
+    }
+  }
+
   test("a fully clean file quarantines nothing and the census equals FAILFAST's") {
     val lines = Seq("0,1", "2,3", "89,89", "90,1", "1,90")
     withLines(lines) { path =>

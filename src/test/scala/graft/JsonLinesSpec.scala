@@ -62,6 +62,24 @@ class JsonLinesSpec extends AnyFunSuite {
     assert(quarantined.exists(_.contains("\"oops\""))) // mistyped doc_id line
   }
 
+  test("a filtered read parses each line once: one from_json under the split and a predicate") {
+    // the good() split and a caller's predicate must not be pushed below
+    // the parse with from_json re-inlined into each of them
+    val path = java.nio.file.Files.createTempDirectory("graft_jsonl_once").toString
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, "part-000.json"),
+      """{"doc_id": 1, "text": "ok", "lang": "en", "source": "web", "n_chars": 2}
+        |not json at all
+        |{"doc_id": 0, "text": "zero", "lang": "en", "source": "web", "n_chars": 4}
+        |""".stripMargin)
+    val q = JsonLines.good(JsonLines.readDocuments(spark, path))
+      .filter(org.apache.spark.sql.functions.col("doc_id") > 0)
+    val p = q.queryExecution.optimizedPlan.toString
+    assert("from_json\\(".r.findAllIn(p).size === 1,
+      s"the parse is not evaluated exactly once:\n$p")
+    assert(q.collect().map(_.getAs[Long]("doc_id")).toSeq === Seq(1L))
+  }
+
   test("corpus_stats over the JSONL round-trip equals the parquet-path query") {
     val dir = "/root/testdata/sf0.001"
     val viaJsonl = SparkEntry.queries("corpus_stats_jsonl")(spark, dir)

@@ -14,8 +14,15 @@ class PlanAuditSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** name → executed-plan string, each built on first use and shared by
+    * every test: constructing a query runs its eager jobs (checkpoints,
+    * fixpoint rounds), and the two all-query sweeps below would
+    * otherwise construct all of them twice. */
+  private val plans = scala.collection.mutable.Map.empty[String, String]
+
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    plans.getOrElseUpdate(name,
+      SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString)
 
   test("text operators prune the documents scan to the columns they read") {
     // lang_id needs (doc_id, lang, text); media needs (doc_id, text, source,
@@ -428,6 +435,18 @@ class PlanAuditSpec extends AnyFunSuite {
     for (k <- Seq("o_orderkey", "p_partkey", "c_custkey"))
       assert(p.contains(s"ReadSchema: struct<$k:bigint>"),
         s"parent side of $k is not a bare-key scan:\n$p")
+  }
+
+  test("exact_2hop and approx_2hop read the edge relation once and plan no join") {
+    // the degree identity needs one node-keyed shuffle over the edge
+    // endpoints: an in-degree and an out-degree aggregate joined on the
+    // node would scan the edges twice and shuffle them twice
+    for (name <- Seq("exact_2hop", "approx_2hop")) {
+      val p = plan(name)
+      assert("lineitem\\.parquet".r.findAllIn(p).size === 1,
+        s"$name scans the edge source more than once:\n$p")
+      assert(!p.contains("Join"), s"$name plans a join:\n$p")
+    }
   }
 
   test("MAX filter is applied at the scan stage even where pushdown cannot reach parquet") {
