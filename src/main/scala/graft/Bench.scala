@@ -140,6 +140,9 @@ object Bench {
     val dirty = maxSpread > DirtySpread
     val maxSpreadStr =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(maxSpread))
+    // the task slots the run had (N of local[N]; local[*] resolves to the
+    // machine's cores): timings are only comparable at equal cpus
+    val slots = spark.sparkContext.defaultParallelism
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"max_spread":$maxSpreadStr,"dirty":$dirty,"sf":"$sfDir"}"""
     println(line)
     // A SECOND, short machine line (<200 bytes) as the LAST stdout line
@@ -150,7 +153,7 @@ object Bench {
     // numbers (total/max_spread/dirty/sf) in a complete JSON object that
     // fits any tail window; the full line and BENCH_LAST.json keep the
     // per-query detail.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","max_spread":$maxSpreadStr,"dirty":$dirty,"n_queries":${names.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","max_spread":$maxSpreadStr,"dirty":$dirty,"n_queries":${names.size},"cpus":$slots,"sf":"$sfDir"}""")
     // The full per-query table also lands in a FILE (round-7 verdict
     // item #8: the committed artifacts only tail-capture stdout, and two
     // rounds running lost most of the per-query numbers to truncation).
@@ -163,7 +166,7 @@ object Bench {
         s"""  "$k": {"sec": $v, "spread": $ss}"""
       }.mkString(",\n")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-        s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",
+        s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$slots,
            |"max_spread":$maxSpreadStr,"dirty":$dirty,
            |"queries_detail":{
            |$pretty

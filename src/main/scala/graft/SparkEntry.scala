@@ -1321,7 +1321,7 @@ object SparkEntry {
       // registered embeddings view
       "embed_norm_stats" -> ((s, dir) => {
         val emb = graft.Tables.embeddings(s, dir)
-        emb.createOrReplaceTempView("embeddings")
+        graft.ml.Similarity.registerEmbeddings(emb)
         s.sql(graft.ml.Similarity.embedNormStatsSparkSql(
           graft.Tables.widenFactor(emb)))
       }),

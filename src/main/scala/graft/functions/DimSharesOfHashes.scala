@@ -19,19 +19,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * the sf0.1 documents table. This expression is the same arithmetic in
   * ONE O(n + dim) pass inside whole-stage codegen (~60× less work per
   * row before counting codegen's constant-factor win); DocVectorsSpec
-  * pins bit-equality against the declarative fallback.
+  * pins bit-equality against that declarative reference formulation.
   *
   * Null handling mirrors the declarative spelling: a null ELEMENT
   * counts toward n (matching `size`) but lands in no dimension
   * (matching `filter`'s null-drop); a null ARRAY yields null. A
   * NEGATIVE hash likewise counts toward n but lands in no dimension —
-  * in the fallback `h % dim` is negative and matches no d in
-  * [0, dim), and this expression is registered session-wide as
+  * in the reference formulation `h % dim` is negative and matches no d
+  * in [0, dim), and this expression is registered session-wide as
   * `dim_shares_of_hashes`, so arbitrary SQL callers can feed it
   * hashes `PortableHash.tokHash` would never produce; indexing
   * `counts[h % dim]` unguarded would throw on them. The one
   * IEEE divide per dimension is (double) count / (double) n cast to
-  * float — the exact op sequence of the fallback and the DuckDB oracle.
+  * float — the exact op sequence of the reference formulation and the
+  * DuckDB oracle.
   */
 case class DimSharesOfHashes(child: Expression, dim: Int)
     extends UnaryExpression {

@@ -17,26 +17,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * assignment, and the norm of every vector. This is one codegen'd walk
   * with no allocation, inside whole-stage codegen.
   *
-  * Null/ragged parity with the declarative twin (pinned in
-  * SimilaritySpec): either array NULL ⇒ NULL; unequal lengths ⇒ NULL
-  * (zip_with pads the shorter side with nulls, the null product poisons
-  * the sum); any NULL element ⇒ NULL. Empty × empty ⇒ the fold seed 0.
+  * Null/ragged parity with the declarative reference formulation
+  * (pinned in SimilaritySpec): either array NULL ⇒ NULL; unequal
+  * lengths ⇒ NULL (zip_with pads the shorter side with nulls, the null
+  * product poisons the sum); any NULL element ⇒ NULL. Empty × empty ⇒ the fold seed 0.
   * Overflow bound as documented on [[graft.ml.Similarity]]: |coord| ≤
-  * 2·10^6 ⇒ a 4096-dim dot ≤ 1.6e16 « 2^62.
-  *
-  * NATIVE-ONLY DIVERGENCE outside that bound (same policy as
-  * [[SignBucketsOfQuantized]]'s empty-array note): parity with the
-  * declarative twin holds only within the |coord| ≤ 2e6 contract. On
-  * raw out-of-contract inputs this expression wraps silently (Java
-  * `long` arithmetic), while the zip_with/aggregate fallback throws
-  * ARITHMETIC_OVERFLOW under ANSI mode (the Spark 4 default) — so HOW
-  * an out-of-bound input fails depends on whether GraftExtensions is
-  * installed. Every operator in this engine quantizes through
-  * [[graft.ml.Similarity]]'s bounded scale first, so the divergence is
-  * unreachable from the public operators; it is documented rather than
-  * "fixed" because matching ANSI's error behavior (Math.addExact et al.)
-  * would put a branch in the hottest loop the engine has for inputs the
-  * contract already excludes.
+  * 2·10^6 ⇒ a 4096-dim dot ≤ 1.6e16 « 2^62; every operator quantizes
+  * through that bounded scale first, and past it the sum wraps (Java
+  * `long` arithmetic) rather than paying an overflow check in the
+  * engine's hottest loop.
   */
 case class DotOfQuantized(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Digit-less input → false (nothing to validate is not "valid");
   * NULL → NULL (UnaryExpression's default null intolerance).
-  * Interpreted/codegen parity and the HOF-fallback equivalence are
-  * pinned in PiiSpec.
+  * Interpreted/codegen parity and equality with the declarative Luhn
+  * fold (PiiSpec's reference formulation) are pinned in PiiSpec.
   */
 case class LuhnValidOfText(child: Expression) extends UnaryExpression {
 

@@ -42,15 +42,10 @@ object PortableHash {
   }
 
   /** Token-hash ARRAY of a tokens column — the native codegen
-    * [[TokHashesOfTokens]] (one byte-walk per token) when the session
-    * has GraftExtensions, the equivalent interpreted
-    * `transform(toks, tokHash)` otherwise. `df` is only consulted for
-    * the session's function registry. */
+    * [[TokHashesOfTokens]] (one byte-walk per token). `df` names the
+    * session the expression is registered in. */
   def tokHashes(df: org.apache.spark.sql.DataFrame, toks: Column): Column =
-    if (df.sparkSession.catalog.functionExists("tok_hashes_of_tokens"))
-      call_function("tok_hashes_of_tokens", toks)
-    else
-      transform(toks, t => tokHash(t))
+    graft.GraftExtensions.call(df, "tok_hashes_of_tokens", toks)
 
   /** Same hash as DuckDB SQL over a column expression. */
   def tokHashSql(c: String): String = {

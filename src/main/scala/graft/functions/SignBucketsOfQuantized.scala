@@ -15,15 +15,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Same rationale as [[MinhashOfHashes]]: the declarative formulation is
   * L·b interpreted `aggregate(transform(...))` HOF walks of the vector
   * (48 at the default 4×12 geometry); this is ONE codegen'd walk updating
-  * all L·b projections. Parity with the declarative fallback (pinned in
-  * SimilaritySpec): a NULL element nullifies every projection and
-  * `when(null ≥ 0)` falls through to 0 ⇒ all buckets 0. The EMPTY array
-  * is native-only behavior: here every projection stays at the fold seed
-  * 0 ⇒ every bit set, while the declarative fallback ERRORS (its
-  * `sequence(1, size(qv))` on size 0 yields the descending [1, 0] and
-  * `element_at(qv, 0)` raises) — both raw-input cases are unreachable
-  * through [[graft.ml.Similarity.vectors]] (norm filter), which is the
-  * only production entry point.
+  * all L·b projections. Raw-input edges (pinned in SimilaritySpec): a
+  * NULL element nullifies every projection and `when(null ≥ 0)` falls
+  * through to 0 ⇒ all buckets 0; the EMPTY array leaves every projection
+  * at the fold seed 0 ⇒ every bit set. Both are unreachable through
+  * [[graft.ml.Similarity.vectors]] (norm filter), which is the only
+  * production entry point.
   *
   * Overflow bounds: |qv[i]| ≤ 2·10^6 (quantized unit-ish floats), |coef|
   * ≤ 498 ⇒ |per-term| ≤ 10^9; 4096 dims ⇒ |proj| ≤ 4·10^12 « 2^62.

@@ -34,27 +34,15 @@ object DocVectors {
   val Dim = 64
 
   /** `(vec_id, embedding)` — the derived hashed-TF vector relation.
-    * With GraftExtensions the whole row is TWO native codegen passes
+    * The whole row is TWO native codegen passes
     * (`tok_hashes_of_tokens` → `dim_shares_of_hashes` — round-9 bench
     * measured the declarative spelling's Dim×n interpreted HOF lambdas
-    * at ~92 s/query on sf0.1; the native pass is O(n + Dim)); without
-    * the extension the equivalent interpreted transform/filter fallback
-    * runs, bit-identical (spec-pinned). */
-  def docVectors(docs: DataFrame): DataFrame =
-    docVectorsImpl(docs, forceFallback = false)
-
-  /** `forceFallback` exists for the spec that pins native ≡ fallback. */
-  private[graft] def docVectorsImpl(docs: DataFrame,
-      forceFallback: Boolean): DataFrame = {
+    * at ~92 s/query on sf0.1; the native pass is O(n + Dim));
+    * DocVectorsSpec pins it bit-identical to that declarative spelling. */
+  def docVectors(docs: DataFrame): DataFrame = {
     val toks = graft.text.TextAnalysis.tokens(col("text"))
-    val native = !forceFallback &&
-      docs.sparkSession.catalog.functionExists("dim_shares_of_hashes")
-    val shares =
-      if (native) call_function("dim_shares_of_hashes",
-        call_function("tok_hashes_of_tokens", col("toks")))
-      else transform(sequence(lit(0), lit(Dim - 1)), d =>
-        (size(filter(transform(col("toks"), t => PortableHash.tokHash(t) % Dim),
-          x => x === d)) / size(col("toks"))).cast("float"))
+    val shares = graft.GraftExtensions.call(docs, "dim_shares_of_hashes",
+      PortableHash.tokHashes(docs, col("toks")))
     // widen the RAW scan, not the derived relation: downstream callers
     // ([[Similarity.vectors]]) widen their input, which for this derived
     // relation would plant the exchange ABOVE the tokenize+hash+share

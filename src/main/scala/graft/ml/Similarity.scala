@@ -135,16 +135,13 @@ object Similarity {
 
   /** Exact int64 dot product — the native codegen
     * [[graft.functions.DotOfQuantized]] (one whole-stage-codegen walk, no
-    * intermediate array) when the session has GraftExtensions, the
-    * equivalent interpreted zip_with/aggregate fold otherwise. This is
-    * the engine's hottest scalar: every kNN rescore, ANN verification,
-    * k-means assignment, and vector norm runs through it.
-    * SimilaritySpec pins parity, including the NULL-element and
+    * intermediate array). This is the engine's hottest scalar: every kNN
+    * rescore, ANN verification, k-means assignment, and vector norm runs
+    * through it. SimilaritySpec pins it to the `zip_with`/`aggregate`
+    * reference formulation, including the NULL-element and
     * ragged-length edges. */
   private def dot(df: DataFrame, a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("dot_of_quantized"))
-      call_function("dot_of_quantized", a, b)
-    else aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), _ + _)
+    graft.GraftExtensions.call(df, "dot_of_quantized", a, b)
 
   /** Stream-facing twins ([[graft.streaming.EmbedStream]]) of the private
     * expression builders: the SAME quantize/dot/bucket expressions batch
@@ -152,12 +149,10 @@ object Similarity {
     * batch gets bit-identical numbers and lands in the same buckets. */
   private[graft] def quantizeExpr(e: Column): Column = quantize(e)
   private[graft] def dotExpr(df: DataFrame, a: Column, b: Column): Column = dot(df, a, b)
-  /** The array of L bucket ids of a quantized vector (native expression
-    * or declarative fallback — the same dispatch as [[annBands]]). */
+  /** The array of L bucket ids of a quantized vector (the same native
+    * expression as [[annBands]]). */
   private[graft] def bucketsExpr(df: DataFrame, qv: Column): Column =
-    if (df.sparkSession.catalog.functionExists("sign_buckets_of_quantized"))
-      call_function("sign_buckets_of_quantized", qv)
-    else when(qv.isNotNull, array((0 until NumTables).map(t => bucketCol(qv, t)): _*))
+    graft.GraftExtensions.call(df, "sign_buckets_of_quantized", qv)
 
   /** `(vec_id, qv array<long>, nrm double)` — quantized vectors + L2
     * norm. Zero-norm vectors (all coordinates quantize to 0) are
@@ -237,9 +232,17 @@ object Similarity {
       .groupBy("n_dims", "norm2_band").agg(count(lit(1)).as("n_vecs"))
   }
 
+  /** Register the embeddings relation as the `embeddings` view for
+    * [[embedNormStatsSparkSql]], with the native functions it calls by
+    * name registered in the same session. */
+  def registerEmbeddings(embeds: DataFrame): Unit = {
+    embeds.createOrReplaceTempView("embeddings")
+    graft.GraftExtensions.ensure(embeds.sparkSession)
+  }
+
   /** SPARK-SQL twin of [[embedNormStats]] (the plan-equality SQL entry
     * surface, `SparkEntry.sqlQueries`) — the quantize/dot/band chain
-    * over a registered `embeddings` view, with the widen repartition
+    * over the [[registerEmbeddings]] view, with the widen repartition
     * mirrored as a hint and the native `dot_of_quantized` called by
     * its registered name. */
   def embedNormStatsSparkSql(w: Option[Int]): String = {
@@ -465,11 +468,6 @@ object Similarity {
     * (1-based): ((a_h·i + b_h) mod 997) − 498 ∈ [−498, 498]. Pure
     * arithmetic (no literal weight tables), identical in both engines.
     */
-  private def planeCoef(h: Int, i: Column): Column = {
-    val (a, b) = planeParams(h)
-    (lit(a) * i + lit(b)) % 997L - 498L
-  }
-
   private def planeCoefSql(h: Int, i: String): String = {
     val (a, b) = planeParams(h)
     s"(($a * $i + $b) % 997 - 498)"
@@ -477,15 +475,6 @@ object Similarity {
 
   /** Sign-random-projection bucket id for hash table `t`:
     * bit j = sign(qv · plane_{t·b+j}), j ∈ [0, b). */
-  private def bucketCol(qv: Column, t: Int): Column =
-    (0 until PlanesPerTable).map { j =>
-      val proj = aggregate(
-        transform(sequence(lit(1), size(qv)),
-          i => element_at(qv, i) * planeCoef(t * PlanesPerTable + j, i)),
-        lit(0L), _ + _)
-      when(proj >= 0L, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   private def bucketSql(t: Int): String =
     (0 until PlanesPerTable).map { j =>
       s"""CAST(CASE WHEN list_sum(list_transform(range(1, len(qv) + 1),
@@ -517,15 +506,12 @@ object Similarity {
     * (bucketed by (tbl, bucket)) and joins new shards against; bucket
     * cardinality = NumTables·2^PlanesPerTable, asserted in PlanAuditSpec.
     * The L bucket ids come from the native codegen
-    * [[graft.functions.SignBucketsOfQuantized]] when the session has
-    * GraftExtensions — ONE walk of the vector instead of L·b interpreted
-    * `aggregate(transform(...))` passes (array HOFs are CodegenFallback);
-    * SimilaritySpec pins bit-equality against the declarative twin. */
+    * [[graft.functions.SignBucketsOfQuantized]] — ONE walk of the vector
+    * instead of L·b interpreted `aggregate(transform(...))` passes (array
+    * HOFs are CodegenFallback); SimilaritySpec pins bit-equality against
+    * a Scala twin. A NULL qv yields NO band rows: the expression
+    * null-propagates and posexplode drops the NULL array. */
   def annBands(v: DataFrame): DataFrame =
-    // bucketsExpr's isNotNull guard on the fallback matches the native
-    // expression's null-propagation: a NULL qv yields NO band rows on
-    // either path (a bare array(...) of bucketCols would instead emit L
-    // rows of bucket 0 for a NULL vector)
     v.select(col("vec_id"), posexplode(bucketsExpr(v, col("qv"))).as(Seq("tbl", "bucket")))
       .select(col("vec_id"), col("tbl").cast("long").as("tbl"), col("bucket"))
 

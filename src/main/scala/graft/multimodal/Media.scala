@@ -1227,25 +1227,16 @@ object Media {
   def mediaFeatures(docs: DataFrame): DataFrame = {
     val media = asContainerTable(graft.Tables.widen(docs))
     val h = hex(col("payload"))
-    val bytes = regexp_extract_all(h, lit(".."), lit(0))
     // a payload is `wav` when the bounded chunk walk finds BOTH a
     // complete `fmt ` payload and a `data` chunk — canonical 44-byte
     // files resolve at steps 0/1, files with LIST/fact/cue  chunks in
     // front of `data` resolve deeper; fields read at the WALKED
     // offsets, not byte 22/24/34 constants
     // byte_sum / n_hi_bytes: one native codegen walk over the RAW bytes
-    // when the extension is registered ([[graft.functions.ByteStatsOfBinary]]
-    // — the hex + regexp-split + two-HOF spelling allocates three
-    // payload-sized intermediates per row); the declarative twin is the
-    // fallback and the parity oracle (spec-pinned equal on random payloads)
-    val stats =
-      if (docs.sparkSession.catalog.functionExists("byte_stats_of_binary"))
-        call_function("byte_stats_of_binary", col("payload"))
-      else org.apache.spark.sql.functions.struct(
-        aggregate(bytes, lit(0L), (acc, p) => acc + byteVal(p)).as("byte_sum"),
-        size(filter(bytes, p =>
-          instr(lit("89ABCDEF"), substring(p, 1, 1)) > 0)).cast("long")
-          .as("n_hi_bytes"))
+    // ([[graft.functions.ByteStatsOfBinary]] — the hex + regexp-split +
+    // two-HOF spelling, MediaSpec's reference formulation, allocates
+    // three payload-sized intermediates per row)
+    val stats = graft.GraftExtensions.call(docs, "byte_stats_of_binary", col("payload"))
     // EVERYTHING hex-derived happens BEFORE the checkpoint — the four
     // gated folds, plus the constant-offset BMP/GIF header reads and
     // the magic flags, each gated on its own sniff. The checkpoint

@@ -221,17 +221,12 @@ object Dedup {
       .drop("fp_md5")
 
   /** Slot-wise signature agreement count (`n_match`) — the native codegen
-    * [[graft.functions.AgreeCountOfHashes]] when the session has
-    * GraftExtensions, the equivalent interpreted zip_with/aggregate fold
-    * otherwise; DedupSpec pins parity incl. the null-element and
+    * [[graft.functions.AgreeCountOfHashes]]; DedupSpec pins it to the
+    * zip_with/aggregate reference formulation incl. the null-element and
     * ragged-length edges. Scored once per LSH candidate pair, which is
     * the verification hot path of every MinHash pairing operator. */
   private[graft] def agreeCount(df: DataFrame, a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("agree_count_of_hashes"))
-      call_function("agree_count_of_hashes", a, b)
-    else
-      aggregate(zip_with(a, b, (x, y) => when(x === y, 1L).otherwise(0L)),
-        lit(0L), _ + _)
+    graft.GraftExtensions.call(df, "agree_count_of_hashes", a, b)
 
   /** fp → keepers → repdocs CTE chain, the oracle twin of the collapse;
     * `docSrc` is any relation with (doc_id, text) — "documents", or the
@@ -261,15 +256,9 @@ object Dedup {
     * equals min over the distinct set.)
     */
   /** The 16 permuted minima of a shingle-array column — native
-    * [[graft.functions.MinhashOfHashes]] when the session has
-    * GraftExtensions, the equivalent k-pass HOF formulation otherwise. */
+    * [[graft.functions.MinhashOfHashes]]. */
   private def signatureOf(docs: DataFrame, sh: Column): Column =
-    if (docs.sparkSession.catalog.functionExists("minhash_of_hashes"))
-      call_function("minhash_of_hashes", sh)
-    else
-      array(perms.map { case (a, b) =>
-        array_min(transform(sh, s => PortableHash.permHash(s, a, b)))
-      }: _*)
+    graft.GraftExtensions.call(docs, "minhash_of_hashes", sh)
 
   def minhashSignatures(docs: DataFrame): DataFrame =
     shingleSets(docs)
@@ -1233,14 +1222,8 @@ object Dedup {
   /** `(doc_id, sh_set)` over a prepared [[hashedTokens]] relation —
     * distinct `window`-shingles (default 3, the dedup family's width). */
   private def shingleSetsOf(t: DataFrame, window: Int = 3): DataFrame = {
-    val shSet =
-      if (t.sparkSession.catalog.functionExists("shingles_of_hashes"))
-        call_function("shingles_of_hashes", col("th"), lit(window))
-      else // session built without GraftExtensions: interpreted HOF walk
-        array_distinct(transform(
-          sequence(lit(1), size(col("th")) - (window - 1)),
-          i => PortableHash.shingleK(
-            (0 until window).map(j => element_at(col("th"), i + j)))))
+    val shSet = graft.GraftExtensions.call(t, "shingles_of_hashes",
+      col("th"), lit(window))
     // non-th columns pass through: the batch callers hand (doc_id, th),
     // signatureBandsKeeping also threads its passthrough columns
     t.select(t.columns.filterNot(_ == "th").map(col).toSeq :+ shSet.as("sh_set"): _*)
@@ -1659,21 +1642,11 @@ object Dedup {
   def docSimhash(docs: DataFrame): DataFrame = {
     val th = TextAnalysis.tokenHashes(docs, col("text"))
     val n = size(col("th"))
-    val sim =
-      if (docs.sparkSession.catalog.functionExists("simhash_of_hashes"))
-        call_function("simhash_of_hashes", col("th"))
-      else // session built without GraftExtensions: same vote, 68 HOF passes
-        simPerms.zipWithIndex.flatMap { case ((a, b), p) =>
-          (0 until simBandBits).map { j =>
-            val ones = size(filter(col("th"),
-              h => (shiftright(PortableHash.permHash(h, a, b), j) % 2) === 1L))
-            when(ones * 2 > n, lit(1L << (p * simBandBits + j))).otherwise(lit(0L))
-          }
-        }.reduce(_ + _)
-    // NULL text: the native expression null-propagates, but the fallback's
-    // when/otherwise chain and the DuckDB oracle's CASE both land on 0 —
-    // coalesce pins all three to the same answer (n_tokens stays NULL
-    // everywhere: size/len of a NULL array is NULL in both engines).
+    val sim = graft.GraftExtensions.call(docs, "simhash_of_hashes", col("th"))
+    // NULL text: the native expression null-propagates, but the DuckDB
+    // oracle's CASE lands on 0 — coalesce pins both to the same answer
+    // (n_tokens stays NULL everywhere: size/len of a NULL array is NULL
+    // in both engines).
     graft.Tables.widen(docs)
       .select(col("doc_id"), th.as("th"))
       .select(col("doc_id"), n.cast("long").as("n_tokens"),
@@ -1926,17 +1899,9 @@ object Dedup {
     * sibling of [[TextAnalysis.docRepetition]]'s multiset. Position is
     * what turns "this doc contains duplicated material" into WHERE. */
   private def windowStarts(t: DataFrame, w: Int): DataFrame = {
-    // the native ordered-walk expression when registered (one codegen'd
-    // pass; the HOF chain pays w interpreted element_at probes/shingle)
-    val sh =
-      if (t.sparkSession.catalog.functionExists("win_shingles_of_hashes"))
-        call_function("win_shingles_of_hashes", col("th"), lit(w))
-      else
-        when(size(col("th")) >= w,
-          transform(sequence(lit(1), size(col("th")) - (w - 1)),
-            i => PortableHash.shingleK(
-              (0 until w).map(j => element_at(col("th"), i + j)))))
-          .otherwise(array().cast("array<long>"))
+    // the native ordered-walk expression (one codegen'd pass)
+    val sh = graft.GraftExtensions.call(t, "win_shingles_of_hashes",
+      col("th"), lit(w))
     t.select(col("doc_id"), posexplode(sh).as(Seq("off", "sh")))
       .select(col("doc_id"), (col("off") + 1L).cast("long").as("pos"),
         col("sh"))

@@ -26,15 +26,16 @@ import org.apache.spark.sql.functions._
   * only candidates whose digits pass the Luhn checksum count/mask —
   * the checksum is the precision filter that keeps invoice numbers and
   * tracking ids out of `<CARD>` (a planted Luhn-failing near-miss must
-  * NOT flag). The fold runs per candidate (a per-row HOF over ≤19
-  * digits), and masking is a literal replace of each validated
-  * candidate — an identical-bytes run elsewhere in the same doc is
-  * also masked, the trade of conditional redaction without lookarounds
-  * (both engines agree on it).
+  * NOT flag). The checksum runs per candidate (a native walk over ≤19
+  * digits inside a per-row `filter`), and masking is a literal replace
+  * of each validated candidate — an identical-bytes run elsewhere in
+  * the same doc is also masked, the trade of conditional redaction
+  * without lookarounds (both engines agree on it).
   *
   * Scale shape: pure per-row map work, zero shuffle; the regexes are
-  * codegen'd; the Luhn fold and conditional replace are interpreted
-  * HOFs that touch only matched candidates (~0 rows on clean corpora).
+  * codegen'd; the candidate filter and conditional replace are
+  * interpreted HOFs that touch only matched candidates (~0 rows on
+  * clean corpora).
   * NULL text null-propagates through counts, verdict, and redaction
   * (same policy as [[TextAnalysis.fingerprints]]: NULL is not "clean").
   */
@@ -56,35 +57,14 @@ object Pii {
     * over recall, like [[PhoneRe]]). */
   val SsnRe: String = "\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b"
 
-  /** Luhn checksum over a candidate's digit string: from the RIGHT,
-    * double every second digit, subtract 9 when the double exceeds 9,
-    * valid iff the sum is ≡ 0 (mod 10). Exact integer fold, identical
-    * expression shape in the DuckDB twin. The HOF fallback for sessions
-    * without GraftExtensions — [[piiScrub]] prefers the native
-    * [[graft.functions.LuhnValidOfText]] (one allocation-free byte walk
-    * with the separator skip folded in, vs a regexp_replace + an
-    * interpreted substring/ascii fold per candidate); PiiSpec pins the
-    * two equal on valid/invalid/separator/digit-less inputs. */
-  private[graft] def luhnValidHof(cand: Column): Column = {
-    val d = regexp_replace(cand, lit("[^0-9]"), lit(""))
-    val n = length(d)
-    val total = aggregate(sequence(lit(1), n), lit(0L), (acc, i) => {
-      val dig = (ascii(d.substr(i, lit(1))) - 48).cast("long")
-      val dbl = when(pmod(n - i, lit(2)) === 1, dig * 2L).otherwise(dig)
-      acc + when(dbl > 9L, dbl - 9L).otherwise(dbl)
-    })
-    pmod(total, lit(10L)) === 0L
-  }
-
   /** The Luhn-validated card candidates of `text`, in match order
-    * (duplicates preserved — each occurrence counts). */
-  private def validCards(df: DataFrame, text: Column): Column = {
-    val luhn: Column => Column =
-      if (df.sparkSession.catalog.functionExists("luhn_valid"))
-        c => call_function("luhn_valid", c)
-      else luhnValidHof
-    filter(regexp_extract_all(text, lit(CardRe), lit(0)), luhn(_))
-  }
+    * (duplicates preserved — each occurrence counts). The checksum is the
+    * native [[graft.functions.LuhnValidOfText]]: one allocation-free byte
+    * walk with the separator skip folded in; PiiSpec pins it equal to
+    * the interpreted Luhn fold on valid/invalid/separator inputs. */
+  private def validCards(df: DataFrame, text: Column): Column =
+    filter(regexp_extract_all(text, lit(CardRe), lit(0)),
+      c => graft.GraftExtensions.call(df, "luhn_valid", c))
 
   def piiScrub(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("text"),

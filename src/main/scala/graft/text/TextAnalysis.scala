@@ -38,18 +38,14 @@ object TextAnalysis {
     regexp_extract_all(lower(text), lit(TokenRe), lit(0))
 
   /** Token-hash array straight from a text column — the fused native
-    * [[graft.functions.TokHashesOfText]] when the session has
-    * GraftExtensions (one byte-walk: no regex engine, no token-string
-    * array, no per-token substring copies), the [[tokens]] +
-    * [[PortableHash.tokHashes]] chain otherwise. The hash-only paths
-    * (minhash/shingles, simhash, rolling fingerprints) use this; paths
-    * that need the token STRINGS (quality stats, the curation base's
-    * shared `toks`) keep [[tokens]]. */
+    * [[graft.functions.TokHashesOfText]] (one byte-walk: no regex engine,
+    * no token-string array, no per-token substring copies). The
+    * hash-only paths (minhash/shingles, simhash, rolling fingerprints)
+    * use this; paths that need the token STRINGS (quality stats, the
+    * curation base's shared `toks`) keep [[tokens]] +
+    * [[PortableHash.tokHashes]]. */
   def tokenHashes(df: DataFrame, text: Column): Column =
-    if (df.sparkSession.catalog.functionExists("tok_hashes_of_text"))
-      call_function("tok_hashes_of_text", text)
-    else
-      PortableHash.tokHashes(df, tokens(text))
+    graft.GraftExtensions.call(df, "tok_hashes_of_text", text)
 
   /** md5 of the whitespace-normalized lowercased text — the exact-duplicate
     * key shared by [[fingerprints]] and [[Dedup.exactDupClusters]]. */
@@ -69,16 +65,10 @@ object TextAnalysis {
     * POLICY (a code corpus must NOT treat `é` and `e` as the same
     * content), so the folded key ships as a parallel spelling
     * ([[Dedup.exactDupClustersNorm]]), not a replacement. Per-row map
-    * work; the fold is the native codegen expression with the same
-    * documented UDF fallback as [[textNormalize]]. */
-  def normFoldedMd5(df: DataFrame, text: Column): Column = {
-    val lowered = lower(text)
-    val folded =
-      if (df.sparkSession.catalog.functionExists("fold_marks"))
-        call_function("fold_marks", lowered)
-      else foldMarksUdf(lowered)
-    md5(trim(regexp_replace(folded, WsRunRe, " ")))
-  }
+    * work; the fold is [[textNormalize]]'s native codegen expression. */
+  def normFoldedMd5(df: DataFrame, text: Column): Column =
+    md5(trim(regexp_replace(
+      graft.GraftExtensions.call(df, "fold_marks", lower(text)), WsRunRe, " ")))
 
   /** DuckDB twin of [[normFoldedMd5]] (same engine-parity pin as
     * [[textNormalizeSql]]: `strip_accents(nfc_normalize(...))` IS the
@@ -1813,20 +1803,12 @@ object TextAnalysis {
     val wide = graft.Tables.widen(docs)
     val t = wide.select(col("doc_id"),
       tokenHashes(wide, col("text")).as("th"))
-    // multiset of window-shingles — the native ordered walk when
-    // registered, the interpreted element_at chain otherwise
-    val multi =
-      if (wide.sparkSession.catalog.functionExists("win_shingles_of_hashes"))
-        call_function("win_shingles_of_hashes", col("th"), lit(window))
-      else when(size(col("th")) >= window,
-        transform(sequence(lit(1), size(col("th")) - (window - 1)),
-          i => PortableHash.shingleK(
-            (0 until window).map(j => element_at(col("th"), i + j)))))
-        .otherwise(array().cast("array<long>"))
-    val distinctSh =
-      if (wide.sparkSession.catalog.functionExists("shingles_of_hashes"))
-        call_function("shingles_of_hashes", col("th"), lit(window))
-      else array_distinct(multi)
+    // multiset and distinct set of window-shingles — the native ordered
+    // and distinct walks
+    val multi = graft.GraftExtensions.call(wide, "win_shingles_of_hashes",
+      col("th"), lit(window))
+    val distinctSh = graft.GraftExtensions.call(wide, "shingles_of_hashes",
+      col("th"), lit(window))
     // top multiplicity = longest equal-run of the sorted multiset; the
     // fold carries (prev, run, best) with a NULL prev sentinel (a real
     // shingle can hash to any value incl. 0, so no in-band sentinel)
@@ -1942,24 +1924,13 @@ object TextAnalysis {
     * itself is per-row map work over the fused tokenize+hash expression.
     */
   /** Non-overlapping `k`-token block hashes over a `th` column — the
-    * native codegen [[graft.functions.BlocksOfHashes]] (one array walk)
-    * when the session has GraftExtensions, the equivalent interpreted
-    * transform+element_at chain otherwise. Output is a MULTISET in tile
-    * order: position p (0-based) is tile p+1's hash — the scrub path
-    * relies on that alignment. The fallback's CaseWhen evaluates
-    * branches lazily, so sequence() never sees a 0-block doc
-    * (sequence(1, 0) would count DOWN — the docRepetition guard
-    * pattern); block b covers th[(b−1)k+1 .. bk], a fixed tiling
-    * truncated at the last full window. */
+    * native codegen [[graft.functions.BlocksOfHashes]] (one array walk).
+    * Output is a MULTISET in tile order: position p (0-based) is tile
+    * p+1's hash — the scrub path relies on that alignment; block b
+    * covers th[(b−1)k+1 .. bk], a fixed tiling truncated at the last
+    * full window. */
   private def blockHashes(df: DataFrame, k: Int): Column =
-    if (df.sparkSession.catalog.functionExists("blocks_of_hashes"))
-      call_function("blocks_of_hashes", col("th"), lit(k))
-    else
-      when(size(col("th")) >= k,
-        transform(sequence(lit(1), floor(size(col("th")) / lit(k)).cast("int")),
-          b => PortableHash.shingleK(
-            (0 until k).map(j => element_at(col("th"), (b - 1) * k + (j + 1))))))
-        .otherwise(array().cast("array<long>"))
+    graft.GraftExtensions.call(df, "blocks_of_hashes", col("th"), lit(k))
 
   def boilerplateBlocks(docs: DataFrame, k: Int = BoilerWindow,
       minDocs: Long = BoilerMinDocs,
@@ -2126,11 +2097,8 @@ object TextAnalysis {
     * mark-stripped Kana) hash alike: lowercase, NFD-decompose, drop all
     * combining marks (Mn/Mc/Me), recompose NFC. The fold itself is the
     * native [[graft.functions.FoldMarks]] expression (ASCII fast path —
-    * the common case pays one byte-scan); sessions without
-    * GraftExtensions fall back to a UDF wrapping the same static fold
-    * (no Spark builtin expresses UAX #15 — the one fallback in the
-    * engine that cannot be builtin-HOF, documented rather than faked).
-    * `changed` marks docs the fold actually touched (beyond
+    * the common case pays one byte-scan; no Spark builtin expresses
+    * UAX #15). `changed` marks docs the fold actually touched (beyond
     * lowercasing), so the scrub can be audited and the untouched bulk
     * short-circuits downstream. NULL text stays NULL, changed=false.
     *
@@ -2139,20 +2107,11 @@ object TextAnalysis {
   def textNormalize(docs: DataFrame): DataFrame = {
     val wide = graft.Tables.widen(docs)
     val lowered = lower(col("text"))
-    val folded =
-      if (wide.sparkSession.catalog.functionExists("fold_marks"))
-        call_function("fold_marks", lowered)
-      else TextAnalysis.foldMarksUdf(lowered)
+    val folded = graft.GraftExtensions.call(wide, "fold_marks", lowered)
     wide.select(col("doc_id"), lowered.as("lowered"), folded.as("norm_text"))
       .select(col("doc_id"), col("norm_text"),
         coalesce(col("norm_text") =!= col("lowered"), lit(false)).as("changed"))
   }
-
-  /** Fallback-only UDF around the same static fold (see [[textNormalize]]). */
-  private val foldMarksUdf =
-    udf((s: String) => if (s == null) null
-      else graft.functions.FoldMarks
-        .fold(org.apache.spark.unsafe.types.UTF8String.fromString(s)).toString)
 
   def textNormalizeSql: String =
     s"""SELECT doc_id,

@@ -26,9 +26,13 @@ import org.apache.spark.sql.DataFrame
   */
 object TextSql {
 
-  /** Register the raw documents relation for the SQL entries. */
-  def registerDocuments(docs: DataFrame): Unit =
+  /** Register the raw documents relation for the SQL entries, with the
+    * native functions they call by name (`fold_marks`, `luhn_valid`,
+    * `tok_hashes_of_text`) registered in the same session. */
+  def registerDocuments(docs: DataFrame): Unit = {
     docs.createOrReplaceTempView("documents")
+    graft.GraftExtensions.ensure(docs.sparkSession)
+  }
 
   /** Spark-SQL string literal (backslashes + quotes escaped). */
   private def q(s: String): String =

@@ -486,8 +486,8 @@ class DedupSpec extends AnyFunSuite {
       s"native token hashing missing from the simhash plan:\n$p")
   }
 
-  test("window-k HOF fallback formulation equals the native shingle expression in a job") {
-    // the no-extensions fallback branch of shingleSetsOf, verbatim,
+  test("window-k HOF reference formulation equals the native shingle expression in a job") {
+    // the reference formulation of shingleSetsOf's distinct window set,
     // pinned bit-equal to the codegen expression at every width the
     // engine uses (1 = degenerate, 3 = dedup family, 8/13 = decon range);
     // the 12-token doc also exercises the >= k gate at k=13

@@ -117,7 +117,7 @@ class DocVectorsSpec extends AnyFunSuite {
     assert(report.values.forall(_._2 >= 1L)) // the exact dup is always recalled
   }
 
-  test("native dim_shares expression is bit-identical to the declarative fallback") {
+  test("native dim_shares expression is bit-identical to the declarative reference formulation") {
     val rnd = new scala.util.Random(97)
     val words = Vector("one", "two", "longerword", "x", "mixedCASE", "ünïcode")
     val rows = (0L until 40L).map(i =>
@@ -126,9 +126,18 @@ class DocVectorsSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("vec_id") ->
         r.getAs[scala.collection.Seq[Float]]("embedding").toSeq).toMap
-    val native = m(DocVectors.docVectorsImpl(docs(rows: _*), forceFallback = false))
-    val fallback = m(DocVectors.docVectorsImpl(docs(rows: _*), forceFallback = true))
-    assert(native === fallback)
+    import org.apache.spark.sql.functions._
+    // the per-dimension share as interpreted HOFs: Dim × n lambda calls
+    val toks = graft.text.TextAnalysis.tokens(col("text"))
+    val reference = docs(rows: _*).select(col("doc_id"), toks.as("toks"))
+      .filter(size(col("toks")) > 0)
+      .select(col("doc_id").as("vec_id"),
+        transform(sequence(lit(0), lit(DocVectors.Dim - 1)), d =>
+          (size(filter(transform(col("toks"),
+              t => PortableHash.tokHash(t) % DocVectors.Dim), x => x === d)) /
+            size(col("toks"))).cast("float")).as("embedding"))
+    val native = m(DocVectors.docVectors(docs(rows: _*)))
+    assert(native === m(reference))
     assert(native.nonEmpty)
   }
 

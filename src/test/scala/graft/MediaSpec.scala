@@ -218,7 +218,7 @@ class MediaSpec extends AnyFunSuite {
     assert(fields(8L) === ("jpeg", 9L, 9L, 8L, 3L, 61L + 5L))
   }
 
-  test("byte_stats_of_binary: native codegen walk ≡ the hex+HOF fallback, NULLs included") {
+  test("byte_stats_of_binary: native codegen walk ≡ the hex+HOF reference formulation, NULLs included") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(42)

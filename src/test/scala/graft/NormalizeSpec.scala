@@ -81,7 +81,7 @@ class NormalizeSpec extends AnyFunSuite {
     assert(!n.getAs[Boolean]("changed"))
   }
 
-  test("the fallback UDF path equals the native expression") {
+  test("a UDF over the static fold equals the native expression") {
     import org.apache.spark.sql.functions._
     val df = probedPairs.map(_._1).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")

@@ -108,7 +108,7 @@ class SimilaritySpec extends AnyFunSuite {
     for ((id, v) <- vecs; t <- 0 until Similarity.NumTables)
       assert(bands((id, t.toLong)) === bucket(v, t))
     // raw-array edge semantics (unreachable through vectors(), but the
-    // expression must not diverge from the declarative fallback): a NULL
+    // expression must not diverge from the reference formulation): a NULL
     // element nullifies every projection → when(null >= 0) → 0 buckets;
     // an empty array leaves every projection at the fold seed 0 → proj
     // >= 0 holds → every bit set
