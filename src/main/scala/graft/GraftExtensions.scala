@@ -39,6 +39,8 @@ object GraftExtensions {
     binary("agree_count_of_hashes", classOf[AgreeCountOfHashes])(
       AgreeCountOfHashes(_, _)),
     unary("byte_stats_of_binary", classOf[ByteStatsOfBinary])(ByteStatsOfBinary(_)),
+    unary("container_walks_of_binary", classOf[ContainerWalksOfBinary])(
+      ContainerWalksOfBinary(_)),
     unary("tok_hashes_of_text", classOf[TokHashesOfText])(TokHashesOfText(_)),
     unary("tok_hashes_of_tokens", classOf[TokHashesOfTokens])(TokHashesOfTokens(_)),
     // default windows: 3 = the dedup family's shingle width, 8 = the

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The ONE session-scoped single-entry cache body behind the repo's
   * build-once relations (the `token_rarity` pair relation, the media
@@ -31,13 +32,13 @@ import org.apache.spark.sql.SparkSession
   *    session (the full-corpus and the `% 10 <> 9` incremental-corpus
   *    quantizers, say) — a single slot would thrash on exactly the
   *    alternation the bench runs;
-  *  - the key is the caller's affair (semantic hash of the analyzed
-  *    input plan + parameters) — NOTE the repo-wide caveat: a semantic
-  *    hash identifies the PLAN, so rewriting the underlying files at
-  *    the same path mid-session serves the stale cached relation until
-  *    the plan (or session) changes. Accepted: the cached relations
-  *    are corpus-build artifacts, and a corpus swap-in-place mid-
-  *    session is outside every face's contract.
+  *  - the key is the caller's affair: the input relation's
+  *    [[SessionCache.planKey]] plus parameters — NOTE the repo-wide
+  *    caveat: a plan key identifies the PLAN, so rewriting the
+  *    underlying files at the same path mid-session serves the stale
+  *    cached relation until the plan (or session) changes. Accepted: the
+  *    cached relations are corpus-build artifacts, and a corpus
+  *    swap-in-place mid-session is outside every face's contract.
   */
 private[graft] final class SessionCache[K, V](capacity: Int = 1) {
   require(capacity >= 1, s"SessionCache capacity must be >= 1 (got $capacity)")
@@ -65,4 +66,17 @@ private[graft] final class SessionCache[K, V](capacity: Int = 1) {
         built
       }
     }
+}
+
+private[graft] object SessionCache {
+
+  /** A cache-key part standing for an input relation. */
+  type PlanKey = LogicalPlan
+
+  /** `df`'s analyzed plan, canonicalized: its hash is the plan's
+    * `semanticHash()` and its `equals` is `sameResult`, so two spellings
+    * of the same scan share an entry, and two plans whose 32-bit hashes
+    * collide still miss. The key holds the plan (and any local rows it
+    * carries) for as long as its entry lives. */
+  def planKey(df: DataFrame): PlanKey = df.queryExecution.analyzed.canonicalized
 }

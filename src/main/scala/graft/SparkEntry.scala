@@ -87,7 +87,7 @@ object SparkEntry {
       GraphPatterns.edgeCount(edges(s, dir), Some(CensusMax))),
     // S1 end-to-end through the driver gate: round-trip the edge view
     // through the reference's native format (headerless src,dst CSV,
-    // FAILFAST + null-id hard error) and run the census on the re-read
+    // any malformed line a hard error) and run the census on the re-read
     // relation — same oracle as edge_count by construction.
     // NB: the CSV write happens eagerly at DataFrame-construction time —
     // the round-trip IS the operator (fromCsv needs the files on disk), so

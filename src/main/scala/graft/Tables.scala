@@ -99,10 +99,11 @@ object Tables {
     // discipline, r16: a weak-keyed outer map, so a stopped,
     // dereferenced session's counts drop with it instead of living for
     // the JVM, and two sessions can never share an entry), then the
-    // semantic HASH of the plan — not the plan itself (holding
-    // canonicalized LocalRelations would retain their rows for the
-    // session's lifetime); a hash collision can only mis-decide the
-    // repartition, never change data.
+    // semantic HASH of the plan — not the plan itself, as the bounded
+    // artifact caches key ([[graft.SessionCache.planKey]]): this memo is
+    // unbounded, and holding canonicalized LocalRelations would retain
+    // their rows for the session's lifetime. A hash collision can only
+    // mis-decide the repartition, never change data.
     val n = widenCount(df)
     if (n < target) df.repartition(target) else df
   }

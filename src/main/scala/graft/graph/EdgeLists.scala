@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.sources.CsvEdges
 
 /** Constructors for the canonical directed-edge relation
   * `edges(src BIGINT, dst BIGINT)` — the reference engine's single data
@@ -16,16 +16,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    `approx/Approx2HopCount.java:119` — we do NOT reproduce it).
   *  - The CSV path mirrors the reference's strictness: malformed rows are
   *    a hard error (`Integer.parseInt` throws —
-  *    `countedges/CountEdgesAfterMax.java:52-53`), so `mode=FAILFAST` and a
-  *    non-nullable schema.
+  *    `countedges/CountEdgesAfterMax.java:52-53`).
   *  - Edge lists are multigraphs: no dedup is performed anywhere in the
   *    reference, and path multiplicity matters (SURVEY §2.3 J3).
   */
 object EdgeLists {
-
-  val schema: StructType = StructType(Seq(
-    StructField("src", LongType, nullable = false),
-    StructField("dst", LongType, nullable = false)))
 
   /** Canonical edge view over the fixture tables (FIXTURES.md §C):
     * a directed multigraph on node IDs 0..99 derived with integer-only
@@ -46,20 +41,21 @@ object EdgeLists {
     *
     * Strictness: the reference hard-crashes on malformed input
     * (`Integer.parseInt` — `countedges/CountEdgesAfterMax.java:52-53`).
-    * FAILFAST alone does not deliver that: Spark file sources force
-    * read-schema nullability to true, so a row like `1,` parses to a null
-    * dst without tripping FAILFAST. The raise_error projection below turns
-    * any null id into a task failure, restoring the reference's contract
-    * for every query that reads the ids (all of them do; the one carve-out
-    * is a bare count(), where Spark's CSV count optimization skips parsing
-    * entirely — something a record-at-a-time engine cannot even express).
+    * The lines go through the one edge parse, [[graft.sources.CsvEdges
+    * .readEdges]], and any line its [[graft.sources.CsvEdges.quarantine]]
+    * would claim (unparsable, wrong token count, or a null id such as
+    * `1,`) fails the task with a `malformed edge row` error. The check is
+    * a filter, which column pruning cannot drop, so a bare `count()`
+    * fails on a malformed line too. Blank lines are skipped.
     */
-  def fromCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(schema).option("mode", "FAILFAST").csv(path)
-      .select(
-        Seq("src", "dst").map { c =>
-          coalesce(col(c), raise_error(lit(s"malformed edge row: null $c"))).as(c)
-        }: _*)
+  def fromCsv(spark: SparkSession, path: String): DataFrame = {
+    val corrupt = col(CsvEdges.CorruptCol)
+    CsvEdges.readEdges(spark, path)
+      .filter(when(corrupt.isNotNull,
+          raise_error(concat(lit("malformed edge row: "), corrupt)))
+        .otherwise(lit(true)))
+      .select(col("src"), col("dst"))
+  }
 
   /** In-memory edges for unit tests / golden fixtures. */
   def fromSeq(spark: SparkSession, edges: Seq[(Long, Long)]): DataFrame = {

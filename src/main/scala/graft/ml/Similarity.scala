@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
+import graft.SessionCache.{PlanKey, planKey}
 
 /** One (neighbor, similarity) candidate flowing into the top-k aggregate. */
 case class Scored(neighbor_id: Long, cos_sim: Double)
@@ -844,7 +845,7 @@ object Similarity {
     * RDD-backed plan per call, so the checkpointed hash can never
     * match across faces). */
   private val centCache =
-    new graft.SessionCache[(Int, Int, Int), DataFrame](capacity = 2)
+    new graft.SessionCache[(PlanKey, Int, Int), DataFrame](capacity = 2)
   private[graft] def centBuilds = centCache.builds
 
   /** [[kmeansCentroids]] behind the session cache: `v0` is the
@@ -853,7 +854,7 @@ object Similarity {
   private def centroidsCached(v0: DataFrame, v: => DataFrame,
       numCentroids: Int, iters: Int): DataFrame =
     centCache.getOrBuild(v0.sparkSession,
-        (v0.queryExecution.analyzed.semanticHash(), numCentroids, iters)) {
+        (planKey(v0), numCentroids, iters)) {
       kmeansCentroids(v, numCentroids, iters)
     }
 
@@ -1422,7 +1423,7 @@ object Similarity {
     * alternation; keyed on the PRE-checkpoint vectors plan (a
     * localCheckpoint mints a fresh RDD-backed plan per call). */
   private val pqCache =
-    new graft.SessionCache[(Int, Int, Int), (DataFrame, DataFrame)](
+    new graft.SessionCache[(PlanKey, Int, Int), (DataFrame, DataFrame)](
       capacity = 2)
   private[graft] def pqBuilds = pqCache.builds
 
@@ -1430,7 +1431,7 @@ object Similarity {
       iters: Int = PqIters): (DataFrame, DataFrame) = {
     val v0 = vectors(embeds)
     pqCache.getOrBuild(v0.sparkSession,
-        (v0.queryExecution.analyzed.semanticHash(), ksub, iters)) {
+        (planKey(v0), ksub, iters)) {
       val sv = pqSubVectors(v0).localCheckpoint()
       val cb = pqCodebooks(sv, ksub, iters)
       (cb, pqEncodeSubv(sv, cb).localCheckpoint())

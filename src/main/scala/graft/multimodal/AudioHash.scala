@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * `fmt `+`data`, frame size ≥ 1, and ≥ 64 clamped frames; anything
   * else emits no row.
   *
-  * Scale shape: per-row hex arithmetic (one bounded walk fold + 64
-  * fixed probes — cost per CLIP, independent of clip length), an
+  * Scale shape: one bounded walk + 64 fixed hex probes per row (cost
+  * per CLIP, independent of clip length), an
   * 8-byte/clip sketch, and the proven checkpoint-sketch →
   * band-explode → equi-self-join pairing (AQE-splittable, never
   * all-pairs).
@@ -90,19 +90,22 @@ object AudioHash extends MediaFamily("audio", "clip", "aud_",
       s"'64617461' || ${leHex(nb, 4)} || $pixHex"
   }
 
-  /** The hash over `(media_id, h, n_bytes)` — eligibility and layout
-    * from the REAL walk, probes and vote as one bounded HOF pair (the
-    * [[ImageHash.ahashOfHexMaybeCk]] codegen rationale). */
+  /** The hash over `(media_id, payload, h, n_bytes)` — eligibility and
+    * layout from the REAL walk over the payload, probes over the hex and
+    * vote as one bounded HOF pair (the [[ImageHash.ahashOfHexMaybeCk]]
+    * codegen rationale). */
   private[graft] def ahashOfHexMaybeCk(sized: DataFrame,
       checkpoint: Boolean, keep: Seq[String] = Nil): DataFrame = {
     val walked0 = sized
       // eligibility-filter BEFORE the checkpoint: on a mixed media lake
-      // most payloads are not RIFF/WAVE, and the gate is the fold's own
-      // entry condition (gated-off rows carry NULL wk and would drop at
+      // most payloads are not RIFF/WAVE, and the gate is the walk's own
+      // entry condition (other rows carry a NULL wk and would drop at
       // the next filter anyway) — so the 2x-payload hex materialization
-      // is bounded to candidate WAVs (the ImageHash shape)
+      // is bounded to candidate WAVs (the ImageHash shape); the payload
+      // bytes leave once the walk has read them
       .filter(Media.riffMagic)
-      .withColumn("wk", Media.gatedWalk(Media.riffMagic, Media.walkAggSql))
+      .withColumn("wk", Media.walksOf(sized).getField("riff"))
+      .drop("payload")
     val walked = if (checkpoint) walked0.localCheckpoint() else walked0
     val wav = walked
       .filter(col("wk.fmt_off").isNotNull && col("wk.data_off").isNotNull)

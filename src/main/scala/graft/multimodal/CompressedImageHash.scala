@@ -14,15 +14,15 @@ import org.apache.spark.sql.functions._
   * The hash probes the coded stream at the span the container walks
   * expose:
   *
-  *  - PNG: the FIRST `IDAT` chunk's payload — `IDAT` is now the
-  *    [[Media]] PNG fold's second tracked find (offset + declared
-  *    length, the `mdat` precedent), clamped to the bytes actually
-  *    present;
+  *  - PNG: the FIRST `IDAT` chunk's payload — `IDAT` is the
+  *    [[ContainerWalk.png]] walk's second tracked find (offset +
+  *    declared length, the `mdat` precedent), clamped to the bytes
+  *    actually present;
   *  - JPEG: the entropy stream — everything after the first `SOS`
-  *    segment's header (a dedicated marker walk below hops APPn / COM
-  *    / DQT / DHT / SOFn by their declared lengths to the first
-  *    `FFDA`; the dimension walk cannot serve here because it STOPS at
-  *    SOF by design), minus the trailing `FFD9` when present;
+  *    segment's header (a dedicated marker walk, [[ContainerWalk.sos]],
+  *    hops APPn / COM / DQT / DHT / SOFn by their declared lengths to
+  *    the first `FFDA`; the dimension walk cannot serve here because it
+  *    STOPS at SOF by design), minus the trailing `FFD9` when present;
   *
   * then 64 integer-stride byte probes over the clamped span, bit =
   * 64·b > Σb — the [[VideoHash]] discipline on the compressed stream.
@@ -47,8 +47,8 @@ import org.apache.spark.sql.functions._
   * exact payload fingerprint.
   *
   * Eligibility is explicit: a walked IDAT / SOS with ≥ 64 clamped
-  * content bytes; anything else emits no row. Scale shape: per-row hex
-  * arithmetic (one gated fold + 64 fixed probes), an 8-byte sketch,
+  * content bytes; anything else emits no row. Scale shape: one bounded
+  * walk + 64 fixed hex probes per row, an 8-byte sketch,
   * the shared [[Hamming64]] banding with pairing PER FORMAT (a PNG
   * sketch never band-joins a JPEG sketch).
   */
@@ -66,42 +66,13 @@ object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
   private def jpgMagic: Column =
     col("n_bytes") >= 4L && substring(col("h"), 1, 4) === "FFD8"
 
-  // ---- the JPEG SOS walk ----------------------------------------------------
+  // ---- the JPEG SOS walk, DuckDB spelling -----------------------------------
   //
-  // Same bounded 0xFF-marker hop as Media's dimension walk, different
+  // Same bounded 0xFF-marker hop as the dimension walk, different
   // terminal: SOFn segments are ordinary variable-length hops here, and
   // the walk resolves at the first SOS (FFDA), recording where its
-  // segment header ENDS — the entropy stream's first byte.
-
-  private[graft] val SosWalkChunks = 8
-
-  /** The SOS walk as ONE `aggregate` fold (Spark side). */
-  private[multimodal] val jpgSosAggSql: String = {
-    val m = "substring(h, CAST(acc.off * 2 + 1 AS INT), 4)"
-    val len = Media.dynBeSql("acc.off + 2", 2)
-    val standalone = "('FF01','FFD0','FFD1','FFD2','FFD3','FFD4','FFD5','FFD6','FFD7','FFD8')"
-    s"""aggregate(
-       |  sequence(1, $SosWalkChunks),
-       |  named_struct(
-       |    'off', CASE WHEN n_bytes >= 4 AND substring(h, 1, 4) = 'FFD8'
-       |      THEN CAST(2 AS BIGINT) END,
-       |    'sdata', CAST(NULL AS BIGINT)),
-       |  (acc, step) -> CASE
-       |    WHEN acc.off IS NULL OR n_bytes < acc.off + 4 THEN
-       |      named_struct('off', CAST(NULL AS BIGINT), 'sdata', acc.sdata)
-       |    ELSE named_struct(
-       |      'off', CASE
-       |        WHEN $m = 'FFDA' THEN CAST(NULL AS BIGINT)
-       |        WHEN $m IN $standalone THEN acc.off + 2
-       |        WHEN substring(h, CAST(acc.off * 2 + 1 AS INT), 2) = 'FF'
-       |          AND $m <> 'FFD9' AND $len >= 2
-       |          THEN acc.off + 2 + $len
-       |        ELSE CAST(NULL AS BIGINT) END,
-       |      'sdata', coalesce(acc.sdata, CASE WHEN $m = 'FFDA'
-       |        AND $len >= 2 THEN acc.off + 2 + $len END))
-       |    END,
-       |  acc -> acc.sdata)""".stripMargin
-  }
+  // segment header ENDS — the entropy stream's first byte. Spark runs it
+  // as [[ContainerWalk.sos]].
 
   /** DuckDB twin of the SOS walk: chained CTEs over `src`; final stage
     * `sfin` carries `sos_data`. */
@@ -112,7 +83,7 @@ object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
       "AND substring(h, 1, 4) = 'FFD8' THEN CAST(2 AS BIGINT) END " +
       s"AS soff0 FROM $src)")
     var prev = "s0"
-    for (k <- 0 until SosWalkChunks) {
+    for (k <- 0 until ContainerWalk.SosWalkChunks) {
       val live = s"soff$k IS NOT NULL AND n_bytes >= soff$k + 4"
       sb.append(s""",
         |sa$k AS MATERIALIZED (SELECT *,
@@ -122,7 +93,7 @@ object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
         |    THEN CAST(${Media.dynBeSql(s"soff$k + 2", 2)} AS BIGINT) END AS sl$k
         |  FROM $prev)""".stripMargin)
       prev = s"sa$k"
-      if (k < SosWalkChunks - 1) {
+      if (k < ContainerWalk.SosWalkChunks - 1) {
         sb.append(s""",
           |sb$k AS MATERIALIZED (SELECT *, CASE
           |  WHEN sm$k = 'FFDA' THEN CAST(NULL AS BIGINT)
@@ -133,7 +104,7 @@ object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
         prev = s"sb$k"
       }
     }
-    val sdata = (0 until SosWalkChunks).map(k =>
+    val sdata = (0 until ContainerWalk.SosWalkChunks).map(k =>
       s"CASE WHEN sm$k = 'FFDA' AND sl$k >= 2 THEN soff$k + 2 + sl$k END")
       .mkString("COALESCE(", ", ", ")")
     sb.append(s""",
@@ -207,14 +178,14 @@ object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
 
   // ---- the hash over an arbitrary payload relation ---------------------------
 
-  /** The hash over `(media_id, h, n_bytes)`: PNG walk + SOS walk →
-    * per-kind span → 64 probes → vote. */
+  /** The hash over `(media_id, payload, h, n_bytes)`: PNG walk + SOS
+    * walk over the payload → per-kind span → 64 hex probes → vote. */
   private[graft] def ahashOfHexMaybeCk(sized: DataFrame,
       checkpoint: Boolean, keep: Seq[String] = Nil): DataFrame = {
     val walked0 = sized
       .filter(Media.pngMagic || jpgMagic)
-      .withColumn("pk", Media.gatedWalk(Media.pngMagic, Media.pngAggSql))
-      .withColumn("sdata", when(jpgMagic, expr(jpgSosAggSql)))
+      .withColumn("cw", Media.walksOf(sized))
+      .drop("payload")
     val walked = if (checkpoint) walked0.localCheckpoint() else walked0
     // trailing-EOI adjustment: the entropy stream ends before a final
     // FFD9 when one is present (a truncated upload has none)
@@ -223,11 +194,11 @@ object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
       .otherwise(0L)
     val span = walked.select(keep.map(col) ++ Seq(col("media_id"), col("h"),
         when(Media.pngMagic, lit("png")).otherwise(lit("jpeg")).as("kind"),
-        when(Media.pngMagic, col("pk.idat_off")).otherwise(col("sdata"))
-          .as("span_off"),
+        when(Media.pngMagic, col("cw.png.idat_off"))
+          .otherwise(col("cw.sos.sdata")).as("span_off"),
         when(Media.pngMagic,
-            least(col("pk.idat_len"), col("n_bytes") - col("pk.idat_off")))
-          .otherwise(col("n_bytes") - col("sdata") - eoiAdj)
+            least(col("cw.png.idat_len"), col("n_bytes") - col("cw.png.idat_off")))
+          .otherwise(col("n_bytes") - col("cw.sos.sdata") - eoiAdj)
           .as("n_units")): _*)
       .filter(col("span_off").isNotNull && col("n_units") >= Probes.toLong)
     // probe + vote ride the shared Hamming64 body
@@ -235,13 +206,12 @@ object CompressedImageHash extends MediaFamily("cimage", "pic", "ci_",
       ((keep :+ "media_id") ++ sketchCols).map(col))
   }
 
-  /** Test seam: the declarative SOS walk over an arbitrary payload
-    * frame — what lets the spec cross-check the fold against an
-    * imperative reference walker on RANDOM segment layouts. */
+  /** Test seam: the SOS walk over an arbitrary payload frame — what
+    * lets the spec cross-check it against reference walkers on RANDOM
+    * segment layouts. */
   private[graft] def sosColumns(payloads: DataFrame): DataFrame =
-    payloads.select(col("media_id"), hex(col("payload")).as("h"),
-        length(col("payload")).cast("long").as("n_bytes"))
-      .withColumn("sos_data", expr(jpgSosAggSql))
+    payloads.select(col("media_id"),
+      Media.walksOf(payloads).getField("sos").getField("sdata").as("sos_data"))
 
   /** The PNG-walk + SOS-walk → per-kind span → 64-probe → hash chain,
     * DuckDB side. The walk CTEs ([[Media.pngCteSql]], [[jpgSosCteSql]])

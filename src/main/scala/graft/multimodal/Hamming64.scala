@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.SessionCache.{PlanKey, planKey}
 
 /** The ONE banded-Hamming pairing body every 64-bit sketch family
   * rides — image aHash ([[ImageHash]]), audio amplitude hash
@@ -175,13 +176,13 @@ private[graft] object Hamming64 {
     * never even builds the pairing join and cannot key on its plan).
     * Capacity 4: one slot per family's live sketch. */
   private val clusterCache =
-    new graft.SessionCache[(Int, Int, String), DataFrame](capacity = 4)
+    new graft.SessionCache[(PlanKey, Int, String), DataFrame](capacity = 4)
   private[graft] def clusterBuilds = clusterCache.builds
 
   private def labeledClusters(sk: DataFrame, maxHamming: Int,
       pairsTag: String, pairs: => DataFrame): DataFrame =
     clusterCache.getOrBuild(sk.sparkSession,
-        (sk.queryExecution.analyzed.semanticHash(), maxHamming, pairsTag)) {
+        (planKey(sk), maxHamming, pairsTag)) {
       graft.text.Dedup.dedupClustersFromPairsStar(
         sk.select(col("media_id").as("doc_id")), pairs).localCheckpoint()
     }

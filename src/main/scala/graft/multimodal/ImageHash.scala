@@ -127,8 +127,7 @@ object ImageHash extends MediaFamily("image", "img", "img_",
     *
     * The Spark side computes the 64 grid cells as ONE bounded
     * `transform` over `sequence(0, 63)` plus two bounded `aggregate`
-    * folds — the [[Media]] walk discipline, and for the same reason:
-    * unrolling the cells into 64 plain columns packs ~6400 substring
+    * folds: unrolling the cells into 64 plain columns packs ~6400 substring
     * ops into a single fused `processNext()` past janino's method
     * limit, and the WHOLE stage (scan included) falls back to
     * interpreted (observed, not guessed). The HOFs are interpreted but

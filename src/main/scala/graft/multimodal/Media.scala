@@ -51,16 +51,18 @@ case class MediaDecoded(media_id: Long, fmt: String,
   *  - ingestion normalizes to `(media_id, payload BINARY, fmt, meta)` —
   *    the schema a 100 TB media lake stores (payload column prunes away
   *    for metadata-only queries; parquet keeps binaries row-group-local);
-  *  - [[Media.mediaFeatures]] runs the decode as pure built-in
-  *    expressions over the hex encoding (codegen-friendly,
-  *    oracle-checkable in DuckDB byte-for-byte);
+  *  - [[Media.mediaFeatures]] runs the decode as Catalyst
+  *    expressions: the bounded container walks are ONE native
+  *    expression over the binary payload (`container_walks_of_binary`,
+  *    running [[ContainerWalk]]), the constant-offset BMP/GIF reads and
+  *    the magic sniffs are built-ins over the hex encoding, and the
+  *    DuckDB oracle spells every rule again in SQL;
   *  - [[Media.mediaFeaturesPartitioned]] runs the SAME decode through
-  *    `Dataset.mapPartitions` ([[Media.realDecode]] on actual bytes) —
-  *    the Scala twin of Python's `mapInPandas` batch-UDF surface: one
-  *    iterator per partition, arbitrary JVM code (JNI codec, model
-  *    inference) per record, typed output schema. A spec asserts the
-  *    two plans agree row-for-row, so the imperative boundary is pinned
-  *    to the declarative semantics.
+  *    `Dataset.mapPartitions` ([[Media.realDecode]] on actual bytes,
+  *    calling the same [[ContainerWalk]]) — the Scala twin of Python's
+  *    `mapInPandas` batch-UDF surface: one iterator per partition,
+  *    arbitrary JVM code (JNI codec, model inference) per record, typed
+  *    output schema. A spec asserts the two plans agree row-for-row.
   *
   * The fixtures ship no binary table, so ingestion derives payloads
   * from `documents.text` (UTF-8 bytes), and
@@ -69,6 +71,7 @@ case class MediaDecoded(media_id: Long, fmt: String,
   * round-trips honest container bytes end to end.
   */
 object Media {
+  import ContainerWalk.{Mp4WalkChunks, WalkChunks}
 
   /** Ingestion: documents → media-lake schema. `payload` is the opaque
     * binary column; `fmt` plays the role of the container/codec tag. */
@@ -79,8 +82,8 @@ object Media {
       col("source").as("fmt"),
       struct(col("n_chars"), col("lang")).as("meta"))
 
-  /** The REAL per-record decoder: generic byte statistics plus the
-    * BMP / canonical-WAV header parse, on actual payload bytes. This is
+  /** The REAL per-record decoder: generic byte statistics plus the six
+    * container parses, on actual payload bytes. This is
     * the function running inside the [[mediaFeaturesPartitioned]] batch
     * boundary — a pipeline adding a true pixel/sample codec extends it
     * here. NULL payloads report NULL stats (the declarative twin's
@@ -95,24 +98,19 @@ object Media {
     bytes.foreach { b => sum += (b & 0xff); if ((b & 0xff) >= 0x80) hi += 1 }
     def le(off: Int, n: Int): Long =
       (0 until n).map(k => (bytes(off + k) & 0xffL) << (8 * k)).sum
-    def be(off: Int, n: Int): Long =
-      (0 until n).map(k => (bytes(off + k) & 0xffL) << (8 * (n - 1 - k))).sum
     def ascii(off: Int, s: String): Boolean =
       bytes.length >= off + s.length &&
         s.indices.forall(i => (bytes(off + i) & 0xff) == s.charAt(i).toInt)
-    def magic(off: Int, ms: Int*): Boolean =
-      bytes.length >= off + ms.length &&
-        ms.indices.forall(i => (bytes(off + i) & 0xff) == ms(i))
     val base = MediaDecoded(m.media_id, m.fmt, Some(bytes.length.toLong),
       Some(header), Some(sum), Some(hi), Some("raw"),
       None, None, None, None, None, None)
     // Each container gets an INDEPENDENT detector (None = its magic or
-    // its walk did not resolve), picked in the declarative twin's CASE
-    // order. The precedence chain matters beyond style: MP4's magic
-    // lives at byte 4, so adversarial bytes can carry it UNDER a
-    // JPEG/RIFF magic at byte 0 — an if/else chain that consumed the
-    // payload on the first magic would then diverge from the fold
-    // surface, which always evaluates every detector and falls through.
+    // its walk did not resolve), picked in [[KindOrder]]. The precedence
+    // chain matters beyond style: MP4's magic lives at byte 4, so
+    // adversarial bytes can carry it UNDER a JPEG/RIFF magic at byte 0 —
+    // an if/else chain that consumed the payload on the first magic
+    // would then diverge from [[mediaFeatures]], which always runs every
+    // walk and falls through.
     def bmpOpt: Option[MediaDecoded] =
       if (bytes.length >= 54 && ascii(0, "BM"))
         Some(base.copy(kind = Some("bmp"), width = Some(le(18, 4)),
@@ -130,124 +128,24 @@ object Media {
           height = Some(le(8, 2)), bpp = Some((le(10, 1) & 7) + 1),
           channels = Some(1L)))
       else None
+    // the four walked containers: one walker, shared with every Spark
+    // plan through the `container_walks_of_binary` expression
     def pngOpt: Option[MediaDecoded] =
-      if (magic(0, 0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)) {
-      // bounded PNG chunk walk — length-prefixed BIG-endian chunks
-      // (uint32 BE length + 4-byte type + payload + 4-byte CRC, no
-      // padding) from byte 8 until `IHDR`; the spec puts IHDR first but
-      // a lenient decoder walks past misplaced ancillary chunks, and
-      // the walk IS the canonical-first case's parse anyway. The IHDR
-      // payload must be complete (13 bytes) to be trusted.
-      var off = 8L
-      var ihdr = -1L
-      var k = 0
-      while (k < WalkChunks && bytes.length >= off + 8) {
-        val len = be(off.toInt, 4)
-        if (ihdr < 0 && ascii(off.toInt + 4, "IHDR") && len >= 13 &&
-            bytes.length >= off + 21) ihdr = off + 8
-        off = off + 12 + len
-        k += 1
-      }
-      if (ihdr >= 0)
-        Some(base.copy(kind = Some("png"), width = Some(be(ihdr.toInt, 4)),
-          height = Some(be(ihdr.toInt + 4, 4)), bpp = Some(be(ihdr.toInt + 8, 1)),
-          channels = pngChannels(be(ihdr.toInt + 9, 1))))
-      else None
-    } else None
+      ContainerWalk.png(bytes).filter(_.ihdrOff.isDefined).map(p =>
+        base.copy(kind = Some("png"), width = p.w, height = p.ht,
+          bpp = p.depth, channels = p.ctype.flatMap(pngChannels)))
     def jpgOpt: Option[MediaDecoded] =
-      if (magic(0, 0xff, 0xd8)) {
-      // bounded JPEG marker-segment walk — 0xFF-marker + uint16 BE
-      // length (length includes its own 2 bytes) from byte 2, hopping
-      // APPn/COM/DQT/DHT/DRI, skipping standalone markers (TEM, RSTn,
-      // a stray SOI), stopping at EOI/SOS/garbage, until SOF0/1/2; the
-      // frame header must be readable (precision + h + w + ncomp =
-      // 6 bytes past the length) to be trusted.
-      var off = 2L
-      var sof = -1L
-      var stop = false
-      var k = 0
-      while (k < WalkChunks && !stop && bytes.length >= off + 4) {
-        val m1 = bytes(off.toInt) & 0xff
-        val m2 = bytes(off.toInt + 1) & 0xff
-        if (m1 == 0xff && (m2 == 0xc0 || m2 == 0xc1 || m2 == 0xc2)) {
-          if (bytes.length >= off + 10) sof = off + 4
-          stop = true
-        } else if (m1 == 0xff && (m2 == 0x01 || (m2 >= 0xd0 && m2 <= 0xd8))) {
-          off += 2
-        } else if (m1 == 0xff && m2 != 0xd9 && m2 != 0xda) {
-          val len = be(off.toInt + 2, 2)
-          if (len >= 2) off += 2 + len else stop = true
-        } else stop = true
-        k += 1
-      }
-      if (sof >= 0)
-        Some(base.copy(kind = Some("jpeg"), width = Some(be(sof.toInt + 3, 2)),
-          height = Some(be(sof.toInt + 1, 2)), bpp = Some(be(sof.toInt, 1)),
-          channels = Some(be(sof.toInt + 5, 1))))
-      else None
-    } else None
+      ContainerWalk.jpeg(bytes).filter(_.sofOff.isDefined).map(j =>
+        base.copy(kind = Some("jpeg"), width = j.w, height = j.ht,
+          bpp = j.prec, channels = j.ncomp))
     def mp4Opt: Option[MediaDecoded] =
-      if (bytes.length >= 12 && ascii(4, "ftyp")) {
-      // bounded ISO-BMFF (MP4) box walk — uint32 BE size + 4-byte type.
-      // The NESTED containers `moov` and `trak` DESCEND into their
-      // payload (off + 8) instead of hopping; every other box hops by
-      // its declared size (size < 8 = no forward progress, stop). The
-      // first COMPLETE `tkhd` (84-byte payload for version 0, 96 for
-      // version 1) carries presentation width/height as 16.16 fixed
-      // point after the 36-byte transform matrix — the integer part is
-      // the dimension. First match wins; the walk mirrors the
-      // declarative fold exactly (continues after a find).
-      var off = 0L
-      var tkhd = -1L
-      var k = 0
-      while (k < Mp4WalkChunks && off >= 0 && bytes.length >= off + 8) {
-        val sz = be(off.toInt, 4)
-        if (tkhd < 0 && ascii(off.toInt + 4, "tkhd") &&
-            bytes.length >= off + 9) {
-          val v = be(off.toInt + 8, 1)
-          val need = if (v == 1) 96L else 84L
-          if (bytes.length >= off + 8 + need) tkhd = off + 8
-        }
-        if (ascii(off.toInt + 4, "moov") || ascii(off.toInt + 4, "trak"))
-          off += 8
-        else if (sz >= 8) off += sz
-        else off = -1
-        k += 1
-      }
-      if (tkhd >= 0) {
-        val v = be(tkhd.toInt, 1)
-        val woff = tkhd.toInt + (if (v == 1) 88 else 76)
-        Some(base.copy(kind = Some("mp4"),
-          width = Some(be(woff, 4) / 65536),
-          height = Some(be(woff + 4, 4) / 65536)))
-      } else None
-    } else None
+      ContainerWalk.mp4(bytes).filter(_.tkhdOff.isDefined).map(m =>
+        base.copy(kind = Some("mp4"), width = m.w, height = m.ht))
     def wavOpt: Option[MediaDecoded] =
-      if (bytes.length >= 44 && ascii(0, "RIFF") && ascii(8, "WAVE")) {
-      // bounded RIFF chunk walk — the typed twin of the declarative
-      // walk in [[mediaFeatures]]: real files carry LIST/fact/cue
-      // chunks before `data`, so `fmt `-at-12/`data`-at-36 is only the
-      // canonical SUBSET. First match wins per chunk id; the `fmt `
-      // payload must be complete (16 bytes) to be trusted.
-      var off = 12L
-      var fmtOff = -1L
-      var dataOff = -1L
-      var k = 0
-      while (k < WalkChunks && off >= 0 && bytes.length >= off + 8) {
-        val sz = le(off.toInt + 4, 4)
-        if (fmtOff < 0 && ascii(off.toInt, "fmt ") && sz >= 16 &&
-            bytes.length >= off + 24) fmtOff = off + 8
-        if (dataOff < 0 && ascii(off.toInt, "data")) dataOff = off + 8
-        off = off + 8 + sz + (sz % 2)
-        k += 1
-      }
-      if (fmtOff >= 0 && dataOff >= 0)
-        Some(base.copy(kind = Some("wav"),
-          channels = Some(le(fmtOff.toInt + 2, 2)),
-          sample_rate = Some(le(fmtOff.toInt + 4, 4)),
-          bits = Some(le(fmtOff.toInt + 14, 2))))
-      else None
-    } else None
+      ContainerWalk.riff(bytes)
+        .filter(r => r.fmtOff.isDefined && r.dataOff.isDefined).map(r =>
+          base.copy(kind = Some("wav"), channels = r.channels,
+            sample_rate = r.sampleRate, bits = r.bits))
     bmpOpt.orElse(gifOpt).orElse(pngOpt).orElse(jpgOpt)
       .orElse(mp4Opt).orElse(wavOpt).getOrElse(base)
   }
@@ -338,24 +236,17 @@ object Media {
       s"substring($base, CAST($p * 2 + 3 AS INT))"
   }
 
-  // ---- bounded RIFF chunk walk ------------------------------------------
+  // ---- the container walks, DuckDB spelling -------------------------------
   //
-  // Real-world RIFF files carry `LIST`/`fact`/`cue ` chunks between the
-  // header and `data`; assuming the canonical 44-byte layout silently
-  // demotes such files to `raw`. The walk below reads (chunk id, chunk
-  // size) pairs from byte 12, hopping size+pad bytes, for a BOUNDED
-  // number of steps. Two spellings of the same arithmetic: DuckDB gets
-  // a chain of per-step CTE columns; Spark gets a single `aggregate`
-  // fold (see [[walkAggSql]] for why the column chain is unsafe under
-  // Catalyst's substituting predicate pushdown). The per-step SQL
-  // fragments (substring/instr/CASE only) are shared where the
-  // dialects allow.
+  // Spark runs the bounded RIFF / PNG / JPEG / MP4 walks as
+  // [[ContainerWalk]] over the binary payload (one
+  // `container_walks_of_binary` expression, see [[walksOf]]). The oracle
+  // spells the same rules, step bounds included, as chains of per-step
+  // CTE columns over the hex string, beginning with RIFF: (chunk id,
+  // chunk size) pairs from byte 12, hopping size + pad bytes.
 
-  /** Chunks inspected before giving up — covers canonical (data is
-    * chunk #1) plus LIST/fact/cue /bext padding in front of it. */
-  private[graft] val WalkChunks = 6
-  private val HexFmt = "666D7420" // 'fmt '
-  private val HexData = "64617461" // 'data'
+  private[multimodal] val HexFmt = "666D7420" // 'fmt '
+  private[multimodal] val HexData = "64617461" // 'data'
 
   /** Little-endian read at a DYNAMIC byte offset (`off` is a SQL
     * expression over prior columns, not a constant) of hex column `h`.
@@ -386,7 +277,7 @@ object Media {
     }.mkString("(", " + ", ")")
 
   /** Walk entry: byte 12 for RIFF/WAVE payloads, NULL otherwise. */
-  private val walkOff0Sql: String =
+  private[multimodal] val walkOff0Sql: String =
     "CASE WHEN n_bytes >= 44 AND substring(h, 1, 8) = '52494646' " +
       "AND substring(h, 17, 8) = '57415645' THEN CAST(12 AS BIGINT) END"
 
@@ -419,65 +310,11 @@ object Media {
       s"CASE WHEN cid$k = '$HexData' THEN csz$k END")
       .mkString("COALESCE(", ", ", ")"))
 
-  /** The walk as ONE `aggregate` fold on the Spark side — NOT the
-    * per-step column chain the DuckDB twin uses. The chain spelling is
-    * correct but fatal under Catalyst: any later filter on a walked
-    * column (audioFrames' WAV gate) is pushed down through the 19
-    * step projections by SUBSTITUTION, and since every step references
-    * its predecessor several times the substituted predicate grows
-    * ~4^steps — the optimizer itself OOMs. The fold is a single
-    * bounded expression evaluated iteratively per row (6 steps of
-    * header arithmetic; an interpreted HOF, but constant and tiny —
-    * nothing like the Dim×n lambda the dim_shares ban is about), so
-    * pushdown duplicates O(1) expression text. Semantics are the CTE
-    * chain's exactly: first match per chunk id, walk continues past
-    * found chunks, dies when the next header would cross the end. */
-  private[multimodal] val walkAggSql: String = {
-    val id = "substring(h, CAST(acc.off * 2 + 1 AS INT), 8)"
-    val sz = dynLeSql("acc.off + 4", 4)
-    s"""aggregate(
-       |  sequence(1, $WalkChunks),
-       |  named_struct(
-       |    'off', $walkOff0Sql,
-       |    'fmt_off', CAST(NULL AS BIGINT),
-       |    'data_off', CAST(NULL AS BIGINT),
-       |    'data_len', CAST(NULL AS BIGINT)),
-       |  (acc, step) -> CASE
-       |    WHEN acc.off IS NULL OR n_bytes < acc.off + 8 THEN
-       |      named_struct('off', CAST(NULL AS BIGINT), 'fmt_off', acc.fmt_off,
-       |        'data_off', acc.data_off, 'data_len', acc.data_len)
-       |    ELSE named_struct(
-       |      'off', acc.off + 8 + $sz + ($sz % 2),
-       |      'fmt_off', coalesce(acc.fmt_off, CASE WHEN $id = '$HexFmt'
-       |        AND $sz >= 16 AND n_bytes >= acc.off + 24 THEN acc.off + 8 END),
-       |      'data_off', coalesce(acc.data_off,
-       |        CASE WHEN $id = '$HexData' THEN acc.off + 8 END),
-       |      'data_len', coalesce(acc.data_len,
-       |        CASE WHEN $id = '$HexData' THEN $sz END))
-       |    END,
-       |  acc -> named_struct(
-       |    'fmt_off', acc.fmt_off,
-       |    'data_off', acc.data_off,
-       |    'data_len', acc.data_len,
-       |    'channels', CASE WHEN acc.fmt_off IS NOT NULL
-       |      THEN CAST(${dynLeSql("acc.fmt_off + 2", 2)} AS BIGINT) END,
-       |    'sample_rate', CASE WHEN acc.fmt_off IS NOT NULL
-       |      THEN CAST(${dynLeSql("acc.fmt_off + 4", 4)} AS BIGINT) END,
-       |    'bits', CASE WHEN acc.fmt_off IS NOT NULL
-       |      THEN CAST(${dynLeSql("acc.fmt_off + 14", 2)} AS BIGINT) END))""".stripMargin
-  }
+  // PNG: uint32 BE length + 4-byte type + payload + 4-byte CRC chunks
+  // from byte 8. The spec puts IHDR first; the walk also hops misplaced
+  // ancillary chunks in front of it.
 
-  // ---- bounded PNG chunk walk ---------------------------------------------
-  //
-  // PNG after its 8-byte signature is length-prefixed BIG-endian chunks:
-  // uint32 BE length + 4-byte type + payload + 4-byte CRC, no padding.
-  // The spec mandates IHDR first, but the decode is the same bounded
-  // walk as RIFF's (a lenient parser hops misplaced ancillary chunks;
-  // the canonical layout is the walk's first-step case), so the engine
-  // reuses the proven fold/CTE discipline verbatim — only the
-  // endianness and the hop arithmetic (12 + len, no pad) differ.
-
-  private val HexIhdr = "49484452" // 'IHDR'
+  private[multimodal] val HexIhdr = "49484452" // 'IHDR'
   private[multimodal] val PngSigHex = "89504E470D0A1A0A"
 
   /** PNG color type → channels, as a SQL CASE over expression `c` —
@@ -486,136 +323,28 @@ object Media {
     s"CASE WHEN ($c) IN (0, 3) THEN 1 WHEN ($c) = 2 THEN 3 " +
       s"WHEN ($c) = 4 THEN 2 WHEN ($c) = 6 THEN 4 END"
 
-  private val HexIdat = "49444154" // 'IDAT'
+  private[multimodal] val HexIdat = "49444154" // 'IDAT'
 
-  /** The PNG walk as ONE `aggregate` fold (Spark side) — same
-    * plan-explosion rationale as [[walkAggSql]]. Finds the first
-    * complete IHDR (13-byte payload present) and reads width/height
-    * (uint32 BE), bit depth, and color type at the WALKED offset; also
-    * tracks the FIRST `IDAT` chunk (payload offset + declared length —
-    * the r14 compressed-content find, the `mdat` precedent). */
-  private[multimodal] val pngAggSql: String = {
-    val len = dynBeSql("acc.off", 4)
-    val typ = "substring(h, CAST((acc.off + 4) * 2 + 1 AS INT), 8)"
-    s"""aggregate(
-       |  sequence(1, $WalkChunks),
-       |  named_struct(
-       |    'off', CASE WHEN n_bytes >= 16 AND substring(h, 1, 16) = '$PngSigHex'
-       |      THEN CAST(8 AS BIGINT) END,
-       |    'ihdr', CAST(NULL AS BIGINT),
-       |    'idat', CAST(NULL AS BIGINT),
-       |    'ilen', CAST(NULL AS BIGINT)),
-       |  (acc, step) -> CASE
-       |    WHEN acc.off IS NULL OR n_bytes < acc.off + 8 THEN
-       |      named_struct('off', CAST(NULL AS BIGINT), 'ihdr', acc.ihdr,
-       |        'idat', acc.idat, 'ilen', acc.ilen)
-       |    ELSE named_struct(
-       |      'off', acc.off + 12 + $len,
-       |      'ihdr', coalesce(acc.ihdr, CASE WHEN $typ = '$HexIhdr'
-       |        AND $len >= 13 AND n_bytes >= acc.off + 21 THEN acc.off + 8 END),
-       |      'idat', coalesce(acc.idat, CASE WHEN $typ = '$HexIdat'
-       |        THEN acc.off + 8 END),
-       |      'ilen', coalesce(acc.ilen, CASE WHEN $typ = '$HexIdat'
-       |        THEN $len END))
-       |    END,
-       |  acc -> named_struct(
-       |    'ihdr_off', acc.ihdr,
-       |    'w', CASE WHEN acc.ihdr IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.ihdr", 4)} AS BIGINT) END,
-       |    'ht', CASE WHEN acc.ihdr IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.ihdr + 4", 4)} AS BIGINT) END,
-       |    'depth', CASE WHEN acc.ihdr IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.ihdr + 8", 1)} AS BIGINT) END,
-       |    'ctype', CASE WHEN acc.ihdr IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.ihdr + 9", 1)} AS BIGINT) END,
-       |    'idat_off', acc.idat,
-       |    'idat_len', acc.ilen))""".stripMargin
-  }
+  // MP4 (ISO-BMFF): uint32 BE size + 4-byte type boxes; the video
+  // dimensions live NESTED at moov → trak → tkhd, so a `moov` or `trak`
+  // box DESCENDS into its payload (off + 8) instead of hopping over it.
 
-  // ---- bounded JPEG marker-segment walk -----------------------------------
-  //
-  // JPEG after SOI (FFD8) is 0xFF-marker segments with uint16 BE
-  // lengths that INCLUDE the 2 length bytes. The walk hops
-  // APPn/COM/DQT/DHT/DRI by their declared length, steps over
-  // standalone markers (TEM, RSTn, a stray SOI — no length field),
-  // stops at EOI/SOS/garbage, and resolves at SOF0/SOF1/SOF2, whose
-  // frame header carries precision, height, width (both uint16 BE),
-  // and the component count.
-
-  /** The JPEG walk as ONE `aggregate` fold (Spark side). The SOF frame
-    * header must be readable (6 bytes past the length) to be trusted;
-    * a declared segment length < 2 is malformed (no forward progress)
-    * and stops the walk. */
-  private val jpgAggSql: String = {
-    val m = "substring(h, CAST(acc.off * 2 + 1 AS INT), 4)"
-    val len = dynBeSql("acc.off + 2", 2)
-    val standalone = "('FF01','FFD0','FFD1','FFD2','FFD3','FFD4','FFD5','FFD6','FFD7','FFD8')"
-    s"""aggregate(
-       |  sequence(1, $WalkChunks),
-       |  named_struct(
-       |    'off', CASE WHEN n_bytes >= 4 AND substring(h, 1, 4) = 'FFD8'
-       |      THEN CAST(2 AS BIGINT) END,
-       |    'sof', CAST(NULL AS BIGINT)),
-       |  (acc, step) -> CASE
-       |    WHEN acc.off IS NULL OR n_bytes < acc.off + 4 THEN
-       |      named_struct('off', CAST(NULL AS BIGINT), 'sof', acc.sof)
-       |    ELSE named_struct(
-       |      'off', CASE
-       |        WHEN $m IN ('FFC0','FFC1','FFC2') THEN CAST(NULL AS BIGINT)
-       |        WHEN $m IN $standalone THEN acc.off + 2
-       |        WHEN substring(h, CAST(acc.off * 2 + 1 AS INT), 2) = 'FF'
-       |          AND $m NOT IN ('FFD9','FFDA') AND $len >= 2
-       |          THEN acc.off + 2 + $len
-       |        ELSE CAST(NULL AS BIGINT) END,
-       |      'sof', coalesce(acc.sof, CASE WHEN $m IN ('FFC0','FFC1','FFC2')
-       |        AND n_bytes >= acc.off + 10 THEN acc.off + 4 END))
-       |    END,
-       |  acc -> named_struct(
-       |    'sof_off', acc.sof,
-       |    'prec', CASE WHEN acc.sof IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.sof", 1)} AS BIGINT) END,
-       |    'ht', CASE WHEN acc.sof IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.sof + 1", 2)} AS BIGINT) END,
-       |    'w', CASE WHEN acc.sof IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.sof + 3", 2)} AS BIGINT) END,
-       |    'ncomp', CASE WHEN acc.sof IS NOT NULL
-       |      THEN CAST(${dynBeSql("acc.sof + 5", 1)} AS BIGINT) END))""".stripMargin
-  }
-
-  // ---- bounded MP4 (ISO-BMFF) box walk --------------------------------------
-  //
-  // ISO-BMFF is uint32 BE size + 4-byte type boxes; the video
-  // dimensions live NESTED at moov → trak → tkhd. The walk stays the
-  // proven flat fold with one new move: a `moov` or `trak` box
-  // DESCENDS into its payload (off + 8) instead of hopping over it, so
-  // the nesting costs zero extra machinery. A complete `tkhd` payload
-  // (84 bytes at version 0, 96 at version 1) carries width/height as
-  // 16.16 fixed point after the transform matrix.
-
-  /** MP4 walks descend, so the step budget covers
-    * ftyp · free · moov↓ · mvhd · udta · trak↓ · tkhd · mdat with
-    * headroom (r14: `mdat` joined the tracked finds — the ext layout
-    * reaches it at step 8, so the bound grew 8 → 10; all three
-    * spellings share this constant, so the widened walk stays
-    * bit-agreed). */
-  private[graft] val Mp4WalkChunks = 10
-
-  private val HexMoov = "6D6F6F76"
-  private val HexTrak = "7472616B"
-  private val HexTkhd = "746B6864"
-  private val HexFtyp = "66747970"
-  private val HexMvhd = "6D766864"
-  private val HexMdat = "6D646174"
+  private[multimodal] val HexMoov = "6D6F6F76"
+  private[multimodal] val HexTrak = "7472616B"
+  private[multimodal] val HexTkhd = "746B6864"
+  private[multimodal] val HexFtyp = "66747970"
+  private[multimodal] val HexMvhd = "6D766864"
+  private[multimodal] val HexMdat = "6D646174"
 
   /** Complete-`mvhd` payload length by version: v0 carries 32-bit
     * times (100-byte payload), v1 64-bit (112). */
-  private def mvhdNeedSql(v: String): String =
+  private[multimodal] def mvhdNeedSql(v: String): String =
     s"(CASE WHEN $v = 1 THEN 112 ELSE 100 END)"
 
   /** `mvhd` movie timescale at payload offset `m` — after
     * version+flags and the creation/modification times, whose width is
     * what the version changes (v0: 4+4+4 → 12; v1: 4+8+8 → 20). */
-  private def mvhdTsSql(m: String): String =
+  private[multimodal] def mvhdTsSql(m: String): String =
     s"CASE WHEN ${dynBeSql(m, 1)} = 1 THEN ${dynBeSql(s"($m) + 20", 4)} " +
       s"ELSE ${dynBeSql(s"($m) + 12", 4)} END"
 
@@ -624,7 +353,7 @@ object Media {
     * otherwise) — a duration past 2³² ticks would push the positional
     * multiply past int64 under ANSI, and no real presentation carries
     * one (2³² ticks at the common 600-tick scale is 82 days). */
-  private def mvhdDurSql(m: String): String =
+  private[multimodal] def mvhdDurSql(m: String): String =
     s"CASE WHEN ${dynBeSql(m, 1)} = 1 THEN " +
       s"(CASE WHEN ${dynBeSql(s"($m) + 24", 4)} = 0 " +
       s"THEN ${dynBeSql(s"($m) + 28", 4)} END) " +
@@ -632,64 +361,8 @@ object Media {
 
   /** tkhd payload offset of the width field (the version byte decides
     * the timestamp widths): SQL over a payload-offset expression `t`. */
-  private def tkhdWoffSql(t: String): String =
+  private[multimodal] def tkhdWoffSql(t: String): String =
     s"(($t) + (CASE WHEN ${dynBeSql(t, 1)} = 1 THEN 88 ELSE 76 END))"
-
-  /** The MP4 walk as ONE `aggregate` fold (Spark side) — same
-    * plan-explosion rationale as [[walkAggSql]]. `mdat` is the third
-    * tracked find (r14, for [[VideoHash]]): its payload offset and
-    * DECLARED length (size − 8), first match wins, same
-    * complete-header discipline as the others. */
-  private[multimodal] val mp4AggSql: String = {
-    val typ = "substring(h, CAST((acc.off + 4) * 2 + 1 AS INT), 8)"
-    val sz = dynBeSql("acc.off", 4)
-    val v = dynBeSql("acc.off + 8", 1)
-    s"""aggregate(
-       |  sequence(1, $Mp4WalkChunks),
-       |  named_struct(
-       |    'off', CASE WHEN n_bytes >= 12 AND substring(h, 9, 8) = '$HexFtyp'
-       |      THEN CAST(0 AS BIGINT) END,
-       |    'tkhd', CAST(NULL AS BIGINT),
-       |    'mvhd', CAST(NULL AS BIGINT),
-       |    'mdat', CAST(NULL AS BIGINT),
-       |    'mlen', CAST(NULL AS BIGINT)),
-       |  (acc, step) -> CASE
-       |    WHEN acc.off IS NULL OR n_bytes < acc.off + 8 THEN
-       |      named_struct('off', CAST(NULL AS BIGINT), 'tkhd', acc.tkhd,
-       |        'mvhd', acc.mvhd, 'mdat', acc.mdat, 'mlen', acc.mlen)
-       |    ELSE named_struct(
-       |      'off', CASE
-       |        WHEN $typ IN ('$HexMoov', '$HexTrak') THEN acc.off + 8
-       |        WHEN $sz >= 8 THEN acc.off + $sz
-       |        ELSE CAST(NULL AS BIGINT) END,
-       |      'tkhd', coalesce(acc.tkhd, CASE WHEN $typ = '$HexTkhd'
-       |        AND n_bytes >= acc.off + 9
-       |        AND n_bytes >= acc.off + 8
-       |          + (CASE WHEN $v = 1 THEN 96 ELSE 84 END)
-       |        THEN acc.off + 8 END),
-       |      'mvhd', coalesce(acc.mvhd, CASE WHEN $typ = '$HexMvhd'
-       |        AND n_bytes >= acc.off + 9
-       |        AND n_bytes >= acc.off + 8 + ${mvhdNeedSql(v)}
-       |        THEN acc.off + 8 END),
-       |      'mdat', coalesce(acc.mdat, CASE WHEN $typ = '$HexMdat'
-       |        AND $sz >= 8 THEN acc.off + 8 END),
-       |      'mlen', coalesce(acc.mlen, CASE WHEN $typ = '$HexMdat'
-       |        AND $sz >= 8 THEN $sz - 8 END))
-       |    END,
-       |  acc -> named_struct(
-       |    'tkhd_off', acc.tkhd,
-       |    'w', CASE WHEN acc.tkhd IS NOT NULL THEN
-       |      CAST(${dynBeSql(tkhdWoffSql("acc.tkhd"), 4)} div 65536 AS BIGINT) END,
-       |    'ht', CASE WHEN acc.tkhd IS NOT NULL THEN
-       |      CAST(${dynBeSql(tkhdWoffSql("acc.tkhd") + " + 4", 4)} div 65536 AS BIGINT) END,
-       |    'mvhd_off', acc.mvhd,
-       |    'mts', CASE WHEN acc.mvhd IS NOT NULL THEN
-       |      CAST(${mvhdTsSql("acc.mvhd")} AS BIGINT) END,
-       |    'mdur', CASE WHEN acc.mvhd IS NOT NULL THEN
-       |      CAST(${mvhdDurSql("acc.mvhd")} AS BIGINT) END,
-       |    'mdat_off', acc.mdat,
-       |    'mdat_len', acc.mlen))""".stripMargin
-  }
 
   /** DuckDB side of the MP4 walk: chained MATERIALIZED CTEs over `src`;
     * final stage `mfin` carries `mp4_tkhd`, `mp4_w`, `mp4_ht`. */
@@ -855,33 +528,35 @@ object Media {
     sb.toString
   }
 
-  /** Spark side: append the walk columns to a frame carrying `h` and
-    * `n_bytes`, then CHECKPOINT. The checkpoint is load-bearing twice
-    * over: it truncates the lineage so no downstream filter can inline
-    * the fold into a pushed-down predicate (re-creating the plan
-    * explosion in one copy-per-reference form), and it guarantees the
-    * fold — including the `fmt ` field reads in the finish lambda —
-    * evaluates exactly ONCE per row, instead of once per consuming
-    * expression after project collapse. */
-  /** Test seam: the declarative walk over an arbitrary payload frame —
-    * what lets MediaSpec cross-check the SQL fold against the
-    * imperative [[realDecode]] walk on RANDOM chunk layouts, not just
-    * the fixture shapes. */
+  // ---- the container walks, Spark side -------------------------------------
+
+  /** The five walks of `df`'s binary `payload` column as ONE
+    * `container_walks_of_binary` struct — `riff`, `png`, `jpeg`, `mp4`,
+    * `sos`, each NULL when the payload lacks that walk's entry magic. */
+  private[multimodal] def walksOf(df: DataFrame): org.apache.spark.sql.Column =
+    graft.GraftExtensions.call(df, "container_walks_of_binary", col("payload"))
+
+  /** Test seam: the RIFF walk columns over an arbitrary payload frame —
+    * what lets MediaSpec cross-check the walk on RANDOM chunk layouts,
+    * not just the fixture shapes. */
   private[graft] def walkColumns(payloads: DataFrame): DataFrame =
-    withWalk(payloads.select(col("media_id"),
+    withWalk(payloads.select(col("media_id"), col("payload"),
       hex(col("payload")).as("h"),
       length(col("payload")).cast("long").as("n_bytes")))
 
-  /** Test seam: ALL THREE container walks (RIFF + PNG + JPEG) over an
-    * arbitrary payload frame — the cross-check surface for the
-    * random-layout properties against [[realDecode]]. */
+  /** Test seam: all five walk structs over an arbitrary payload frame —
+    * `(media_id, riff, png, jpeg, mp4, sos)`. */
   private[graft] def containerColumns(payloads: DataFrame): DataFrame =
-    withAllWalks(payloads.select(col("media_id"),
-      hex(col("payload")).as("h"),
-      length(col("payload")).cast("long").as("n_bytes")))
+    payloads.select(col("media_id"), walksOf(payloads).as("cw"))
+      .select("media_id", "cw.*")
 
+  /** Appends the RIFF walk's columns to a frame carrying `payload`, then
+    * CHECKPOINTS it without the payload: the walk runs exactly once per
+    * row instead of once per consuming expression, and the payload
+    * bytes are not materialized beside their hex. */
   private def withWalk(df: DataFrame): DataFrame =
-    df.withColumn("wk", expr(walkAggSql)).localCheckpoint()
+    df.withColumn("wk", walksOf(df).getField("riff")).drop("payload")
+      .localCheckpoint()
       .withColumn("fmt_off", col("wk.fmt_off"))
       .withColumn("data_off", col("wk.data_off"))
       .withColumn("data_len", col("wk.data_len"))
@@ -890,26 +565,9 @@ object Media {
       .withColumn("wav_bits", col("wk.bits"))
       .drop("wk")
 
-  // ---- per-container magic dispatch ----------------------------------------
-  //
-  // Each walk's entry CASE already NULLs out on the wrong magic, so
-  // running every fold on every row was CORRECT — but the folds are
-  // interpreted HOFs, and even a dead fold pays its per-step struct
-  // allocations, so per-row decode cost grew with the number of
-  // supported formats instead of the row's own format (round-11
-  // verdict). The dispatch gate below sniffs each container's magic
-  // ONCE per row and wraps the fold in a lazily-evaluated CASE branch:
-  // a non-matching row never enters the fold at all. Each gate is the
-  // EXACT entry condition of its fold (walkOff0Sql / the init CASEs),
-  // so gated-off ≡ fold-returned-NULL and results are bit-identical —
-  // including the adversarial overlapping-magic corner (a RIFF size
-  // field spelling `ftyp` satisfies BOTH the RIFF and MP4 gates, so
-  // both walks still run there and the typed decoder's fallthrough
-  // order is preserved).
-
-  private[multimodal] def gatedWalk(pred: org.apache.spark.sql.Column,
-      aggSql: String): org.apache.spark.sql.Column =
-    when(pred, expr(aggSql))
+  // The magic sniffs over `h` / `n_bytes`: each is its walk's entry
+  // condition, the eligibility filter the family chains apply before
+  // their checkpoint, and [[MediaKeep]]'s kind label.
 
   private[multimodal] def riffMagic: org.apache.spark.sql.Column =
     col("n_bytes") >= 44L && substring(col("h"), 1, 8) === "52494646" &&
@@ -973,47 +631,6 @@ object Media {
     "mp4" -> s"n_bytes >= 12 AND substring(h, 9, 8) = '$HexFtyp'",
     "wav" -> ("n_bytes >= 44 AND substring(h, 1, 8) = '52494646' " +
       "AND substring(h, 17, 8) = '57415645'"))
-
-  /** [[withWalk]] plus the PNG, JPEG, and MP4 walks — one checkpoint
-    * for all four folds, each DISPATCH-GATED on its own magic sniff
-    * (see above: a row runs only the walks whose magic it carries,
-    * usually exactly one and zero for BMP/GIF/raw). Used by the
-    * format-sniffing surface ([[mediaFeatures]]); the single-format
-    * paths ([[audioFrames]], [[imageRows]]) keep their narrower
-    * walks. */
-  private def withAllWalks(df: DataFrame): DataFrame =
-    df.withColumn("wk", gatedWalk(riffMagic, walkAggSql))
-      .withColumn("pk", gatedWalk(pngMagic, pngAggSql))
-      .withColumn("jk", gatedWalk(jpgMagic, jpgAggSql))
-      .withColumn("mk", gatedWalk(mp4Magic, mp4AggSql))
-      .localCheckpoint()
-      .withColumn("fmt_off", col("wk.fmt_off"))
-      .withColumn("data_off", col("wk.data_off"))
-      .withColumn("data_len", col("wk.data_len"))
-      .withColumn("wav_channels", col("wk.channels"))
-      .withColumn("wav_sample_rate", col("wk.sample_rate"))
-      .withColumn("wav_bits", col("wk.bits"))
-      .withColumn("png_ihdr", col("pk.ihdr_off"))
-      .withColumn("png_w", col("pk.w"))
-      .withColumn("png_ht", col("pk.ht"))
-      .withColumn("png_depth", col("pk.depth"))
-      .withColumn("png_ctype", col("pk.ctype"))
-      .withColumn("png_idat", col("pk.idat_off"))
-      .withColumn("png_idat_len", col("pk.idat_len"))
-      .withColumn("jpg_sof", col("jk.sof_off"))
-      .withColumn("jpg_prec", col("jk.prec"))
-      .withColumn("jpg_ht", col("jk.ht"))
-      .withColumn("jpg_w", col("jk.w"))
-      .withColumn("jpg_ncomp", col("jk.ncomp"))
-      .withColumn("mp4_tkhd", col("mk.tkhd_off"))
-      .withColumn("mp4_w", col("mk.w"))
-      .withColumn("mp4_ht", col("mk.ht"))
-      .withColumn("mp4_mvhd", col("mk.mvhd_off"))
-      .withColumn("mp4_mts", col("mk.mts"))
-      .withColumn("mp4_mdur", col("mk.mdur"))
-      .withColumn("mp4_mdat", col("mk.mdat_off"))
-      .withColumn("mp4_mdat_len", col("mk.mdat_len"))
-      .drop("wk", "pk", "jk", "mk")
 
   /** DuckDB side: the same walk as chained CTEs over `src` (which must
     * expose `h` and `n_bytes`); the final stage is named `walked`.
@@ -1237,8 +854,8 @@ object Media {
     // two-HOF spelling, MediaSpec's reference formulation, allocates
     // three payload-sized intermediates per row)
     val stats = graft.GraftExtensions.call(docs, "byte_stats_of_binary", col("payload"))
-    // EVERYTHING hex-derived happens BEFORE the checkpoint — the four
-    // gated folds, plus the constant-offset BMP/GIF header reads and
+    // EVERYTHING payload-derived happens BEFORE the checkpoint — the
+    // container walks, plus the constant-offset BMP/GIF header reads and
     // the magic flags, each gated on its own sniff. The checkpoint
     // then holds only fixed-width decode columns: the r12 shape
     // materialized the full hex string (2× payload bytes per row)
@@ -1248,6 +865,7 @@ object Media {
     val pre = media.select(
       col("media_id"),
       col("fmt"),
+      col("payload"),
       length(col("payload")).cast("long").as("n_bytes"),
       substring(h, 1, 16).as("header_hex"),
       stats.getField("byte_sum").as("byte_sum"),
@@ -1257,10 +875,7 @@ object Media {
     val isGif = col("n_bytes") >= 13L &&
       substring(col("h"), 1, 12).isin("474946383761", "474946383961")
     val withKind = pre
-      .withColumn("wk", gatedWalk(riffMagic, walkAggSql))
-      .withColumn("pk", gatedWalk(pngMagic, pngAggSql))
-      .withColumn("jk", gatedWalk(jpgMagic, jpgAggSql))
-      .withColumn("mk", gatedWalk(mp4Magic, mp4AggSql))
+      .withColumn("cw", walksOf(pre))
       .withColumn("h_null", col("h").isNull)
       .withColumn("is_bmp", isBmp)
       .withColumn("is_gif", isGif)
@@ -1272,40 +887,41 @@ object Media {
       // GIF packed byte bits 0-2 = GCT size (stored bits/pixel − 1)
       .withColumn("gif_bpp",
         when(isGif, leVal(col("h"), 10, 1).bitwiseAND(lit(7L)) + lit(1L)))
-      .drop("h")
+      .drop("h", "payload")
       .localCheckpoint()
       // walk-RESOLVED predicates through the shared precedence chain
       // (kindCase — the one place the kind ORDER lives)
       .withColumn("kind", kindCase(col("h_null"), Map(
         "bmp" -> col("is_bmp"),
         "gif" -> col("is_gif"),
-        "png" -> col("pk.ihdr_off").isNotNull,
-        "jpeg" -> col("jk.sof_off").isNotNull,
-        "mp4" -> col("mk.tkhd_off").isNotNull,
-        "wav" -> (col("wk.fmt_off").isNotNull && col("wk.data_off").isNotNull))))
+        "png" -> col("cw.png.ihdr_off").isNotNull,
+        "jpeg" -> col("cw.jpeg.sof_off").isNotNull,
+        "mp4" -> col("cw.mp4.tkhd_off").isNotNull,
+        "wav" -> (col("cw.riff.fmt_off").isNotNull &&
+          col("cw.riff.data_off").isNotNull))))
     withKind.select(
       col("media_id"), col("fmt"), col("n_bytes"), col("header_hex"),
       col("byte_sum"), col("n_hi_bytes"), col("kind"),
       when(col("kind") === "bmp", col("bmp_w"))
         .when(col("kind") === "gif", col("gif_w"))
-        .when(col("kind") === "png", col("pk.w"))
-        .when(col("kind") === "jpeg", col("jk.w"))
-        .when(col("kind") === "mp4", col("mk.w")).as("width"),
+        .when(col("kind") === "png", col("cw.png.w"))
+        .when(col("kind") === "jpeg", col("cw.jpeg.w"))
+        .when(col("kind") === "mp4", col("cw.mp4.w")).as("width"),
       when(col("kind") === "bmp", col("bmp_ht"))
         .when(col("kind") === "gif", col("gif_ht"))
-        .when(col("kind") === "png", col("pk.ht"))
-        .when(col("kind") === "jpeg", col("jk.ht"))
-        .when(col("kind") === "mp4", col("mk.ht")).as("height"),
+        .when(col("kind") === "png", col("cw.png.ht"))
+        .when(col("kind") === "jpeg", col("cw.jpeg.ht"))
+        .when(col("kind") === "mp4", col("cw.mp4.ht")).as("height"),
       when(col("kind") === "bmp", col("bmp_bpp"))
         .when(col("kind") === "gif", col("gif_bpp"))
-        .when(col("kind") === "png", col("pk.depth"))
-        .when(col("kind") === "jpeg", col("jk.prec")).as("bpp"),
-      when(col("kind") === "wav", col("wk.channels"))
+        .when(col("kind") === "png", col("cw.png.depth"))
+        .when(col("kind") === "jpeg", col("cw.jpeg.prec")).as("bpp"),
+      when(col("kind") === "wav", col("cw.riff.channels"))
         .when(col("kind") === "gif", lit(1L)) // palette-indexed
-        .when(col("kind") === "png", expr(pngChannelsSql("pk.ctype")))
-        .when(col("kind") === "jpeg", col("jk.ncomp")).as("channels"),
-      when(col("kind") === "wav", col("wk.sample_rate")).as("sample_rate"),
-      when(col("kind") === "wav", col("wk.bits")).as("bits"))
+        .when(col("kind") === "png", expr(pngChannelsSql("cw.png.ctype")))
+        .when(col("kind") === "jpeg", col("cw.jpeg.ncomp")).as("channels"),
+      when(col("kind") === "wav", col("cw.riff.sample_rate")).as("sample_rate"),
+      when(col("kind") === "wav", col("cw.riff.bits")).as("bits"))
   }
 
   /** Frame sampling: every `stride`-th complete `frameBytes`-byte block
@@ -1405,7 +1021,7 @@ object Media {
     * bounded by payload size, no shuffle at all. */
   def audioFrames(docs: DataFrame, stride: Int = 4): DataFrame = {
     val media = asContainerTable(graft.Tables.widen(docs))
-      .select(col("media_id"), hex(col("payload")).as("h"),
+      .select(col("media_id"), col("payload"), hex(col("payload")).as("h"),
         length(col("payload")).cast("long").as("n_bytes"))
     // WAV = chunk walk found fmt + data (canonical or chunk-padded);
     // every header field reads at its WALKED offset
@@ -1569,31 +1185,30 @@ object Media {
     * (the audioFrames greatest-guard), and a v1 duration past 2³²
     * ticks reports NULL n_units and emits no row (see [[mvhdDurSql]]).
     *
-    * Scale shape: per-row header arithmetic over the two gated folds,
-    * one checkpoint, no explode, no shuffle. */
+    * Scale shape: per-row header arithmetic over the RIFF and MP4
+    * walks, one checkpoint, no explode, no shuffle. */
   def mediaDuration(docs: DataFrame): DataFrame = {
     val media = asContainerTable(graft.Tables.widen(docs))
-      .select(col("media_id"), hex(col("payload")).as("h"),
+      .select(col("media_id"), col("payload"),
         length(col("payload")).cast("long").as("n_bytes"))
     val walked = media
-      .withColumn("wk", gatedWalk(riffMagic, walkAggSql))
-      .withColumn("mk", gatedWalk(mp4Magic, mp4AggSql))
-      // nothing after the barrier reads the hex — keep the 2x-payload
-      // column out of the materialized rows (the mediaFeatures shape)
-      .drop("h")
+      .withColumn("cw", walksOf(media))
+      // nothing after the barrier reads the payload — keep it out of the
+      // materialized rows (the mediaFeatures shape)
+      .drop("payload")
       .localCheckpoint()
     val mp4d = walked
-      .filter(col("mk.mvhd_off").isNotNull && col("mk.mdur").isNotNull)
+      .filter(col("cw.mp4.mvhd_off").isNotNull && col("cw.mp4.mdur").isNotNull)
       .select(col("media_id"), lit("mp4").as("kind"),
-        col("mk.mts").as("timescale"), col("mk.mdur").as("n_units"))
+        col("cw.mp4.mts").as("timescale"), col("cw.mp4.mdur").as("n_units"))
     val wavd = walked
-      .filter(col("wk.fmt_off").isNotNull && col("wk.data_off").isNotNull)
+      .filter(col("cw.riff.fmt_off").isNotNull && col("cw.riff.data_off").isNotNull)
       .select(col("media_id"),
-        col("wk.channels").as("channels"),
-        col("wk.sample_rate").as("sample_rate"),
-        col("wk.bits").as("bits"),
-        col("wk.data_len").as("declared_len"),
-        (col("n_bytes") - col("wk.data_off")).as("avail_len"))
+        col("cw.riff.channels").as("channels"),
+        col("cw.riff.sample_rate").as("sample_rate"),
+        col("cw.riff.bits").as("bits"),
+        col("cw.riff.data_len").as("declared_len"),
+        (col("n_bytes") - col("cw.riff.data_off")).as("avail_len"))
       .withColumn("frame_bytes", expr("(channels * bits) div 8L"))
       .filter(col("frame_bytes") >= 1L)
       .select(col("media_id"), lit("wav").as("kind"),

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.SessionCache.{PlanKey, planKey}
 
 /** The face set every 64-bit media content sketch family ships, written
   * ONCE: image aHash over BMP scanlines ([[ImageHash]]), audio amplitude
@@ -48,8 +49,10 @@ abstract class MediaFamily(val name: String, pairStem: String,
   private[multimodal] def hexSql(textHex: String, textBytes: String,
       idiv: String): String
 
-  /** The hash over `(media_id, h, n_bytes)` → `(keep..., media_id,
-    * sketchCols..., ahash)`, one row per ELIGIBLE item. `checkpoint =
+  /** The hash over `(media_id, payload, h, n_bytes)` → `(keep...,
+    * media_id, sketchCols..., ahash)`, one row per ELIGIBLE item: the
+    * container walks read the binary `payload`, the probes read its hex
+    * `h`. `checkpoint =
     * false` is the STREAM spelling (localCheckpoint is illegal on a
     * stream): safe without the barrier because every multi-use alias of
     * the chain (header fields, the walk struct, the probe array, the
@@ -78,7 +81,8 @@ abstract class MediaFamily(val name: String, pairStem: String,
   // ---- the payload and stream seams --------------------------------------------
 
   private def sizedOf(payloads: DataFrame, keep: Seq[String]): DataFrame =
-    payloads.select(Seq(col("media_id"), hex(col("payload")).as("h"),
+    payloads.select(Seq(col("media_id"), col("payload"),
+      hex(col("payload")).as("h"),
       length(col("payload")).cast("long").as("n_bytes")) ++
       keep.map(col): _*)
 
@@ -113,14 +117,14 @@ abstract class MediaFamily(val name: String, pairStem: String,
     * once per corpus plan, and every face (ahash/pairs/clusters/best/
     * occupancy, the incremental corpus side) replays it. Capacity 2 for
     * the full / `% 10 <> 9` alternation. */
-  private val sketchCache = new graft.SessionCache[Int, DataFrame](2)
+  private val sketchCache = new graft.SessionCache[PlanKey, DataFrame](2)
   private[graft] def sketchBuilds = sketchCache.builds
 
   /** `(media_id, sketchCols..., ahash)` per eligible item of the
     * synthesized corpus. */
   def ahash(docs: DataFrame): DataFrame =
     sketchCache.getOrBuild(docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash()) {
+        planKey(docs)) {
       ahashBuild(docs).localCheckpoint()
     }
 
@@ -134,12 +138,19 @@ abstract class MediaFamily(val name: String, pairStem: String,
     val h = expr("element_at(transform(sequence(0, 0), fixture_once -> " +
       hexSql("hex(encode(text, 'utf-8'))", "octet_length(text)", "div") +
       "), 1)")
-    ahashOfHexMaybeCk(graft.Tables.widen(docs)
+    ahashOfHexSized(graft.Tables.widen(docs)
       .select(col("doc_id").as("media_id"), h.as("h"))
       .filter(col("h").isNotNull)
       .withColumn("n_bytes", (length(col("h")) / 2).cast("long"))
-      .localCheckpoint(), checkpoint = true)
+      .localCheckpoint())
   }
+
+  /** A hex-sized relation `(media_id, h, n_bytes)` hashed: the walks read
+    * the bytes back through `unhex`, after the caller's checkpoint, so
+    * no checkpoint holds the payload beside its hex. */
+  private def ahashOfHexSized(hexSized: DataFrame): DataFrame =
+    ahashOfHexMaybeCk(hexSized.withColumn("payload", unhex(col("h"))),
+      checkpoint = true)
 
   private def keyCols: Seq[Column] =
     ("media_id" +: pairKeys :+ "ahash").map(col)
@@ -148,11 +159,11 @@ abstract class MediaFamily(val name: String, pairStem: String,
     * pairKeys..., ahash)` — the relation a pipeline persists. */
   private[graft] def keyed(sk: DataFrame): DataFrame = sk.select(keyCols: _*)
 
-  /** `(media_id, pairKeys..., ahash, metric)` over `sized` — the keeper
-    * sketch relation the composed [[MediaKeep]] verdict persists. */
-  private[graft] def metricSketch(sized: DataFrame): DataFrame =
-    ahashOfHexMaybeCk(sized, checkpoint = true)
-      .select(keyCols :+ metric.as("metric"): _*)
+  /** `(media_id, pairKeys..., ahash, metric)` over the hex-sized lake
+    * relation `(media_id, h, n_bytes)` — the keeper sketch relation the
+    * composed [[MediaKeep]] verdict persists. */
+  private[graft] def metricSketch(hexSized: DataFrame): DataFrame =
+    ahashOfHexSized(hexSized).select(keyCols :+ metric.as("metric"): _*)
 
   /** `(a, b, hamming)` pairs of a sketch relation — candidates share one
     * of the 4 16-bit bands (and every pairing key), exact

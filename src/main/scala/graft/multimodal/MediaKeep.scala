@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.SessionCache.{PlanKey, planKey}
 
 /** The curation verdict for the MEDIA lake — the
   * [[graft.text.Curation.corpusKeepFull]] discipline applied to binary
@@ -176,18 +177,18 @@ object MediaKeep {
     * the faces were each rebuilding it (~16 s combined at sf0.1). The
     * cache body is the shared [[graft.SessionCache]]
     * (session-reference keyed, build-once under the monitor — r16
-    * directive #5); the entry key is (semantic hash of the ANALYZED
-    * docs plan, maxHamming), so two spellings of the same scan share.
+    * directive #5); the entry key is (plan key of the docs relation,
+    * maxHamming), so two spellings of the same scan share.
     * [[verdictBuilds]] counts actual builds — the spec's evidence that
     * the second face reuses instead of rebuilding. The verdict rows
     * are narrow (8 columns/payload), so the checkpoint is cheap to
     * hold. */
-  private val verdictCache = new graft.SessionCache[(Int, Int), DataFrame]
+  private val verdictCache = new graft.SessionCache[(PlanKey, Int), DataFrame]
   private[graft] def verdictBuilds = verdictCache.builds
 
   private def verdictOf(docs: DataFrame, maxHamming: Int): DataFrame =
     verdictCache.getOrBuild(docs.sparkSession,
-        (docs.queryExecution.analyzed.semanticHash(), maxHamming)) {
+        (planKey(docs), maxHamming)) {
       verdictOfSized(lakeSized(docs), maxHamming).localCheckpoint()
     }
 
@@ -389,13 +390,13 @@ object MediaKeep {
     * once, exactly as production reads it from tables once.
     * [[stateBuilds]] is the spec's reuse evidence. */
   private val stateCache =
-    new graft.SessionCache[(Int, Int), MediaCorpusState]
+    new graft.SessionCache[(PlanKey, Int), MediaCorpusState]
   private[graft] def stateBuilds = stateCache.builds
 
   def mediaCorpusState(corpusDocs: DataFrame,
       maxHamming: Int = 3): MediaCorpusState =
     stateCache.getOrBuild(corpusDocs.sparkSession,
-        (corpusDocs.queryExecution.analyzed.semanticHash(), maxHamming)) {
+        (planKey(corpusDocs), maxHamming)) {
       corpusStateOfSized(lakeSized(corpusDocs), maxHamming)
     }
 
@@ -526,13 +527,13 @@ object MediaKeep {
     * equality compares the DataFrame fields by reference), so a new
     * corpus state can never serve a stale shard verdict. */
   private val incrCache =
-    new graft.SessionCache[(Int, MediaCorpusState, Int), DataFrame]
+    new graft.SessionCache[(PlanKey, MediaCorpusState, Int), DataFrame]
   private[graft] def incrBuilds = incrCache.builds
 
   private def incrVerdictOf(newDocs: DataFrame, st: MediaCorpusState,
       maxHamming: Int): DataFrame =
     incrCache.getOrBuild(newDocs.sparkSession,
-        (newDocs.queryExecution.analyzed.semanticHash(), st, maxHamming)) {
+        (planKey(newDocs), st, maxHamming)) {
       incrementalVerdictOfSized(lakeSized(newDocs), st, maxHamming)
         .localCheckpoint()
     }

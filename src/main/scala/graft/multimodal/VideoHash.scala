@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * dimension/duration decodes never read.
   *
   * The hash rides the SAME bounded ISO-BMFF box walk the dimension and
-  * duration faces use ([[Media]]'s nested fold — `mdat` is now its
-  * third tracked find) and sketches the coded stream:
+  * duration faces use ([[ContainerWalk.mp4]] — `mdat` is its third
+  * tracked find) and sketches the coded stream:
   *
   *  1. 64 probe points by integer striding over the CLAMPED content
   *     length — probe k reads byte `(k · n_units) div 64` of the
@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   * sketch families. Eligibility is explicit: a walked `mdat` with
   * ≥ 64 clamped content bytes; anything else emits no row.
   *
-  * Scale shape: per-row hex arithmetic (one bounded gated fold + 64
-  * fixed probes — cost per VIDEO, independent of size), an 8-byte/video
+  * Scale shape: one bounded walk + 64 fixed hex probes per row (cost
+  * per VIDEO, independent of size), an 8-byte/video
   * sketch, and the proven checkpoint-sketch → band-explode →
   * equi-self-join pairing (AQE-splittable, never all-pairs).
   */
@@ -99,18 +99,20 @@ object VideoHash extends MediaFamily("video", "vid", "vid_",
       s"'00000064' || '7472616B' || $tkhd || $mdat"
   }
 
-  /** The hash over `(media_id, h, n_bytes)` — eligibility and layout
-    * from the REAL box walk, probes and vote as one bounded HOF pair
-    * (the [[ImageHash.ahashOfHexMaybeCk]] codegen rationale). */
+  /** The hash over `(media_id, payload, h, n_bytes)` — eligibility and
+    * layout from the REAL box walk over the payload, probes over the hex
+    * and vote as one bounded HOF pair (the [[ImageHash.ahashOfHexMaybeCk]]
+    * codegen rationale). */
   private[graft] def ahashOfHexMaybeCk(sized: DataFrame,
       checkpoint: Boolean, keep: Seq[String] = Nil): DataFrame = {
     val walked0 = sized
       // candidate-filter BEFORE the checkpoint (the AudioHash shape):
       // on a mixed media lake most payloads are not ISO-BMFF, and the
-      // gate is the fold's own entry condition, so the 2x-payload hex
+      // gate is the walk's own entry condition, so the 2x-payload hex
       // materialization is bounded to candidate MP4s
       .filter(Media.mp4Magic)
-      .withColumn("mk", Media.gatedWalk(Media.mp4Magic, Media.mp4AggSql))
+      .withColumn("mk", Media.walksOf(sized).getField("mp4"))
+      .drop("payload")
     val walked = if (checkpoint) walked0.localCheckpoint() else walked0
     val vid = walked
       .filter(col("mk.mdat_off").isNotNull)

@@ -8,14 +8,16 @@ import org.apache.spark.sql.types._
   * [[JsonLines]] discipline applied to the reference engine's own
   * arrival format (text lines `src,dst` — reference README.md:145-157).
   *
-  * [[graft.graph.EdgeLists.fromCsv]] stays FAILFAST: that is the parity
-  * contract (the reference hard-crashes on a malformed line —
-  * `Integer.parseInt` at `countedges/CountEdgesAfterMax.java:52-53`).
-  * This source is the PRODUCTION contract for the same bytes: at 100 TB
-  * one bad line must neither kill a 1000-executor census (FAILFAST) nor
-  * vanish uncounted (DROPMALFORMED). Same mechanics as JSONL: the file
-  * scans as TEXT and parses with `from_csv` — one scan, one parse, the
-  * clean and quarantine streams both first-class (the csv SOURCE's own
+  * It is the one edge-line parse. [[graft.graph.EdgeLists.fromCsv]]
+  * reads through it in its strict mode — the parity contract, where any
+  * line [[quarantine]] would claim fails the task (the reference
+  * hard-crashes on a malformed line — `Integer.parseInt` at
+  * `countedges/CountEdgesAfterMax.java:52-53`). The split below is the
+  * PRODUCTION contract for the same bytes: at 100 TB one bad line must
+  * neither kill a 1000-executor census nor vanish uncounted. Same
+  * mechanics as JSONL: the file scans as TEXT and parses with
+  * `from_csv` — one scan, one parse, the clean and quarantine streams
+  * both first-class (the csv SOURCE's own
   * `_corrupt_record` has the same query-only-corrupt-column seam
   * `spark.read.json` has; text+from_csv does not). The parse result is
   * a generator output ([[ParseOnce]]), so the [[good]]/[[quarantine]]
@@ -28,8 +30,7 @@ import org.apache.spark.sql.types._
   *  - SILENT-NULL lines (`"5,"` — an empty token is a valid CSV null,
   *    so the parse "succeeds" with a null id) never reach
   *    [[CorruptCol]]; [[quarantine]] claims them by the null-id test
-  *    instead. This is exactly the seam the FAILFAST twin needed its
-  *    raise_error projection for — here the row is routed, not fatal.
+  *    instead (the strict reader fails on them the same way).
   */
 object CsvEdges {
 

@@ -149,7 +149,7 @@ object MediaStream {
   private def keepStreamVerdict(payloads: DataFrame,
       st: MediaKeep.MediaCorpusState, maxHamming: Int,
       watermarkDelay: String): DataFrame = {
-    val sized = payloads.select(col("media_id"),
+    val sized = payloads.select(col("media_id"), col("payload"),
         hex(col("payload")).as("h"),
         length(col("payload")).cast("long").as("n_bytes"),
         EventStream.eventTime.as("event_time"))

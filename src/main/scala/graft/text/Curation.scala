@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.SessionCache.{PlanKey, planKey}
 
 /** The curation decision — the composite a training-data pipeline
   * actually ships: per document, the keep/drop verdict plus the reasons,
@@ -51,7 +52,7 @@ object Curation {
     * Capacity 2: the full corpus and an incremental corpus can
     * alternate in one session. */
   private val keepCache =
-    new graft.SessionCache[(Int, Double), DataFrame](capacity = 2)
+    new graft.SessionCache[(PlanKey, Double), DataFrame](capacity = 2)
   private[graft] def keepBuilds = keepCache.builds
 
   def corpusKeep(docs: DataFrame, minQuality: Double = 0.5): DataFrame =
@@ -63,7 +64,7 @@ object Curation {
   private def keepVerdictCached(docs: DataFrame, minQuality: Double,
       base: => DataFrame): DataFrame =
     keepCache.getOrBuild(docs.sparkSession,
-        (docs.queryExecution.analyzed.semanticHash(), minQuality)) {
+        (planKey(docs), minQuality)) {
       // checkpointed so every reusing face is a projection over
       // materialized rows (the media-verdict discipline)
       corpusKeepFromBase(base, minQuality).localCheckpoint()
@@ -151,27 +152,26 @@ object Curation {
   /** Session-scoped reuse of the SEVEN-GATE verdict (the [[keepCache]]
     * discipline, one slot per domain-gate spelling): corpus_keep_full
     * and the stats rollup project the same relation, and the PSL face
-    * keeps its own entry — the gate discriminator (0 = embedded
-    * literal, PSL plan hash otherwise) rides in the key so the two
+    * keeps its own entry — the gate discriminator (None = embedded
+    * literal, the PSL plan key otherwise) rides in the key so the two
     * spellings can never serve each other. */
   private val fullKeepCache =
-    new graft.SessionCache[(Int, Int, Double, Int), DataFrame](capacity = 2)
+    new graft.SessionCache[(PlanKey, PlanKey, Double, Option[PlanKey]),
+      DataFrame](capacity = 2)
   private[graft] def fullKeepBuilds = fullKeepCache.builds
 
   private def fullKeepCached(docs: DataFrame, bench: DataFrame,
-      minQuality: Double, gateKey: Int,
+      minQuality: Double, gateKey: Option[PlanKey],
       domainsOf: DataFrame => DataFrame): DataFrame =
     fullKeepCache.getOrBuild(docs.sparkSession,
-        (docs.queryExecution.analyzed.semanticHash(),
-          bench.queryExecution.analyzed.semanticHash(),
-          minQuality, gateKey)) {
+        (planKey(docs), planKey(bench), minQuality, gateKey)) {
       corpusKeepFullDomains(docs, bench, minQuality, domainsOf)
         .localCheckpoint()
     }
 
   def corpusKeepFull(docs: DataFrame, bench: DataFrame,
       minQuality: Double = 0.5): DataFrame =
-    fullKeepCached(docs, bench, minQuality, 0,
+    fullKeepCached(docs, bench, minQuality, None,
       // the default gate keys on the embedded-literal extraction over
       // the synthesized URL host — the zero-dependency spelling
       base => base.select(col("doc_id"),
@@ -190,7 +190,7 @@ object Curation {
   def corpusKeepFullExt(docs: DataFrame, bench: DataFrame, psl: DataFrame,
       minQuality: Double = 0.5): DataFrame =
     fullKeepCached(docs, bench, minQuality,
-      psl.queryExecution.analyzed.semanticHash(), base => {
+      Some(planKey(psl)), base => {
       val hosted = base.select(col("doc_id"),
         expr(Domains.hostPslSparkSql).as("host"))
       hosted.join(Domains.registrableDomainsFromPsl(hosted, psl), Seq("host"))
@@ -1213,14 +1213,14 @@ object Curation {
     * from [[corpusKeep]]'s cache (one dedup-machinery build serves
     * both). */
   private val keptCache =
-    new graft.SessionCache[(Int, Double), (DataFrame, DataFrame)](
+    new graft.SessionCache[(PlanKey, Double), (DataFrame, DataFrame)](
       capacity = 2)
   private[graft] def keptBuilds = keptCache.builds
 
   private def keptCorpus(docs: DataFrame,
       minQuality: Double): (DataFrame, DataFrame) =
     keptCache.getOrBuild(docs.sparkSession,
-        (docs.queryExecution.analyzed.semanticHash(), minQuality)) {
+        (planKey(docs), minQuality)) {
       val base = curatedBase(docs)
       val kept = keepVerdictCached(docs, minQuality, base)
         .filter(col("keep")).select("doc_id").localCheckpoint()

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
+import graft.SessionCache.{PlanKey, planKey}
 
 /** Deduplication operators for a training-data pipeline, over
   * `documents(doc_id, text, ...)`.
@@ -829,12 +830,12 @@ object Dedup {
     * projection — a distinct, stable plan) + parameters; capacity 4 for
     * plain/folded/star/incidental keys. */
   private val clusterCache =
-    new graft.SessionCache[(Int, Long, Int, String), DataFrame](capacity = 4)
+    new graft.SessionCache[(PlanKey, Long, Int, String), DataFrame](capacity = 4)
   private[graft] def dedupClusterBuilds = clusterCache.builds
 
   def dedupClusters(docs: DataFrame, minMatch: Long = 8L, maxIters: Int = 25): DataFrame =
     clusterCache.getOrBuild(docs.sparkSession,
-        (docs.queryExecution.analyzed.semanticHash(), minMatch, maxIters,
+        (planKey(docs), minMatch, maxIters,
           "minlabel")) {
       dedupClustersFromFp(docs, fingerprintsOf(docs).localCheckpoint(),
         minMatch, maxIters).localCheckpoint()
@@ -863,7 +864,7 @@ object Dedup {
     * relation, same oracle), O(log² n) rounds on any component shape. */
   def dedupClustersStar(docs: DataFrame, minMatch: Long = 8L, maxIters: Int = 50): DataFrame =
     clusterCache.getOrBuild(docs.sparkSession,
-        (docs.queryExecution.analyzed.semanticHash(), minMatch, maxIters,
+        (planKey(docs), minMatch, maxIters,
           "star")) {
       dedupClustersFromPairsStar(docs,
         confirmedPairs(fingerprintsOf(docs).localCheckpoint(),

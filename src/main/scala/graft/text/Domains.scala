@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.SessionCache.{PlanKey, planKey}
 
 /** Registrable-domain curation axis — real web curation keys its
   * quotas, blocklists, and quality rollups on the REGISTRABLE DOMAIN
@@ -339,7 +340,7 @@ object Domains {
     * Keyed on the docs plan (the rules and hosts both derive from it);
     * capacity 2 for the corpus/shard alternation headroom the other
     * artifact caches carry. */
-  private val pslDomCache = new graft.SessionCache[Int, DataFrame](capacity = 2)
+  private val pslDomCache = new graft.SessionCache[PlanKey, DataFrame](capacity = 2)
   private[graft] def pslDomBuilds = pslDomCache.builds
 
   /** The shared Spark half of the PSL family: documents → (doc_id,
@@ -349,7 +350,7 @@ object Domains {
     val hosted = wide.select(col("doc_id"), col("text"),
       expr(hostPslSql).as("host"))
     val domMap = pslDomCache.getOrBuild(docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash()) {
+        planKey(docs)) {
       registrableDomainsFromPsl(hosted, pslFromSources(docs)).localCheckpoint()
     }
     hosted.join(domMap, Seq("host"))

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
+import graft.SessionCache.{PlanKey, planKey}
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * `documents(doc_id, text, lang, source, n_chars)`.
@@ -660,16 +661,16 @@ object TextAnalysis {
     * any analysis session computing several per-doc reports), the
     * relation is built ONCE and shared. The cache body is the shared
     * [[graft.SessionCache]] (session-reference keyed, build-once under
-    * the monitor — r16 directive #5); the entry key is the semantic
-    * hash of the ANALYZED docs plan, so two spellings of the same scan
+    * the monitor — r16 directive #5); the entry key is the plan key of
+    * the docs relation, so two spellings of the same scan
     * share. [[pairBuilds]] counts actual builds — the spec's evidence
     * that the second query reuses instead of rebuilding. */
-  private val pairCache = new graft.SessionCache[Int, DataFrame]
+  private val pairCache = new graft.SessionCache[PlanKey, DataFrame]
   private[graft] def pairBuilds = pairCache.builds
 
   private def checkpointedPairCounts(docs: DataFrame): DataFrame =
     pairCache.getOrBuild(docs.sparkSession,
-        docs.queryExecution.analyzed.semanticHash()) {
+        planKey(docs)) {
       tokenPairCounts(docs).localCheckpoint()
     }
 
@@ -846,14 +847,14 @@ object TextAnalysis {
     * exactly the status quo. Capacity 4: full-corpus, benchmark-slice,
     * and kept-corpus word relations coexist in one bench pass, plus one
     * slot of churn from checkpoint-keyed callers. */
-  private val bpeCache = new graft.SessionCache[(Int, Int),
+  private val bpeCache = new graft.SessionCache[(PlanKey, Int),
     (Seq[DataFrame], DataFrame)](capacity = 4)
   private[graft] def bpeBuilds = bpeCache.builds
 
   private[text] def bpeRoundsAndWordsFromToks(t: DataFrame,
       nMerges: Int): (Seq[DataFrame], DataFrame) =
     bpeCache.getOrBuild(t.sparkSession,
-        (t.queryExecution.analyzed.semanticHash(), nMerges)) {
+        (planKey(t), nMerges)) {
       bpeRoundsAndWordsFromToksBuild(t, nMerges)
     }
 

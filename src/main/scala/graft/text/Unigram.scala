@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.SessionCache.{PlanKey, planKey}
 
 /** Unigram-LM (SentencePiece-style) subword tokenizer induction — the
   * second production tokenizer family next to the BPE stack
@@ -287,31 +288,30 @@ object Unigram {
     * ([[toksKeyed]]) or the caller's own stable plan; capacity 2 for
     * the full-corpus / kept-corpus alternation. */
   private val induceCache =
-    new graft.SessionCache[Int, (DataFrame, DataFrame, DataFrame)](
+    new graft.SessionCache[PlanKey, (DataFrame, DataFrame, DataFrame)](
       capacity = 2)
   private[graft] def induceBuilds = induceCache.builds
 
   private def induceCached(t: DataFrame,
-      key: Int): (DataFrame, DataFrame, DataFrame) =
+      key: PlanKey): (DataFrame, DataFrame, DataFrame) =
     induceCache.getOrBuild(t.sparkSession, key)(induce(t))
 
   /** The pruned `(piece, cnt)` vocabulary induced over an existing
     * `(doc_id, toks)` relation — the persistable artifact the frozen
     * faces reload ([[Curation.trainingShardsUnigram]]'s write). */
   private[text] def vocabFromToks(t: DataFrame): DataFrame =
-    induceCached(t, t.queryExecution.analyzed.semanticHash())._2
+    induceCached(t, planKey(t))._2
 
   private def toks(docs: DataFrame): DataFrame = toksKeyed(docs)._1
 
-  /** [[toks]] plus the PRE-checkpoint plan's semantic hash — the
+  /** [[toks]] plus the PRE-checkpoint plan's key — the
     * induce-cache key (the checkpointed relation itself mints a fresh
     * RDD-backed plan per call, so its hash can never match across
     * faces). */
-  private def toksKeyed(docs: DataFrame): (DataFrame, Int) = {
+  private def toksKeyed(docs: DataFrame): (DataFrame, PlanKey) = {
     val t0 = graft.Tables.widen(docs).select(col("doc_id"), col("lang"),
       TextAnalysis.tokens(col("text")).as("toks"))
-    (t0.localCheckpoint(),
-      t0.queryExecution.analyzed.semanticHash())
+    (t0.localCheckpoint(), planKey(t0))
   }
 
   /** The induced vocabulary: `(piece, n_bytes, cnt, cost_q20)` — hex

@@ -152,7 +152,7 @@ class CimageHashSpec extends AnyFunSuite {
       var off = 2L; var k = 0
       val standalone = Set(0x01) ++ (0xd0 to 0xd8)
       // budget shared with the production fold (r14 advice)
-      while (k < CompressedImageHash.SosWalkChunks && bytes.length >= off + 4) {
+      while (k < graft.multimodal.ContainerWalk.SosWalkChunks && bytes.length >= off + 4) {
         val m1 = bytes(off.toInt) & 0xff
         val m2 = bytes(off.toInt + 1) & 0xff
         if (m1 == 0xff && m2 == 0xda) {
@@ -185,6 +185,10 @@ class CimageHashSpec extends AnyFunSuite {
       if (declared(id).isDefined) found += 1
     }
     assert(found > 10, s"only $found/200 soups resolved — generator too hostile")
+    // the walker against the interpreted-fold reference
+    val off = graft.multimodal.WalkFolds.mismatches(
+      payloads.toDF("media_id", "payload"), Seq("sos"))
+    assert(off.isEmpty, s"SOS walk ≠ fold reference: ${off.take(3)}")
   }
 
   test("one-byte edits pair within a format; identical spans never pair across formats") {

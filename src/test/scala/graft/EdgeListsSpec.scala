@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{EdgeLists, GraphPatterns}
 
@@ -34,16 +36,54 @@ class EdgeListsSpec extends AnyFunSuite {
     assert(GraphPatterns.triangleCounter(edges, Some(12500L)).first().getLong(0) === 6L)
   }
 
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty
+    else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
   test("malformed row with missing id is a hard error (reference strictness)") {
     val edges = EdgeLists.fromCsv(spark, writeCsv(sampleLines :+ "1,"))
-    // NOTE: a bare count() would NOT trip this — Spark's CSV count
-    // optimization prunes all columns and skips parsing. Every real query
-    // reads the ids, which is where the guard lives.
     val e = intercept[Exception] { edges.collect() }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("malformed edge row")))
+    // the check is a filter, so a bare count() — which reads no id —
+    // fails too
+    val c = intercept[Exception] { edges.count() }
+    assert(messages(c).exists(_.contains("malformed edge row")))
+  }
+
+  /** The strict reader's earlier spelling, kept as the reference: Spark's
+    * CSV source in FAILFAST mode, plus a projection that fails on a null
+    * id (file sources force the read schema nullable, so `1,` parses to
+    * a null `dst` without tripping FAILFAST). */
+  private def failfastReference(path: String): DataFrame =
+    spark.read.schema(StructType(Seq(
+        StructField("src", LongType, nullable = false),
+        StructField("dst", LongType, nullable = false))))
+      .option("mode", "FAILFAST").csv(path)
+      .select(Seq("src", "dst").map { c =>
+        coalesce(col(c), raise_error(lit(s"malformed edge row: null $c"))).as(c)
+      }: _*)
+
+  test("malformed corpus: fromCsv fails exactly where the FAILFAST reference fails") {
+    def outcome(df: => DataFrame): Either[Seq[String], Seq[(Long, Long)]] =
+      try Right(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
+      catch { case e: Exception => Left(messages(e)) }
+    val corpus = Seq("1,", "a,b", " 1,2", "\"1\",2", "1,2,3", "1,2,", "-5,7",
+      "9223372036854775808,1", "")
+    val failing = Seq.newBuilder[String]
+    for (line <- corpus) {
+      val path = writeCsv(sampleLines :+ line)
+      val ref = outcome(failfastReference(path))
+      val got = outcome(EdgeLists.fromCsv(spark, path))
+      assert(got.isLeft === ref.isLeft, s"line [$line]: reference=$ref fromCsv=$got")
+      got match {
+        case Left(ms) =>
+          failing += line
+          assert(ms.exists(_.contains("malformed edge row")), s"line [$line]: $ms")
+        case Right(rows) => assert(rows === ref.toOption.get, s"line [$line]")
+      }
+    }
+    assert(failing.result() === Seq("1,", "a,b", " 1,2", "1,2,3", "1,2,",
+      "9223372036854775808,1"))
   }
 
   test("non-numeric row is a hard error (FAILFAST)") {

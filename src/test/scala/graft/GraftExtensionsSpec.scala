@@ -17,7 +17,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   private val names = Seq(
     "simhash_of_hashes", "minhash_of_hashes", "sign_buckets_of_quantized",
     "dot_of_quantized", "agree_count_of_hashes", "byte_stats_of_binary",
-    "tok_hashes_of_text", "tok_hashes_of_tokens", "shingles_of_hashes",
+    "container_walks_of_binary", "tok_hashes_of_text", "tok_hashes_of_tokens", "shingles_of_hashes",
     "win_shingles_of_hashes", "blocks_of_hashes", "luhn_valid", "fold_marks",
     "dim_shares_of_hashes")
 
@@ -57,7 +57,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding", "label")
   }
 
-  test("the extension injects exactly the table's 14 names") {
+  test("the extension injects exactly the table's 15 names") {
     val injected = Seq.newBuilder[String]
     new GraftExtensions()(new SparkSessionExtensions {
       override def injectFunction(f: FunctionDescription): Unit =
@@ -113,6 +113,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         "docVectors" -> (s => DocVectors.docVectors(docs(s))),
         "annBands" -> (s => Similarity.annBands(Similarity.vectors(embeds(s)))),
         "mediaFeatures" -> (s => graft.multimodal.Media.mediaFeatures(docs(s))),
+        "mediaDuration" -> (s => graft.multimodal.Media.mediaDuration(docs(s))),
         "textNormalizeSparkSql" -> (s => {
           val d = docs(s)
           TextSql.registerDocuments(d)

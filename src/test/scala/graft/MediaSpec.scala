@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.multimodal.Media
+import graft.multimodal.{ContainerWalk, Media, WalkFolds}
 
 class MediaSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -10,6 +11,11 @@ class MediaSpec extends AnyFunSuite {
 
   def docs(rows: (Long, String, String, String, Long)*) =
     rows.toSeq.toDF("doc_id", "text", "lang", "source", "n_chars")
+
+  /** Field `f` of walk struct `w` in a [[Media.containerColumns]] row. */
+  private def walkField(r: Row, w: String, f: String): Option[Long] =
+    Option(r.getAs[Row](w)).flatMap(s => Option(s.getAs[java.lang.Long](f)))
+      .map(_.toLong)
 
   val sample = Seq(
     // ids 4, 24, 44: doc_id % 20 = 4 → payloads stay raw text bytes
@@ -149,6 +155,9 @@ class MediaSpec extends AnyFunSuite {
             s"declarative=($ch,$rate,$bits)")
       }
     }
+    // the walker against the interpreted-fold reference, every field
+    val off = WalkFolds.mismatches(payloads.toDF("media_id", "payload"), Seq("riff"))
+    assert(off.isEmpty, s"RIFF walk ≠ fold reference: ${off.take(3)}")
   }
 
   test("golden: realDecode walks LIST and fact chunks in front of fmt and data") {
@@ -414,7 +423,7 @@ class MediaSpec extends AnyFunSuite {
       var off = 0L; var md = -1L; var ml = -1L; var k = 0
       // budget SHARED with the production fold (r14 advice: a literal
       // here would silently desynchronize on a future budget change)
-      while (k < Media.Mp4WalkChunks && off >= 0 && bytes.length >= off + 8) {
+      while (k < ContainerWalk.Mp4WalkChunks && off >= 0 && bytes.length >= off + 8) {
         val sz = beL(off.toInt, 4)
         if (md < 0 && ascii(off.toInt + 4, "mdat") && sz >= 8) {
           md = off + 8; ml = sz - 8
@@ -437,10 +446,9 @@ class MediaSpec extends AnyFunSuite {
     import spark.implicits._
     val declared = Media.containerColumns(payloads.toDF("media_id", "payload"))
       .collect().map { r =>
-        def f(c: String) = Option(r.getAs[java.lang.Long](c)).map(_.toLong)
+        def f(c: String) = walkField(r, "mp4", c)
         r.getAs[Long]("media_id") ->
-          ((f("mp4_tkhd"), f("mp4_w"), f("mp4_ht"),
-            f("mp4_mdat"), f("mp4_mdat_len")))
+          ((f("tkhd_off"), f("w"), f("ht"), f("mdat_off"), f("mdat_len")))
       }.toMap
     var found = 0
     var mdatFound = 0
@@ -460,6 +468,8 @@ class MediaSpec extends AnyFunSuite {
     }
     assert(found > 10, s"only $found/200 soups resolved — generator too hostile")
     assert(mdatFound > 10, s"only $mdatFound/200 soups carried a walked mdat")
+    val off = WalkFolds.mismatches(payloads.toDF("media_id", "payload"), Seq("mp4"))
+    assert(off.isEmpty, s"MP4 walk ≠ fold reference: ${off.take(3)}")
   }
 
   test("overlapping magics: a RIFF size field spelling 'ftyp' still decodes as wav") {
@@ -486,8 +496,8 @@ class MediaSpec extends AnyFunSuite {
     import spark.implicits._
     val cols = Media.containerColumns(
       Seq((1L, wav)).toDF("media_id", "payload")).collect().head
-    assert(Option(cols.getAs[java.lang.Long]("mp4_tkhd")).isEmpty)
-    assert(Option(cols.getAs[java.lang.Long]("fmt_off")).isDefined)
+    assert(walkField(cols, "mp4", "tkhd_off").isEmpty)
+    assert(walkField(cols, "riff", "fmt_off").isDefined)
   }
 
   test("property: PNG/JPEG declarative walks ≡ imperative walks on random layouts") {
@@ -530,7 +540,7 @@ class MediaSpec extends AnyFunSuite {
         return (None, None)
       var off = 8L; var id0 = -1L; var il = -1L; var k = 0
       // budget shared with the production fold (r14 advice)
-      while (k < Media.WalkChunks && bytes.length >= off + 8) {
+      while (k < ContainerWalk.WalkChunks && bytes.length >= off + 8) {
         val len = beL(off.toInt, 4)
         if (id0 < 0 && ascii(off.toInt + 4, "IDAT")) { id0 = off + 8; il = len }
         off = off + 12 + len
@@ -572,11 +582,12 @@ class MediaSpec extends AnyFunSuite {
     import spark.implicits._
     val declared = Media.containerColumns(payloads.toDF("media_id", "payload"))
       .collect().map { r =>
-        def f(c: String) = Option(r.getAs[java.lang.Long](c)).map(_.toLong)
+        def p(c: String) = walkField(r, "png", c)
+        def j(c: String) = walkField(r, "jpeg", c)
         r.getAs[Long]("media_id") ->
-          ((f("png_ihdr"), f("png_w"), f("png_ht"), f("png_depth"), f("png_ctype")),
-            (f("jpg_sof"), f("jpg_prec"), f("jpg_ht"), f("jpg_w"), f("jpg_ncomp")),
-            (f("png_idat"), f("png_idat_len")))
+          ((p("ihdr_off"), p("w"), p("ht"), p("depth"), p("ctype")),
+            (j("sof_off"), j("prec"), j("ht"), j("w"), j("ncomp")),
+            (p("idat_off"), p("idat_len")))
       }.toMap
     for ((id, bytes) <- payloads) {
       val d = Media.realDecode(graft.multimodal.MediaRow(id, bytes, "f"))
@@ -597,6 +608,26 @@ class MediaSpec extends AnyFunSuite {
             s"payload $id JPEG fields disagree")
       }
     }
+    val off = WalkFolds.mismatches(payloads.toDF("media_id", "payload"),
+      Seq("png", "jpeg"))
+    assert(off.isEmpty, s"PNG/JPEG walks ≠ fold reference: ${off.take(3)}")
+  }
+
+  test("golden: NULL and empty payloads give a NULL walk") {
+    val payloads = Seq[(Long, Array[Byte])]((1L, null), (2L, Array.emptyByteArray))
+      .toDF("media_id", "payload")
+    val walks = payloads.select(col("media_id"), GraftExtensions.call(payloads,
+        "container_walks_of_binary", col("payload")))
+      .collect().map(r => r.getLong(0) -> r.getAs[Row](1)).toMap
+    // NULL payload: the walk struct itself is NULL; empty: every walk's
+    // entry magic fails, so every sub-struct is NULL
+    assert(walks(1L) === null)
+    assert(walks(2L) === Row(null, null, null, null, null))
+    val rows = Media.walkColumns(payloads).collect()
+    assert(rows.forall(r => r.isNullAt(r.fieldIndex("fmt_off")) &&
+      r.isNullAt(r.fieldIndex("data_off"))))
+    assert(WalkFolds.mismatches(payloads,
+      Seq("riff", "png", "jpeg", "mp4", "sos")).isEmpty)
   }
 
   test("frameSample: stride-samples complete frames; short payloads emit none") {

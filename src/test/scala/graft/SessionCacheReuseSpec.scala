@@ -23,6 +23,27 @@ class SessionCacheReuseSpec extends AnyFunSuite {
     0L
   }
 
+  test("plan keys: two spellings of one scan are equal, another filter is not") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, dir)
+    val a = docs.filter(col("doc_id") > 5L).select("doc_id", "text")
+    // the same scan spelled again: a re-read, a SQL-string predicate
+    val b = Tables.documents(spark, dir).where("doc_id > 5L")
+      .select(col("doc_id"), col("text"))
+    val c = docs.filter(col("doc_id") > 6L).select("doc_id", "text")
+    assert(SessionCache.planKey(a) === SessionCache.planKey(b))
+    assert(SessionCache.planKey(a).hashCode === SessionCache.planKey(b).hashCode)
+    assert(SessionCache.planKey(a).hashCode ===
+      a.queryExecution.analyzed.semanticHash())
+    assert(SessionCache.planKey(a) !== SessionCache.planKey(c))
+    // the key is what a cache entry matches on
+    val cache = new SessionCache[SessionCache.PlanKey, String]
+    assert(cache.getOrBuild(spark, SessionCache.planKey(a))("a") === "a")
+    assert(cache.getOrBuild(spark, SessionCache.planKey(b))("b") === "a")
+    assert(cache.getOrBuild(spark, SessionCache.planKey(c))("c") === "c")
+    assert(cache.builds.get() === 2L)
+  }
+
   test("curation keep verdicts and the kept corpus build once per corpus") {
     run("corpus_keep") // seed
     val k0 = graft.text.Curation.keepBuilds.get()
