@@ -523,10 +523,10 @@ object SparkEntry {
     // sum(size * n_clusters) = corpus size.
     "dedup_cluster_sizes" -> ((s, dir) =>
       Dedup.dedupClusterSizes(graft.Tables.documents(s, dir))),
-    // Same clusters through the O(log² n) star-contraction iterator —
-    // the deep-component path; same oracle as dedup_clusters by design.
+    // The graded star-contraction face: dedup_clusters itself (one
+    // component algorithm), same oracle and the same cache entry.
     "dedup_clusters_star" -> ((s, dir) =>
-      Dedup.dedupClustersStar(graft.Tables.documents(s, dir))),
+      Dedup.dedupClusters(graft.Tables.documents(s, dir))),
     // Quality-aware survivor policy: same components, but the kept copy
     // is the highest-classifier-margin member, not the smallest id.
     "dedup_clusters_best" -> ((s, dir) =>
@@ -1414,8 +1414,9 @@ object SparkEntry {
       "bpe_encode", "bpe_coverage_ext", "unigram_encode",
       "embed_ivf_knn", "incremental_ivf",
       "embed_pq_knn", "incremental_pq",
-      // the shared cluster contractions (text: plain/folded/star keys)
-      "dedup_clusters", "dedup_clusters_norm", "dedup_clusters_star") ++
+      // the shared cluster contractions (text: plain/folded keys;
+      // dedup_clusters_star is dedup_clusters' key)
+      "dedup_clusters", "dedup_clusters_norm") ++
     // the persisted media sketch relations (full + incremental corpus
     // keys each), then the whole-lake Hamming cluster contractions:
     // keyed on (sketch plan, maxHamming, pairing tag) since r17 — the

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Iterate
 
 /** The reference engine's five graph capabilities (SURVEY.md §2.6),
   * re-expressed as declarative Spark plans. Every function is a pure
@@ -171,10 +172,9 @@ object GraphPatterns {
     * and checkpointed ONCE; at cluster scale it would be bucketed by
     * `src` so every round's join is co-located and only the (small)
     * rank relation moves — proven in GraphSkewSpec's bucketed-edge
-    * test: zero shuffles on the edge side of a round's join. Rounds are driver-scheduled (the BPE/Lloyd
-    * scheduling shape, same documented crossover); each round's rank
-    * relation is checkpointed so plans stay round-deep, never
-    * iters-deep. */
+    * test: zero shuffles on the edge side of a round's join. Rounds run
+    * under [[graft.Iterate.rounds]], which checkpoints each round's rank
+    * relation so plans stay round-deep, never iters-deep. */
   def pageRank(edges: DataFrame, iters: Int = RankIters,
       max: Option[Long] = None): DataFrame =
     pageRankImpl(edges, iters, max, conserve = false)
@@ -226,34 +226,7 @@ object GraphPatterns {
   def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
       iters: Int = RankIters, max: Option[Long] = None): DataFrame = {
     require(iters >= 1, s"pageRankPersonalized needs iters >= 1 (got $iters)")
-    val w = weightedEdges(maxFilter(edges, max))
-    val ce = w.join(w.groupBy(col("src")).agg(sum("w").as("od")), "src")
-      .localCheckpoint()
-    val nodes = ce.select(col("src").as("node"))
-      .union(ce.select(col("dst").as("node"))).distinct().localCheckpoint()
-    val seedFlag = nodes.join(seeds.select(col("node")).distinct(),
-        Seq("node"), "left_semi")
-      .select(col("node"), lit(true).as("is_seed")).localCheckpoint()
-    def withSeed(df: DataFrame): DataFrame =
-      df.join(seedFlag, Seq("node"), "left")
-    var ranks = withSeed(nodes)
-      .select(col("node"),
-        when(col("is_seed"), lit(RankResolution)).otherwise(lit(0L)).as("r"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contrib = ranks.join(ce, ranks("node") === ce("src"))
-        .select(col("dst").as("node"),
-          expr("(cast(r as decimal(38,0)) * w) div od").as("c"))
-        .groupBy("node").agg(sum("c").as("contrib"))
-      ranks = withSeed(nodes.join(contrib, Seq("node"), "left"))
-        .select(col("node"),
-          (when(col("is_seed"), lit(RankResolution - RankDamping))
-            .otherwise(lit(0L)) +
-            expr(s"($RankDamping * cast(coalesce(contrib, 0L) as decimal(38,0))) div $RankResolution"))
-            .as("r"))
-        .localCheckpoint()
-    }
-    ranks.select(col("node"), col("r").as("rank_millionths"))
+    pageRankImpl(edges, iters, max, conserve = false, seeds = Some(seeds))
   }
 
   /** Oracle twin of [[pageRankPersonalized]] with the query entry's
@@ -292,8 +265,13 @@ object GraphPatterns {
        |ORDER BY node, rank_millionths""".stripMargin
   }
 
+  /** The one PageRank round all three faces share: contributions
+    * along the checkpointed (src, dst, w, od) edges, teleport, damping.
+    * `conserve` adds the round's dangling mass; `seeds` lands the
+    * teleport term on the seed set only (one node-keyed left join per
+    * round, in the personalized face alone). */
   private def pageRankImpl(edges: DataFrame, iters: Int, max: Option[Long],
-      conserve: Boolean): DataFrame = {
+      conserve: Boolean, seeds: Option[DataFrame] = None): DataFrame = {
     // iters = 0 would silently return the uniform init while the SQL twin
     // generates invalid SQL — fail both the same way (the bpeMerges rule)
     require(iters >= 1, s"pageRank needs iters >= 1 (got $iters)")
@@ -302,46 +280,47 @@ object GraphPatterns {
       .localCheckpoint()
     val nodes = ce.select(col("src").as("node"))
       .union(ce.select(col("dst").as("node"))).distinct().localCheckpoint()
+    // personalized only: the seed set restricted to the node domain
+    val seedFlag = seeds.map(s => nodes.join(s.select(col("node")).distinct(),
+        Seq("node"), "left_semi")
+      .select(col("node"), lit(true).as("is_seed")).localCheckpoint())
+    def withSeed(df: DataFrame): DataFrame =
+      seedFlag.fold(df)(f => df.join(f, Seq("node"), "left"))
+    def onSeeds(v: Long): Column =
+      if (seedFlag.isEmpty) lit(v) else when(col("is_seed"), lit(v)).otherwise(lit(0L))
     // conserving only: nodes with no out-edge, and the node count as a
     // 1-row keyed relation (k=1 is the constant broadcast-attach key)
     lazy val dangling = nodes.join(ce.select(col("src").as("node")).distinct(),
       Seq("node"), "left_anti").localCheckpoint()
     lazy val nCnt = nodes.agg(count(lit(1)).as("n"))
       .withColumn("k", lit(1)).localCheckpoint()
-    var ranks = nodes.select(col("node"), lit(RankResolution).as("r"))
-    for (_ <- 1 to iters) {
+    val init = withSeed(nodes).select(col("node"), onSeeds(RankResolution).as("r"))
+    Iterate.rounds(init, iters) { ranks =>
       val contrib = ranks.join(ce, ranks("node") === ce("src"))
         .select(col("dst").as("node"),
           expr("(cast(r as decimal(38,0)) * w) div od").as("c"))
         .groupBy("node").agg(sum("c").as("contrib"))
-      ranks = if (!conserve) {
-        nodes.join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            (lit(RankResolution - RankDamping) +
-              expr(s"($RankDamping * cast(coalesce(contrib, 0L) as decimal(38,0))) div $RankResolution"))
-              .as("r"))
-          .localCheckpoint()
-      } else {
-        // this round's dangling mass, split per node (floor); greatest(n,1)
-        // only guards the empty graph, where the output is empty anyway
-        // (ANSI mode makes 0 div 0 an error, not a NULL)
-        val dsh = ranks.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum("r"), lit(0L)).as("dmass"))
-          .withColumn("k", lit(1))
-          .join(broadcast(nCnt), Seq("k"))
-          .select(col("k"), expr("dmass div greatest(n, 1L)").as("dshare"))
-          .localCheckpoint()
-        nodes.join(contrib, Seq("node"), "left")
-          .withColumn("k", lit(1))
-          .join(broadcast(dsh), Seq("k"))
-          .select(col("node"),
-            (lit(RankResolution - RankDamping) +
-              expr(s"($RankDamping * cast(coalesce(contrib, 0L) + dshare as decimal(38,0))) div $RankResolution"))
-              .as("r"))
-          .localCheckpoint()
-      }
-    }
-    ranks.select(col("node"), col("r").as("rank_millionths"))
+      val base = withSeed(nodes.join(contrib, Seq("node"), "left"))
+      val (next, mass) =
+        if (!conserve) (base, "coalesce(contrib, 0L)")
+        else {
+          // this round's dangling mass, split per node (floor); greatest(n,1)
+          // only guards the empty graph, where the output is empty anyway
+          // (ANSI mode makes 0 div 0 an error, not a NULL)
+          val dsh = ranks.join(dangling, Seq("node"), "left_semi")
+            .agg(coalesce(sum("r"), lit(0L)).as("dmass"))
+            .withColumn("k", lit(1))
+            .join(broadcast(nCnt), Seq("k"))
+            .select(col("k"), expr("dmass div greatest(n, 1L)").as("dshare"))
+            .localCheckpoint()
+          (base.withColumn("k", lit(1)).join(broadcast(dsh), Seq("k")),
+            "coalesce(contrib, 0L) + dshare")
+        }
+      next.select(col("node"),
+        (onSeeds(RankResolution - RankDamping) +
+          expr(s"($RankDamping * cast($mass as decimal(38,0))) div $RankResolution"))
+          .as("r"))
+    }.select(col("node"), col("r").as("rank_millionths"))
   }
 
   /** Weakly connected components of the follower graph — the
@@ -368,10 +347,10 @@ object GraphPatterns {
     * forward-backward coloring algorithm (Fleischer, Hendrickson &
     * Pınar, "On Identifying Strongly Connected Components in Parallel",
     * IPDPS 2000 — the standard distributed SCC shape; Tarjan's stack is
-    * inherently sequential), driver-scheduled like every iterative
-    * operator here, with BOTH loops running to their deterministic
-    * fixpoints (unique regardless of evaluation order, so the oracle's
-    * closed-form mutual-reachability spelling must agree):
+    * inherently sequential), scheduled by [[graft.Iterate]] like every
+    * iterative operator here, with BOTH inner loops running to their
+    * deterministic fixpoints (unique regardless of evaluation order, so
+    * the oracle's closed-form mutual-reachability spelling must agree):
     *
     *  1. COLOR: propagate the min node id forward to fixpoint over the
     *     remaining subgraph — c(v) = min remaining ancestor (incl. v).
@@ -389,9 +368,11 @@ object GraphPatterns {
     * Every class extracts its pivot each outer round, so rounds ≤ the
     * longest pivot-chain (worst case a path — the algorithm's published
     * bound; real follower graphs with their giant SCC finish in a few).
-    * Inner rounds ≤ the remaining diameter. Convergence tests are
-    * count-based driver actions on checkpointed relations (one tiny job
-    * per round — the dedup star-contraction discipline). Self-loops are
+    * Inner rounds ≤ the remaining diameter. Both inner fixpoints run
+    * under [[graft.Iterate.untilStable]]: each round's checkpoint carries
+    * its own `changed` witness (color: the new label is smaller;
+    * extract: the row is newly reached, found by one anti-join), probed
+    * by one `limit(1)` scan, capped at the node count. Self-loops are
     * dropped from propagation (they never change membership) but their
     * nodes stay in the domain as singletons. */
   def stronglyConnectedComponents(edges: DataFrame,
@@ -401,26 +382,25 @@ object GraphPatterns {
       .union(f.select(col("dst").as("node"))).distinct().localCheckpoint()
     val e0 = f.select("src", "dst").distinct()
       .filter(col("src") =!= col("dst")).localCheckpoint()
+    // a min-label fixpoint over n nodes settles within n rounds
+    val bound = (nodes0.count() min Int.MaxValue).toInt
+    // the peel carries three relations (remaining nodes, their edges, the
+    // extracted result), so it stays a driver loop around the two
+    // single-relation fixpoints
     var remaining = nodes0
     var e = e0
     var result = nodes0.limit(0)
       .select(col("node"), col("node").as("scc_id")).localCheckpoint()
     while (!remaining.isEmpty) {
       // 1. forward min-label fixpoint over the remaining subgraph
-      var c = remaining.select(col("node"), col("node").as("c"))
-        .localCheckpoint()
-      var changed = true
-      while (changed) {
+      val c = Iterate.untilStable("stronglyConnectedComponents (color)",
+          remaining.select(col("node"), col("node").as("c")), bound) { c =>
         val pushed = c.join(e, c("node") === e("src"))
           .select(col("dst").as("node"), col("c"))
           .groupBy("node").agg(min("c").as("nc"))
-        val c2 = c.join(pushed, Seq("node"), "left")
-          .select(col("node"),
-            least(col("c"), coalesce(col("nc"), col("c"))).as("c"))
-          .localCheckpoint()
-        changed = !c2.as("a").join(c.as("b"), "node")
-          .filter(col("a.c") =!= col("b.c")).isEmpty
-        c = c2
+        c.join(pushed, Seq("node"), "left")
+          .select(col("node"), least(col("c"), coalesce(col("nc"), col("c"))).as("c"),
+            (col("nc") < col("c")).as(Iterate.Changed))
       }
       // 2. backward reachability to the pivot through same-color edges
       val ec = e
@@ -428,14 +408,14 @@ object GraphPatterns {
         .join(c.select(col("node").as("dst"), col("c").as("cd")), Seq("dst"))
         .filter(col("cs") === col("cd"))
         .select(col("src"), col("dst"), col("cs").as("c")).localCheckpoint()
-      var b = c.filter(col("node") === col("c")).localCheckpoint()
-      changed = true
-      while (changed) {
-        val nb = ec.join(b, ec("dst") === b("node") && ec("c") === b("c"))
-          .select(ec("src").as("node"), ec("c").as("c"))
-        val b2 = b.union(nb).distinct().localCheckpoint()
-        changed = b2.count() > b.count()
-        b = b2
+      val b = Iterate.untilStable("stronglyConnectedComponents (extract)",
+          c.filter(col("node") === col("c")), bound) { b =>
+        // a node's color is fixed, so `node` alone keys the reached set
+        val fresh = ec.join(b, ec("dst") === b("node") && ec("c") === b("c"))
+          .select(ec("src").as("node"), ec("c").as("c")).distinct()
+          .join(b.select("node"), Seq("node"), "left_anti")
+        b.withColumn(Iterate.Changed, lit(false))
+          .union(fresh.withColumn(Iterate.Changed, lit(true)))
       }
       // 3. extract, shrink, repeat
       result = result.union(b.select(col("node"), col("c").as("scc_id")))
@@ -823,7 +803,9 @@ object GraphPatterns {
     * directions — and the max attaches back as a 1-row broadcast on a
     * checkpointed constant key (the [[graphSummary]] idiom; a foldable
     * key would plan the nested-loop join the audit forbids). Scores are
-    * checkpointed per half-round so plans stay round-deep. */
+    * checkpointed per half-round (authorities inside the round, the
+    * round's (node, a, h) state by [[graft.Iterate.rounds]]) so plans
+    * stay round-deep. */
   def hitsScores(edges: DataFrame, iters: Int = HitsIters,
       max: Option[Long] = None): DataFrame = {
     require(iters >= 1, s"hitsScores needs iters >= 1 (got $iters)")
@@ -836,36 +818,36 @@ object GraphPatterns {
     val nodes = w.select(col("src").as("node"))
       .union(w.select(col("dst").as("node"))).distinct()
       .withColumn("k", lit(1)).localCheckpoint()
-    // raw → normalized half-round: sum score·w over `joinOn` edges into
+    // raw → normalized half-round: sum score·w over `from` edges into
     // the opposite endpoint, divide by the round max (≥1 guards the
-    // all-zero degenerate round; scores are non-negative so div = floor)
-    def halfRound(scores: DataFrame, scoreCol: String, from: String,
-        to: String, outCol: String): DataFrame = {
-      val raw = nodes.join(
+    // all-zero degenerate round; scores are non-negative so div = floor).
+    // `base` is the node domain plus whatever columns ride along.
+    def halfRound(base: DataFrame, scores: DataFrame, scoreCol: String,
+        from: String, to: String, outCol: String): DataFrame = {
+      val raw = base.join(
           scores.join(w, scores("node") === w(from))
             .select(col(to).as("node"),
               expr(s"cast($scoreCol as decimal(38,0)) * w").as("c"))
             .groupBy("node").agg(sum("c").as("raw")),
           Seq("node"), "left")
-        .select(col("node"), col("k"),
-          expr("cast(coalesce(raw, 0) as decimal(38,0))").as("raw"))
+        .select(base.columns.map(col) :+
+          expr("cast(coalesce(raw, 0) as decimal(38,0))").as("raw"): _*)
       // functions.max spelled fully: the `max` param shadows it
       val mx = raw.agg(org.apache.spark.sql.functions.max(col("raw")).as("m"))
         .select(greatest(col("m"), lit(1)).as("m"))
         .withColumn("k", lit(1)).localCheckpoint()
       raw.join(broadcast(mx), Seq("k"))
-        .select(col("node"), expr(s"(raw * 1000000) div m").as(outCol))
-        .localCheckpoint()
+        .select(base.columns.map(col) :+
+          expr(s"(raw * 1000000) div m").as(outCol): _*)
     }
-    var hubs = nodes.select(col("node"), lit(RankResolution).as("h"))
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      auths = halfRound(hubs, "h", "src", "dst", "a")
-      hubs = halfRound(auths, "a", "dst", "src", "h")
-    }
-    auths.join(hubs, Seq("node"))
-      .select(col("node"), col("a").as("auth_millionths"),
-        col("h").as("hub_millionths"))
+    // state (node, k, a, h): the authority half-round is checkpointed
+    // inside the round, the hub half-round carries it along
+    Iterate.rounds(nodes.select(col("node"), col("k"),
+        lit(RankResolution).as("h")), iters) { st =>
+      val auths = halfRound(nodes, st, "h", "src", "dst", "a").localCheckpoint()
+      halfRound(auths, auths, "a", "dst", "src", "h")
+    }.select(col("node"), col("a").as("auth_millionths"),
+      col("h").as("hub_millionths"))
   }
 
   /** Oracle twin of [[hitsScores]] — rounds unrolled as chained CTEs
@@ -936,13 +918,14 @@ object GraphPatterns {
     * Scale shape: per round, ONE partial-aggregated degree count over
     * the current edge relation + TWO left-semi joins filtering edges to
     * live endpoints (both on the 8-byte node key, AQE-splittable); the
-    * edge relation is checkpointed per round so plans stay round-deep,
-    * and it only ever SHRINKS — round cost is monotonically
-    * non-increasing, the nice property peel algorithms have at scale. */
+    * edge relation is checkpointed per round ([[graft.Iterate.rounds]])
+    * so plans stay round-deep, and it only ever SHRINKS — round cost is
+    * monotonically non-increasing, the nice property peel algorithms
+    * have at scale. */
   def kCore(edges: DataFrame, k: Long = KCoreK, rounds: Int = KCoreRounds,
       max: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"kCore needs rounds >= 1 (got $rounds)")
-    var und = maxFilter(edges, max)
+    val und0 = maxFilter(edges, max)
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -950,13 +933,13 @@ object GraphPatterns {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).union(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    for (_ <- 1 to rounds) {
+    val und = Iterate.rounds(und0, rounds) { und =>
       val alive = degrees(und).filter(col("deg") >= k)
         .select("node").localCheckpoint()
-      und = und
+      und
         .join(alive.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(alive.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")).localCheckpoint()
+        .select(col("a"), col("b"))
     }
     degrees(und).select(col("node"), col("deg").as("core_deg"))
   }
@@ -1213,8 +1196,9 @@ object GraphPatterns {
     * one (node, label) partial-agg vote count + the argmax resolved as
     * max-count join + min-label agg (two more node-keyed partial aggs)
     * — every shuffle on the 8-byte node key, AQE-splittable, plans
-    * round-deep via per-round checkpoints. The vote relation is
-    * bounded by the adjacency size, never nodes × labels. */
+    * round-deep via [[graft.Iterate.rounds]]' per-round checkpoints.
+    * The vote relation is bounded by the adjacency size, never
+    * nodes × labels. */
   def labelCommunities(edges: DataFrame, rounds: Int = LpaRounds,
       max: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"labelCommunities needs rounds >= 1 (got $rounds)")
@@ -1226,21 +1210,19 @@ object GraphPatterns {
       .union(w.select(col("dst").as("node"), col("src").as("nbr"), col("w")))
       .groupBy("node", "nbr").agg(sum("w").as("wt"))
       .localCheckpoint()
-    var labels = adj.select(col("node")).distinct()
+    val labels0 = adj.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    Iterate.rounds(labels0, rounds) { labels =>
       val votes = adj.join(
           labels.select(col("node").as("nbr"), col("label")), Seq("nbr"))
         .groupBy("node", "label").agg(sum("wt").as("cnt"))
       val maxc = votes.groupBy("node")
         .agg(org.apache.spark.sql.functions.max(col("cnt")).as("m"))
-      labels = votes.join(maxc, Seq("node"))
+      votes.join(maxc, Seq("node"))
         .filter(col("cnt") === col("m"))
         .groupBy("node").agg(min("label").as("label"))
-        .localCheckpoint()
-    }
-    labels.select(col("node"), col("label").as("community_id"))
+    }.select(col("node"), col("label").as("community_id"))
   }
 
   /** Oracle twin of [[labelCommunities]] — vote/argmax rounds unrolled
@@ -1303,11 +1285,13 @@ object GraphPatterns {
     * first-reached round IS its min hop, so only the nodes first
     * reached LAST round expand this round: one equi-join of the
     * (shrinking-then-empty) frontier against the once-checkpointed
-    * distinct edges, one partial-agg min over the candidates, one
-    * anti-join against the settled set (all on the 8-byte node key,
-    * AQE-splittable), checkpointed so plans stay round-deep. Settled
-    * nodes are never re-expanded; once the frontier empties the
-    * remaining rounds are no-ops on empty relations. */
+    * distinct edges, then one partial-agg min over the settled rows
+    * plus the candidates (on the 8-byte node key, AQE-splittable). The
+    * state is ONE (node, dist, fresh) relation, `fresh` marking the
+    * frontier, checkpointed once per round by [[graft.Iterate.rounds]]
+    * so plans stay round-deep. Settled nodes are never re-expanded;
+    * once the frontier empties the remaining rounds only re-aggregate
+    * the settled set. */
   def graphDistances(edges: DataFrame, seeds: DataFrame,
       rounds: Int = BfsRounds, max: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"graphDistances needs rounds >= 1 (got $rounds)")
@@ -1315,18 +1299,22 @@ object GraphPatterns {
       .distinct().localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    var dist = nodes
+    // state (node, dist, fresh): `fresh` marks last round's frontier
+    val dist0 = nodes
       .join(seeds.select(col("node")).distinct(), Seq("node"), "left_semi")
-      .select(col("node"), lit(0L).as("dist")).localCheckpoint()
-    var frontier = dist
-    for (_ <- 1 to rounds) {
+      .select(col("node"), lit(0L).as("dist"), lit(true).as("fresh"))
+      .localCheckpoint()
+    Iterate.rounds(dist0, rounds) { dist =>
+      val frontier = dist.filter(col("fresh"))
       val reached = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
-        .groupBy("node").agg(min("dist").as("dist"))
-      frontier = reached.join(dist, Seq("node"), "left_anti").localCheckpoint()
-      dist = dist.union(frontier).localCheckpoint()
-    }
-    dist
+        .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"),
+          lit(true).as("fresh"))
+      // a settled node's dist is below any candidate's, and it stays
+      // fresh only if no settled row exists (false < true)
+      dist.select(col("node"), col("dist"), lit(false).as("fresh"))
+        .union(reached)
+        .groupBy("node").agg(min("dist").as("dist"), min("fresh").as("fresh"))
+    }.select(col("node"), col("dist"))
   }
 
   /** Seed-capacity sentinel for [[widestPaths]] — a seed's "bottleneck
@@ -1364,26 +1352,25 @@ object GraphPatterns {
     * against the once-checkpointed weighted-distinct edges on `src`
     * plus ONE partial-agg max shuffle on the node key — the
     * [[pageRank]] round, on greatest/least instead of sum/div;
-    * checkpointed per round so plans stay round-deep. */
+    * checkpointed per round by [[graft.Iterate.rounds]] so plans stay
+    * round-deep. */
   def widestPaths(edges: DataFrame, seeds: DataFrame,
       rounds: Int = BfsRounds, max: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"widestPaths needs rounds >= 1 (got $rounds)")
     val e = weightedEdges(maxFilter(edges, max)).localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    var cap = nodes
+    val cap0 = nodes
       .join(seeds.select(col("node")).distinct(), Seq("node"), "left_semi")
       .select(col("node"), lit(CapInf).as("cap")).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    Iterate.rounds(cap0, rounds) { cap =>
       val relaxed = cap.join(e, cap("node") === e("src"))
         .select(e("dst").as("node"), least(col("cap"), col("w")).as("cap"))
-      cap = cap.union(relaxed)
+      cap.union(relaxed)
         // functions.max spelled fully: the `max` param shadows it
         .groupBy("node")
         .agg(org.apache.spark.sql.functions.max(col("cap")).as("cap"))
-        .localCheckpoint()
-    }
-    cap.select(col("node"),
+    }.select(col("node"),
       when(col("cap") === CapInf, lit(null).cast("long"))
         .otherwise(col("cap")).as("bottleneck"))
   }
@@ -1485,7 +1472,7 @@ object GraphPatterns {
     * a round is ONE equi-join of the sketch relation against the
     * once-checkpointed distinct edges + ONE mergeable partial agg —
     * [[pageRank]]'s exact plan shape with sketches in place of ranks
-    * (same per-round `localCheckpoint` keeping plans round-deep, same
+    * (same [[graft.Iterate.rounds]] checkpoint keeping plans round-deep, same
     * src-bucketed zero-Exchange story at cluster scale).
     *
     * Returned `est_reach` INCLUDES the node itself (round-0 sketch =
@@ -1499,21 +1486,27 @@ object GraphPatterns {
   def reachEstimate(edges: DataFrame, rounds: Int = ReachRounds,
       max: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"reachEstimate needs rounds >= 1 (got $rounds)")
+    val (sk0, round) = reachSketches(edges, max)
+    Iterate.rounds(sk0, rounds)(round)
+      .select(col("node"), hll_sketch_estimate(col("sk")).as("est_reach"))
+  }
+
+  /** The round-0 (node, sk) relation and the sketch round shared by
+    * [[reachEstimate]] and [[neighborhoodFunction]]: every node's sketch
+    * unioned with its out-neighbors' sketches over the
+    * once-checkpointed distinct edges. */
+  private def reachSketches(edges: DataFrame,
+      max: Option[Long]): (DataFrame, DataFrame => DataFrame) = {
     val e = maxFilter(edges, max).select(col("src"), col("dst"))
       .distinct().localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    var sk = nodes.groupBy("node")
+    val sk0 = nodes.groupBy("node")
       .agg(hll_sketch_agg(col("node"), lit(ReachLgK)).as("sk"))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val fromNbrs = e.join(sk, e("dst") === sk("node"))
-        .select(e("src").as("node"), col("sk"))
-      sk = sk.union(fromNbrs)
-        .groupBy("node").agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-        .localCheckpoint()
-    }
-    sk.select(col("node"), hll_sketch_estimate(col("sk")).as("est_reach"))
+    (sk0, sk => sk.union(e.join(sk, e("dst") === sk("node"))
+        .select(e("src").as("node"), col("sk")))
+      .groupBy("node").agg(hll_union_agg(col("sk"), lit(false)).as("sk")))
   }
 
   /** The NEIGHBORHOOD FUNCTION N(r) — the curve [[reachEstimate]]'s
@@ -1525,40 +1518,32 @@ object GraphPatterns {
     * reach"); N(0) = |nodes| by construction, and N is nondecreasing
     * in r (register max-folds only grow — spec-pinned).
     *
-    * Same loop and per-round cost as [[reachEstimate]], plus one tiny
+    * The same sketch round as [[reachEstimate]] (one shared step), plus one tiny
     * estimate-and-sum aggregate of the sketch relation per round (a
     * one-row result each; the union of rounds+1 one-row frames is a
     * plan union of aggregates, not a driver-side collect). */
   def neighborhoodFunction(edges: DataFrame, rounds: Int = ReachRounds,
       max: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"neighborhoodFunction needs rounds >= 1 (got $rounds)")
-    val e = maxFilter(edges, max).select(col("src"), col("dst"))
-      .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var sk = nodes.groupBy("node")
-      .agg(hll_sketch_agg(col("node"), lit(ReachLgK)).as("sk"))
-      .localCheckpoint()
+    val (sk0, round) = reachSketches(edges, max)
     // Each per-node estimate FLOORS to long before the global sum:
     // summing the raw double estimates would make the total depend on
     // partition-wise addition order (IEEE addition is not associative),
     // breaking the "deterministic per graph" claim and the spec-pinned
     // nondecreasing property; integer addition is order-independent
     // (the engine's integer-aggregate discipline).
-    def curvePoint(r: Int) = sk
+    def curvePoint(r: Int, sk: DataFrame) = sk
       .select(floor(hll_sketch_estimate(col("sk"))).cast("long").as("est"))
       .agg(coalesce(sum("est"), lit(0L)).as("est_pairs"))
       .select(lit(r.toLong).as("hops"), col("est_pairs"))
-    var curve = curvePoint(0)
-    for (r <- 1 to rounds) {
-      val fromNbrs = e.join(sk, e("dst") === sk("node"))
-        .select(e("src").as("node"), col("sk"))
-      sk = sk.union(fromNbrs)
-        .groupBy("node").agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-        .localCheckpoint()
-      curve = curve.union(curvePoint(r))
+    // the curve is a per-round side output: each round reads the point
+    // of the checkpointed sketches it was handed
+    val curve = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val last = Iterate.rounds(sk0, rounds) { sk =>
+      curve += curvePoint(curve.size, sk)
+      round(sk)
     }
-    curve
+    (curve :+ curvePoint(rounds, last)).reduce(_ union _)
   }
 
   def nodeReciprocity(edges: DataFrame, max: Option[Long] = None): DataFrame = {

@@ -594,13 +594,11 @@ object Similarity {
     * semantics; raise L to push recall). The oracle mirrors the same
     * candidate generation, so both engines see the identical graph.
     */
-  def semanticDedup(embeds: DataFrame, simThreshold: Double = 0.8,
-      maxIters: Int = 50): DataFrame =
+  def semanticDedup(embeds: DataFrame, simThreshold: Double = 0.8): DataFrame =
     graft.text.Dedup.dedupClustersFromPairsStar(
         embeds.select(col("vec_id").as("doc_id")),
         embedAnnPairs(embeds, simThreshold)
-          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")),
-        maxIters)
+          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("rep_id"), col("is_survivor"))
 
   /** The nightly-ingest operator for embeddings — the [[embedAnnPairs]]
@@ -822,8 +820,8 @@ object Similarity {
     * Degenerate clusters follow k-means semantics: a centroid that loses
     * all members (or floor-means to the zero vector) drops out, so the
     * list count can shrink below numCentroids — deterministically in
-    * both engines. The tiny centroid relation is localCheckpoint'd per
-    * iteration, so iteration i+1's plan starts from K materialized rows
+    * both engines. The tiny centroid relation is checkpointed per
+    * iteration ([[graft.Iterate.rounds]]), so iteration i+1's plan starts from K materialized rows
     * instead of nesting i corpus joins. Cost shape at 100 TB: iters ×
     * (one broadcast-join corpus scan + one map-combined shuffle of
     * K·dim·partitions rows) — the canonical distributed Lloyd step.
@@ -869,10 +867,10 @@ object Similarity {
   }
 
   def kmeansCentroids(v: DataFrame, numCentroids: Int, iters: Int): DataFrame = {
-    var cent = v.filter(col("vec_id") < numCentroids)
+    val cent0 = v.filter(col("vec_id") < numCentroids)
       .select(col("vec_id").as("cid"), col("qv").as("cqv"), col("nrm").as("cnrm"))
       .localCheckpoint()
-    for (_ <- 0 until iters) {
+    graft.Iterate.rounds(cent0, iters) { cent =>
       // assignment carries qv through the scoring join and the argmax
       // aggregate instead of joining back to v afterwards: the broadcast
       // join preserves v's partitioning, so every vector's K scored rows
@@ -887,19 +885,12 @@ object Similarity {
       // per-dimension quantized mean floor(sum_d/count_d) in one
       // zip_with (matching the oracle's per-(cid, d) grouping exactly)
       val vsum = udaf(new VecSumAgg, Encoders.product[QVec])
-      cent = asg.groupBy("cid").agg(vsum(col("qv")).as("s"))
+      asg.groupBy("cid").agg(vsum(col("qv")).as("s"))
         .select(col("cid"), zip_with(col("s.sums"), col("s.counts"),
           (sd, cd) => floor(sd.cast("double") / cd).cast("long")).as("cqv"))
         .withColumn("cnrm", sqrt(dot(v, col("cqv"), col("cqv")).cast("double")))
         .filter(col("cnrm") > 0.0)
-        // each round's checkpoint supersedes the last; the old blocks are
-        // only WEAKLY held (persistentRdds is a weak-value map) and the
-        // ContextCleaner drops them once the superseded Dataset is GC'd —
-        // measured end-of-bench residue across a 39-query × 3-pass run:
-        // ~6 RDDs / 15 MB (see Bench's storage line), not a leak
-        .localCheckpoint()
     }
-    cent
   }
 
   /** `(vec_id, cid)` — the IVF inverted-list assignment of every corpus
@@ -1386,18 +1377,16 @@ object Similarity {
     * centroid. */
   def pqCodebooks(sv: DataFrame, ksub: Int = PqCodebookSize,
       iters: Int = PqIters): DataFrame = {
-    var cb = sv.filter(col("vec_id") < ksub)
+    val cb0 = sv.filter(col("vec_id") < ksub)
       .select(col("m"), col("vec_id").as("cid"), col("sqv").as("cqv"))
       .localCheckpoint()
-    for (_ <- 0 until iters) {
+    graft.Iterate.rounds(cb0, iters) { cb =>
       val asg = pqArgmin(pqScore(sv, cb), carrySqv = true)
       val vsum = udaf(new VecSumAgg, Encoders.product[QVec])
-      cb = asg.groupBy("m", "cid").agg(vsum(col("sqv")).as("s"))
+      asg.groupBy("m", "cid").agg(vsum(col("sqv")).as("s"))
         .select(col("m"), col("cid"), zip_with(col("s.sums"), col("s.counts"),
           (sd, cd) => floor(sd.cast("double") / cd).cast("long")).as("cqv"))
-        .localCheckpoint()
     }
-    cb
   }
 
   /** `(vec_id, m, code, qerr)` — the PQ-encoded corpus: THIS is the

@@ -807,18 +807,10 @@ object Dedup {
     * marks the one document per component the pipeline keeps; everything
     * else is the drop set. Output: one row per input document.
     *
-    * Algorithm: min-label propagation to fixpoint. Labels start as
-    * doc_id; each round every node takes the min of its own label and its
-    * neighbors'. Rounds needed = component diameter, and near-dup
-    * components are shallow by construction (documents clustered around
-    * shared content); an adversarial million-hop chain would exhaust
-    * `maxIters` and throw rather than silently return a partial
-    * clustering — at that point swap in
-    * [[dedupClustersFromPairsStar]], the O(log² n) star-contraction
-    * twin with the same output contract (property-tested equal).
-    * `localCheckpoint` truncates lineage so the plan does
-    * not grow with iterations, and the convergence check reads the
-    * checkpointed step output — no recomputation per round.
+    * Components come from star contraction
+    * ([[dedupClustersFromPairsStar]]): O(log² n) rounds on any component
+    * shape, each round checkpointed once, so the plan does not grow with
+    * rounds and the convergence probe reads the round's checkpoint.
     */
   /** Session-scoped reuse of the labeled near-dup cluster relation (the
     * [[graft.SessionCache]] discipline, r16 optimization round): the
@@ -827,18 +819,16 @@ object Dedup {
     * re-markings of one clustering — the sequential spelling ran the
     * fingerprint + signature machinery and the fixpoint loop once per
     * face. Keyed on the docs plan (the folded faces pass the folded
-    * projection — a distinct, stable plan) + parameters; capacity 4 for
-    * plain/folded/star/incidental keys. */
+    * projection — a distinct, stable plan) + `minMatch`; capacity 4 for
+    * the plain and folded keys plus incidental ones. */
   private val clusterCache =
-    new graft.SessionCache[(PlanKey, Long, Int, String), DataFrame](capacity = 4)
+    new graft.SessionCache[(PlanKey, Long), DataFrame](capacity = 4)
   private[graft] def dedupClusterBuilds = clusterCache.builds
 
-  def dedupClusters(docs: DataFrame, minMatch: Long = 8L, maxIters: Int = 25): DataFrame =
-    clusterCache.getOrBuild(docs.sparkSession,
-        (planKey(docs), minMatch, maxIters,
-          "minlabel")) {
+  def dedupClusters(docs: DataFrame, minMatch: Long = 8L): DataFrame =
+    clusterCache.getOrBuild(docs.sparkSession, (planKey(docs), minMatch)) {
       dedupClustersFromFp(docs, fingerprintsOf(docs).localCheckpoint(),
-        minMatch, maxIters).localCheckpoint()
+        minMatch).localCheckpoint()
     }
 
   /** Same clustering over a precomputed `(doc_id, fp_md5)` relation (the
@@ -850,30 +840,17 @@ object Dedup {
     * keeper near-dups another document lands in that same component.
     */
   def dedupClustersFromFp(docs: DataFrame, fp: DataFrame,
-      minMatch: Long = 8L, maxIters: Int = 25): DataFrame =
-    dedupClustersFromParts(docs, fp, minhashSignatures(docs), minMatch, maxIters)
+      minMatch: Long = 8L): DataFrame =
+    dedupClustersFromParts(docs, fp, minhashSignatures(docs), minMatch)
 
   /** Same, with a caller-supplied `(doc_id, mh)` signature relation —
     * so a shared-tokenize caller pays the text pass exactly once. */
   def dedupClustersFromParts(docs: DataFrame, fp: DataFrame, sig: DataFrame,
-      minMatch: Long = 8L, maxIters: Int = 25): DataFrame =
-    dedupClustersFromPairs(docs, confirmedPairs(fp, sig, minMatch), maxIters)
-
-  /** [[dedupClusters]] through the star-contraction iterator instead of
-    * min-label propagation — identical output (same confirmed-pair edge
-    * relation, same oracle), O(log² n) rounds on any component shape. */
-  def dedupClustersStar(docs: DataFrame, minMatch: Long = 8L, maxIters: Int = 50): DataFrame =
-    clusterCache.getOrBuild(docs.sparkSession,
-        (planKey(docs), minMatch, maxIters,
-          "star")) {
-      dedupClustersFromPairsStar(docs,
-        confirmedPairs(fingerprintsOf(docs).localCheckpoint(),
-          minhashSignatures(docs), minMatch),
-        maxIters).localCheckpoint()
-    }
+      minMatch: Long = 8L): DataFrame =
+    dedupClustersFromPairsStar(docs, confirmedPairs(fp, sig, minMatch))
 
   /** [[dedupClusters]] with the QUALITY-AWARE survivor policy: components
-    * are IDENTICAL (same confirmed-pair edges, same min-label iterator,
+    * are IDENTICAL (same confirmed-pair edges, same star contraction,
     * rep_id stays the component minimum — it is the cluster's stable
     * identifier), but `is_survivor` marks the member with the HIGHEST
     * classifier margin (doc_id asc tie-break) instead of the smallest id
@@ -881,9 +858,8 @@ object Dedup {
     * verdict gap #4). Scale shape adds one map-only margin pass over the
     * corpus plus a rep_id-keyed agg + equi-join on the labeled relation
     * — nothing new touches text or shuffles more than 16 bytes/doc. */
-  def dedupClustersBest(docs: DataFrame, minMatch: Long = 8L,
-      maxIters: Int = 25): DataFrame =
-    bestSurvivor(dedupClusters(docs, minMatch, maxIters), docs)
+  def dedupClustersBest(docs: DataFrame, minMatch: Long = 8L): DataFrame =
+    bestSurvivor(dedupClusters(docs, minMatch), docs)
 
   /** Re-mark `is_survivor` on a `(doc_id, rep_id)` cluster relation so the
     * kept copy is the highest-margin member (doc_id asc tie-break) — the
@@ -910,9 +886,8 @@ object Dedup {
     * survivor policy on top. Components and rep_ids are identical to
     * `dedup_clusters_norm` (rep_id stays the component minimum — the
     * stable cluster identifier); only `is_survivor` moves. */
-  def dedupClustersBestNorm(docs: DataFrame, minMatch: Long = 8L,
-      maxIters: Int = 25): DataFrame =
-    bestSurvivor(dedupClustersNorm(docs, minMatch, maxIters), docs)
+  def dedupClustersBestNorm(docs: DataFrame, minMatch: Long = 8L): DataFrame =
+    bestSurvivor(dedupClustersNorm(docs, minMatch), docs)
 
   def dedupClustersBestNormSql(minMatch: Long = 8L): String = {
     val th = s"list_transform(regexp_extract_all(lower(text), '${TextAnalysis.TokenRe}'), tk -> ${PortableHash.tokHashSql("tk")})"
@@ -962,46 +937,6 @@ object Dedup {
     near.union(exact)
   }
 
-  /** Same clustering over precomputed `(doc_a, doc_b)` confirmed pairs.
-    * CONTRACT: the pairs must carry ALL edges the caller wants clustered.
-    * [[nearDupPairs]]/[[simhashPairs]] emit pairs between exact-dup
-    * REPRESENTATIVES only — composing with them directly leaves exact
-    * copies unclustered (each copy comes back as its own survivor); use
-    * [[dedupClustersFromFp]] (which unions the copy→keeper edges back
-    * in), or append those edges yourself, when exact duplicates must
-    * land in the same cluster. */
-  def dedupClustersFromPairs(docs: DataFrame, pairs: DataFrame,
-      maxIters: Int = 25): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    // Iterate ONLY over edge-incident nodes: everything else is trivially
-    // its own representative, and at corpus scale the paired subset is a
-    // small fraction of the documents — the per-round join/agg run on the
-    // duplicate graph, not the corpus. Singletons rejoin at the end.
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("rep_id", col("doc_id"))
-      .localCheckpoint()
-    var it = 0
-    var done = false
-    while (!done) {
-      if (it >= maxIters)
-        throw new IllegalStateException(
-          s"dedupClusters: no fixpoint after $maxIters rounds — component " +
-            "diameter exceeds the near-dup assumption; use star contraction")
-      val nbrMin = edges.join(labels, col("dst") === col("doc_id"))
-        .groupBy(col("src")).agg(min("rep_id").as("nbr_min"))
-      val step = labels.join(nbrMin, col("doc_id") === col("src"), "inner")
-        .select(col("doc_id"), col("rep_id").as("prev"),
-          least(col("rep_id"), col("nbr_min")).as("rep_id"))
-        .localCheckpoint()
-      done = step.filter(col("rep_id") < col("prev")).limit(1).count() == 0L
-      labels = step.select("doc_id", "rep_id")
-      it += 1
-    }
-    attachLabels(docs, labels)
-  }
-
   /** Rejoin iterated `(doc_id, rep_id)` labels to the corpus: singletons
     * (never edge-incident) default to self; survivor = component min. */
   private def attachLabels(docs: DataFrame, labels: DataFrame): DataFrame =
@@ -1011,37 +946,43 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
       .withColumn("is_survivor", col("doc_id") === col("rep_id"))
 
-  /** Star-contraction variant of [[dedupClustersFromPairs]] — alternating
-    * large-star / small-star rounds (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond"): large-star connects every
-    * larger neighbor of a node to the minimum of its closed neighborhood;
-    * small-star does the same for the smaller neighbors. Converges to
-    * per-component stars rooted at the component minimum in O(log² n)
-    * rounds on ANY graph — where min-label propagation needs
-    * diameter-many rounds, so this retires the deep-component escape
-    * hatch (an adversarial million-hop chain is ~40 rounds, not 1e6).
-    * Per-round cost shape matches min-label (a groupBy-min plus an
-    * equi-join on node ids, all on the edge-incident subset);
-    * `localCheckpoint` truncates lineage; convergence = edge-set
-    * fixpoint (count-equal + empty difference, both cheap on the
-    * shrinking edge relation). Same output contract as
-    * [[dedupClustersFromPairs]]; DedupSpec property-tests equality on
-    * random graphs and on a chain deeper than min-label's budget.
+  /** Round cap of [[dedupClustersFromPairsStar]]: star contraction
+    * settles in O(log² n) rounds (a 1e6-node chain in ~40), so a run
+    * past 50 means a corrupt edge relation, not a deep component. */
+  val StarRounds: Int = 50
+
+  /** Connected components over precomputed `(doc_a, doc_b)` confirmed
+    * pairs — alternating large-star / small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"): large-star connects
+    * every larger neighbor of a node to the minimum of its closed
+    * neighborhood; small-star does the same for the smaller neighbors.
+    * Converges to per-component stars rooted at the component minimum in
+    * O(log² n) rounds on ANY graph (min-label propagation would need
+    * diameter-many; DedupSpec keeps it as the reference the property
+    * test compares against). Per round: a groupBy-min plus an equi-join
+    * on node ids, all on the edge-incident subset — everything else is
+    * trivially its own representative and rejoins at the end. Rounds run
+    * under [[graft.Iterate.untilStable]], capped at [[StarRounds]].
+    *
+    * CONTRACT: the pairs must carry ALL edges the caller wants clustered.
+    * [[nearDupPairs]]/[[simhashPairs]] emit pairs between exact-dup
+    * REPRESENTATIVES only — composing with them directly leaves exact
+    * copies unclustered (each copy comes back as its own survivor); use
+    * [[dedupClustersFromFp]] (which unions the copy→keeper edges back
+    * in), or append those edges yourself, when exact duplicates must
+    * land in the same cluster.
     */
-  def dedupClustersFromPairsStar(docs: DataFrame, pairs: DataFrame,
-      maxIters: Int = 50): DataFrame = {
-    // canonical undirected edges (u > v), self-loops dropped
-    var edges = pairs
+  def dedupClustersFromPairsStar(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    // canonical undirected edges (u > v), self-loops dropped; the state
+    // keeps last round's dropped edges (in_next NULL) for the witness
+    val edges0 = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    var it = 0
-    var done = false
-    while (!done) {
-      if (it >= maxIters)
-        throw new IllegalStateException(
-          s"dedupClustersStar: no fixpoint after $maxIters rounds — " +
-            "exceeds the O(log^2 n) bound; the edge relation is corrupt")
+      .filter(col("u") =!= col("v")).distinct()
+      .withColumn("in_next", lit(true)).localCheckpoint()
+    val stars = graft.Iterate.untilStable("dedupClustersFromPairsStar",
+        edges0, StarRounds) { st =>
+      val edges = st.filter(col("in_next")).select("u", "v")
       // large-star: incidence at BOTH endpoints; each node's larger
       // neighbors re-attach to min(closed neighborhood)
       val inc = edges.select(col("u"), col("v"))
@@ -1065,25 +1006,18 @@ object Dedup {
         .select(greatest(col("e.a"), col("e.b")).as("u"),
           least(col("e.a"), col("e.b")).as("v"))
         .filter(col("u") =!= col("v")).distinct()
-      // the convergence witness rides the round's ONE checkpoint (r17;
-      // the r5-era spelling re-joined the two checkpointed relations as
-      // a second full action every round — 2-3 AQE stage jobs per round
-      // of pure fixpoint probing): both sides are canonical DISTINCT
-      // edge sets, so set equality ⇔ empty symmetric difference; the
-      // full-outer join reuses next's distinct (u,v) partitioning, and
-      // the probe is a filter scan of the in-memory checkpoint.
-      val flagged = next.withColumn("in_next", lit(true))
+      // the convergence witness rides the round's ONE checkpoint: both
+      // sides are canonical DISTINCT edge sets, so set equality ⇔ empty
+      // symmetric difference; the full-outer join reuses next's distinct
+      // (u,v) partitioning
+      next.withColumn("in_next", lit(true))
         .join(edges.withColumn("in_prev", lit(true)), Seq("u", "v"), "full_outer")
-        .localCheckpoint()
-      done = flagged
-        .filter(col("in_next").isNull || col("in_prev").isNull)
-        .limit(1).count() == 0L
-      edges = flagged.filter(col("in_next")).select("u", "v")
-      it += 1
+        .select(col("u"), col("v"), col("in_next"),
+          (col("in_next").isNull || col("in_prev").isNull).as(graft.Iterate.Changed))
     }
     // fixpoint = stars: every non-root points at its component minimum
-    attachLabels(docs,
-      edges.select(col("u").as("doc_id"), col("v").as("rep_id")))
+    attachLabels(docs, stars.filter(col("in_next"))
+      .select(col("u").as("doc_id"), col("v").as("rep_id")))
   }
 
   /** The WITH-chain fragment (no `WITH RECURSIVE` prefix) building the
@@ -1185,11 +1119,10 @@ object Dedup {
     * the shared component chain over the same folded projection. The
     * plain chain stays the default for the same policy reason as
     * [[exactDupClustersNorm]]. */
-  def dedupClustersNorm(docs: DataFrame, minMatch: Long = 8L,
-      maxIters: Int = 25): DataFrame = {
+  def dedupClustersNorm(docs: DataFrame, minMatch: Long = 8L): DataFrame = {
     val folded = TextAnalysis.textNormalize(docs)
       .select(col("doc_id"), col("norm_text").as("text"))
-    dedupClusters(folded, minMatch, maxIters)
+    dedupClusters(folded, minMatch)
   }
 
   /** Folded (doc_id, text) projection — the `docSrc` of the norm chain. */

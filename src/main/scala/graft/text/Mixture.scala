@@ -17,7 +17,7 @@ import graft.functions.PortableHash
   *  - [[mixWaterfill]]: the exact allocation — undersized sources are
   *    capped at their inventory and their unused share re-flows to the
   *    others in proportion to weight (classic water-filling), as a
-  *    driver-scheduled fixed-round loop over the |sources|-row state
+  *    fixed-round [[graft.Iterate.rounds]] loop over the |sources|-row state
   *    relation (the kcore discipline: rounds are spec-pinned converged
   *    on the fixtures, and the oracle unrolls the same rounds);
   *  - [[mixSample]]: the achievement audit — documents kept by an
@@ -159,7 +159,8 @@ object Mixture {
        |ORDER BY source, n_docs, total_tokens, weight, target_tokens,
        |  rate_millionths, expected_tokens, shortfall_tokens""".stripMargin
 
-  /** Exact weighted water-filling: [[WaterfillRounds]] driver rounds;
+  /** Exact weighted water-filling: [[WaterfillRounds]] rounds of
+    * [[graft.Iterate.rounds]];
     * per round, the remaining budget splits over the UNSATURATED
     * sources in proportion to weight, and any source whose whole
     * inventory fits inside its share saturates at the inventory. The
@@ -178,22 +179,21 @@ object Mixture {
   def mixWaterfillFromInventory(inventory: DataFrame,
       budget: Long = MixBudget, rounds: Int = WaterfillRounds): DataFrame = {
     require(rounds >= 1, s"mixWaterfillFromInventory needs rounds >= 1 (got $rounds)")
-    var st = inventory
+    val st0 = inventory
       .select(col("source"), col("n_docs"), col("total_tokens"), col("weight"),
         lit(null).cast("long").as("alloc"))
       .withColumn("k", lit(1)).localCheckpoint()
     def scalars(s: DataFrame): DataFrame = s.groupBy("k").agg(
       (lit(budget) - coalesce(sum("alloc"), lit(0L))).as("rem"),
       coalesce(sum(when(col("alloc").isNull, col("weight"))), lit(0L)).as("wu"))
-    for (_ <- 1 to rounds) {
-      st = st.join(broadcast(scalars(st)), Seq("k"))
+    val st = graft.Iterate.rounds(st0, rounds) { st =>
+      st.join(broadcast(scalars(st)), Seq("k"))
         .select(col("source"), col("n_docs"), col("total_tokens"), col("weight"),
           when(col("alloc").isNotNull, col("alloc"))
             .when(col("total_tokens") <= expr("(rem * weight) div greatest(wu, 1L)"),
               col("total_tokens"))
             .otherwise(lit(null).cast("long")).as("alloc"),
           col("k"))
-        .localCheckpoint()
     }
     val fin = st.join(broadcast(scalars(st)), Seq("k")).localCheckpoint()
     // Convergence gate: after the loop, every still-unsaturated source

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, least, min}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.text.Dedup
 
@@ -168,6 +169,30 @@ class DedupSpec extends AnyFunSuite {
     assert(cl.count(_.getAs[Boolean]("is_survivor")) === 1)
   }
 
+  /** Min-label propagation, the reference the star contraction is
+    * checked against: every edge-incident node takes the min of its own
+    * label and its neighbors' until nothing changes — diameter-many
+    * rounds, so a deep component exhausts `maxRounds` and throws. */
+  private def minLabelClusters(ds: DataFrame, pairs: DataFrame,
+      maxRounds: Int = 25): DataFrame = {
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val labels0 = edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("rep_id", col("doc_id"))
+    val labels = Iterate.untilStable("minLabelClusters", labels0, maxRounds) { l =>
+      val nbrMin = edges.join(l, col("dst") === col("doc_id"))
+        .groupBy(col("src")).agg(min("rep_id").as("nbr_min"))
+      l.join(nbrMin, col("doc_id") === col("src"))
+        .select(col("doc_id"), least(col("rep_id"), col("nbr_min")).as("rep_id"),
+          (col("nbr_min") < col("rep_id")).as(Iterate.Changed))
+    }
+    ds.select(col("doc_id"))
+      .join(labels.withColumnRenamed("doc_id", "node_id"),
+        col("doc_id") === col("node_id"), "left")
+      .select(col("doc_id"), coalesce(col("rep_id"), col("doc_id")).as("rep_id"))
+      .withColumn("is_survivor", col("doc_id") === col("rep_id"))
+  }
+
   test("property: star contraction equals min-label propagation on random graphs") {
     val rnd = new scala.util.Random(5)
     for (_ <- 1 to 3) {
@@ -177,17 +202,17 @@ class DedupSpec extends AnyFunSuite {
         .filter { case (a, b) => a != b }
         .toDF("doc_a", "doc_b")
       val ds = ids.toDF("doc_id")
-      def res(df: org.apache.spark.sql.DataFrame) = df.collect()
+      def res(df: DataFrame) = df.collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rep_id"),
           r.getAs[Boolean]("is_survivor"))).toSet
       assert(res(Dedup.dedupClustersFromPairsStar(ds, pairs))
-        === res(Dedup.dedupClustersFromPairs(ds, pairs)))
+        === res(minLabelClusters(ds, pairs)))
     }
   }
 
   test("star contraction clusters a chain deeper than min-label's iteration budget") {
     // a 60-node path has diameter 59: min-label needs 59 rounds and must
-    // throw at its default budget; star contraction finishes in O(log² n)
+    // throw at a 25-round budget; star contraction finishes in O(log² n)
     val chain = (0L until 59L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val ds = (0L until 60L).toDF("doc_id")
     val got = Dedup.dedupClustersFromPairsStar(ds, chain).collect()
@@ -195,7 +220,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got.forall(_.getAs[Long]("rep_id") == 0L))
     assert(got.count(_.getAs[Boolean]("is_survivor")) === 1)
     assertThrows[IllegalStateException] {
-      Dedup.dedupClustersFromPairs(ds, chain).collect()
+      minLabelClusters(ds, chain).collect()
     }
   }
 

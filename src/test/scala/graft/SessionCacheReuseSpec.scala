@@ -97,6 +97,17 @@ class SessionCacheReuseSpec extends AnyFunSuite {
       "the second incremental_pq re-trained the shard codebooks")
   }
 
+  test("dedup_clusters and dedup_clusters_star share one cluster build") {
+    // one component algorithm: the star face is the plain face's key
+    val b0 = graft.text.Dedup.dedupClusterBuilds.get()
+    run("dedup_clusters")
+    val b1 = graft.text.Dedup.dedupClusterBuilds.get()
+    assert(b1 <= b0 + 1)
+    run("dedup_clusters_star")
+    assert(graft.text.Dedup.dedupClusterBuilds.get() === b1,
+      "dedup_clusters_star rebuilt the clustering dedup_clusters built")
+  }
+
   test("media sketches decode once; both survivor faces share one contraction") {
     run("audio_ahash") // seed the decoded sketch
     val s0 = graft.multimodal.AudioHash.sketchBuilds.get()
